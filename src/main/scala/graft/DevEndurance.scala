@@ -125,7 +125,7 @@ object DevEndurance {
 
     val trajectory = scala.collection.mutable.ArrayBuffer[String]()
     // seed push first: the latency baseline needs the pushed family to
-    // exist (an unknown metric is a 400, not an empty frame)
+    // exist (a never-pushed name answers an empty frame, timing nothing)
     push(0)
     val lat0 = latency()
     for (i <- 1 to pushes) {

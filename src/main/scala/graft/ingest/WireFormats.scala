@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -162,21 +162,38 @@ object WireFormats {
   private def bodyStr(b: org.apache.spark.sql.Column) =
     coalesce(graft.functions.OtlpSanitize.anyValueStr(b), lit(""))
 
+  private val otlpLogRecord = StructType(Seq(
+    StructField("timeUnixNano", StringType),
+    StructField("observedTimeUnixNano", StringType),
+    StructField("severityText", StringType),
+    StructField("traceId", StringType),
+    StructField("spanId", StringType),
+    StructField("body", otlpAnyValue),
+    StructField("attributes", ArrayType(otlpAttr))))
+
+  private val otlpScopeLogs = StructType(Seq(
+    StructField("scope", StructType(Seq(
+      StructField("attributes", ArrayType(otlpAttr))))),
+    StructField("logRecords", ArrayType(otlpLogRecord))))
+
+  private val otlpResourceLogs = StructType(Seq(
+    StructField("resource", StructType(Seq(
+      StructField("attributes", ArrayType(otlpAttr))))),
+    StructField("scopeLogs", ArrayType(otlpScopeLogs))))
+
   val otlpLogsSchema: StructType = StructType(Seq(
-    StructField("resourceLogs", ArrayType(StructType(Seq(
-      StructField("resource", StructType(Seq(
-        StructField("attributes", ArrayType(otlpAttr))))),
-      StructField("scopeLogs", ArrayType(StructType(Seq(
-        StructField("scope", StructType(Seq(
-          StructField("attributes", ArrayType(otlpAttr))))),
-        StructField("logRecords", ArrayType(StructType(Seq(
-          StructField("timeUnixNano", StringType),
-          StructField("observedTimeUnixNano", StringType),
-          StructField("severityText", StringType),
-          StructField("traceId", StringType),
-          StructField("spanId", StringType),
-          StructField("body", otlpAnyValue),
-          StructField("attributes", ArrayType(otlpAttr))))))))))))))))
+    StructField("resourceLogs", ArrayType(otlpResourceLogs))))
+
+  /** `arr`, or an empty array of `elem` when it is null. The OTLP decoders
+    * flatten nested arrays inside one projection, and `flatten` turns its
+    * whole result null on one null element, where a per-level `explode`
+    * only skipped that element.
+    */
+  private def orEmpty(arr: Column, elem: DataType): Column =
+    coalesce(arr, array().cast(ArrayType(elem)))
+
+  private def attrsOf(c: Column): Column =
+    orEmpty(c.getField("attributes"), otlpAttr)
 
   /** Duplicate attr keys dedupe last-wins (Go map assignment in the
     * reference's attr loops) — map_from_entries would throw
@@ -260,72 +277,73 @@ object WireFormats {
     * nondeterministic and intentionally omitted — such rows keep null).
     */
   def decodeOtlpLogs(bodies: DataFrame): DataFrame = {
-    val empty = array().cast(ArrayType(otlpAttr))
-    def idLabel(c: org.apache.spark.sql.Column, hexLen: Int) =
+    def idLabel(c: Column, hexLen: Int) =
       when(c.rlike(s"^[0-9a-fA-F]{$hexLen}$$") && c.rlike("[1-9a-fA-F]"),
         lower(c))
-    val t = col("r.timeUnixNano").cast("long")
+    // one projection flattens resource → scope → record into small
+    // per-record structs, exploded once (see [[decodeOtlpMetrics]]); each
+    // attr map is folded once at its own level — the resource map per
+    // resource, the scope map per scope — and only copied per record
+    val resources = transform(orEmpty(from_json(col("body"), otlpLogsSchema)
+        .getField("resourceLogs"), otlpResourceLogs), rl =>
+      struct(attrsToMapSanitized(attrsOf(rl.getField("resource"))).as("res"),
+        orEmpty(rl.getField("scopeLogs"), otlpScopeLogs).as("sls")))
+    val records = flatten(transform(resources, rl => flatten(transform(
+      transform(rl.getField("sls"), sl => struct(
+        attrsToMapSanitized(attrsOf(sl.getField("scope"))).as("scopeAttrs"),
+        orEmpty(sl.getField("logRecords"), otlpLogRecord).as("recs"))),
+      sl => transform(sl.getField("recs"), r => {
+        val t = r.getField("timeUnixNano").cast("long")
+        struct(rl.getField("res").as("res"),
+          sl.getField("scopeAttrs").as("scopeAttrs"),
+          attrsToMapSanitized(attrsOf(r)).as("recAttrs"),
+          map_filter(map(
+            lit("level"), when(r.getField("severityText") =!= "",
+              r.getField("severityText")),
+            lit("trace_id"), idLabel(r.getField("traceId"), 32),
+            lit("span_id"), idLabel(r.getField("spanId"), 16)),
+            (_, v) => v.isNotNull).as("overrides"),
+          when(t.isNotNull && t =!= 0, t)
+            .otherwise(r.getField("observedTimeUnixNano").cast("long"))
+            .as("timestamp_ns"),
+          bodyStr(r.getField("body")).as("line"))
+      })))))
     bodies
-      .select(explode(from_json(col("body"), otlpLogsSchema)
-        .getField("resourceLogs")).as("rl"))
-      // stage each attr map in a select WITHOUT the next explode: an
-      // expression sharing a select with a generator is evaluated per
-      // OUTPUT row — the interpreted scope fold would re-run per LOG
-      // RECORD instead of per scope (the datadog-metrics sf1 trend
-      // measured this shape at 125× for per-point re-evaluation); as
-      // attribute refs they are computed once and copied by Generate
-      .select(attrsToMapSanitized(coalesce(col("rl.resource.attributes"),
-        empty)).as("res"),
-        col("rl.scopeLogs").as("sls"))
-      .select(col("res"), explode(col("sls")).as("sl"))
-      .select(col("res"),
-        attrsToMapSanitized(coalesce(col("sl.scope.attributes"), empty))
-          .as("scopeAttrs"),
-        col("sl.logRecords").as("recs"))
-      .select(col("res"), col("scopeAttrs"), explode(col("recs")).as("r"))
-      // project each parsed attr map into its own column BEFORE the merge:
-      // MapOps.update's map_filter lambda is interpreted, and a lambda that
-      // captures the whole attrsToMap subtree re-evaluates it once per base
-      // key per row — capturing a cheap attribute ref instead keeps the
-      // parse single-pass (the r7 `weak` on decodeOtlpMetrics)
-      .select(col("res"), col("scopeAttrs"),
-        attrsToMapSanitized(coalesce(col("r.attributes"), empty))
-          .as("recAttrs"),
-        map_filter(map(
-          lit("level"), when(col("r.severityText") =!= "", col("r.severityText")),
-          lit("trace_id"), idLabel(col("r.traceId"), 32),
-          lit("span_id"), idLabel(col("r.spanId"), 16)), (_, v) => v.isNotNull)
-          .as("overrides"),
-        when(t.isNotNull && t =!= 0, t)
-          .otherwise(col("r.observedTimeUnixNano").cast("long"))
-          .as("timestamp_ns"),
-        bodyStr(col("r.body")).as("line"))
+      .select(explode(records).as("r"))
+      // the merge reads each staged map as a field of the exploded struct,
+      // never as an inline attr-map subtree (see DecodePlanSpec)
       .select(
         MapOps.update(MapOps.update(MapOps.update(
-          col("res"), col("scopeAttrs")), col("recAttrs")), col("overrides"))
-          .as("labels"),
-        col("timestamp_ns"), col("line"))
+          col("r.res"), col("r.scopeAttrs")), col("r.recAttrs")),
+          col("r.overrides")).as("labels"),
+        col("r.timestamp_ns").as("timestamp_ns"), col("r.line").as("line"))
       .withColumn("fingerprint", Tables.fingerprintOf(col("labels")))
   }
 
   // --- OTLP/HTTP JSON traces (`otlp.go:18-166`) ---------------------------
 
+  private val otlpSpan = StructType(Seq(
+    StructField("traceId", StringType),
+    StructField("spanId", StringType),
+    StructField("parentSpanId", StringType),
+    StructField("name", StringType),
+    StructField("kind", StringType),
+    StructField("startTimeUnixNano", StringType),
+    StructField("endTimeUnixNano", StringType),
+    StructField("attributes", ArrayType(otlpAttr)),
+    StructField("status", StructType(Seq(
+      StructField("code", StringType))))))
+
+  private val otlpScopeSpans = StructType(Seq(
+    StructField("spans", ArrayType(otlpSpan))))
+
+  private val otlpResourceSpans = StructType(Seq(
+    StructField("resource", StructType(Seq(
+      StructField("attributes", ArrayType(otlpAttr))))),
+    StructField("scopeSpans", ArrayType(otlpScopeSpans))))
+
   val otlpTracesSchema: StructType = StructType(Seq(
-    StructField("resourceSpans", ArrayType(StructType(Seq(
-      StructField("resource", StructType(Seq(
-        StructField("attributes", ArrayType(otlpAttr))))),
-      StructField("scopeSpans", ArrayType(StructType(Seq(
-        StructField("spans", ArrayType(StructType(Seq(
-          StructField("traceId", StringType),
-          StructField("spanId", StringType),
-          StructField("parentSpanId", StringType),
-          StructField("name", StringType),
-          StructField("kind", StringType),
-          StructField("startTimeUnixNano", StringType),
-          StructField("endTimeUnixNano", StringType),
-          StructField("attributes", ArrayType(otlpAttr)),
-          StructField("status", StructType(Seq(
-            StructField("code", StringType))))))))))))))))))
+    StructField("resourceSpans", ArrayType(otlpResourceSpans))))
 
   /** First non-empty of the preference chain in `m`, else `dflt`
     * (`otlpGetServiceNames`, writer `otlp.go:27-58`).
@@ -348,7 +366,6 @@ object WireFormats {
     * Enum fields accept both OTLP/JSON spellings (int and name).
     */
   def decodeOtlpTraces(bodies: DataFrame): DataFrame = {
-    val empty = array().cast(ArrayType(otlpAttr))
     val statusStr =
       when(col("s.status.code").isin("2", "STATUS_CODE_ERROR"), "error")
         .when(col("s.status.code").isin("1", "STATUS_CODE_OK"), "ok")
@@ -361,27 +378,35 @@ object WireFormats {
         .otherwise("internal")
     val localChain = Seq("peer.service", "service.name", "faas.name",
       "k8s.deployment.name", "process.executable.name")
+    // one projection flattens resource → scope → span into small per-span
+    // structs, exploded once (see [[decodeOtlpMetrics]]); the resource
+    // attr map is folded once per resource and only copied per span
+    val resources = transform(orEmpty(from_json(col("body"), otlpTracesSchema)
+        .getField("resourceSpans"), otlpResourceSpans), rs =>
+      struct(traceAttrsToMap(attrsOf(rs.getField("resource"))).as("res"),
+        orEmpty(rs.getField("scopeSpans"), otlpScopeSpans).as("sss")))
+    val spans = flatten(transform(resources, rs => flatten(transform(
+      rs.getField("sss"), ss =>
+        transform(orEmpty(ss.getField("spans"), otlpSpan), s => struct(
+          rs.getField("res").as("res"),
+          traceAttrsToMap(attrsOf(s)).as("spanAttrs"),
+          s.getField("traceId").as("traceId"),
+          s.getField("spanId").as("spanId"),
+          s.getField("parentSpanId").as("parentSpanId"),
+          s.getField("name").as("name"),
+          s.getField("kind").as("kind"),
+          s.getField("startTimeUnixNano").as("startTimeUnixNano"),
+          s.getField("endTimeUnixNano").as("endTimeUnixNano"),
+          s.getField("status").as("status")))))))
     bodies
-      .select(explode(from_json(col("body"), otlpTracesSchema)
-        .getField("resourceSpans")).as("rs"))
-      // same staging discipline as decodeOtlpLogs: resource attrs fold
-      // runs once per resource, not per scope-span element
-      .select(traceAttrsToMap(coalesce(col("rs.resource.attributes"), empty))
-        .as("res"),
-        col("rs.scopeSpans").as("sss"))
-      .select(col("res"), explode(col("sss")).as("ss"))
-      .select(col("res"), explode(col("ss.spans")).as("s"))
-      // staged columns: each merge input is an attribute ref by the time a
-      // MapOps.update lambda captures it (see decodeOtlpLogs)
-      .withColumn("spanAttrs",
-        traceAttrsToMap(coalesce(col("s.attributes"), empty)))
+      .select(explode(spans).as("s"))
       // the reference appends resource attrs AFTER span attrs (otlp.go:81)
       // and reads them two ways: getOtlpAttr takes the FIRST occurrence
       // (span-first — the service-name chain, otlp.go:18-24), while the
       // attrsMap fold is Go map assignment over the appended list
       // (LAST occurrence wins — resource wins, otlp.go:154-160)
-      .withColumn("spanFirst", MapOps.update(col("res"), col("spanAttrs")))
-      .withColumn("merged", MapOps.update(col("spanAttrs"), col("res")))
+      .withColumn("spanFirst", MapOps.update(col("s.res"), col("s.spanAttrs")))
+      .withColumn("merged", MapOps.update(col("s.spanAttrs"), col("s.res")))
       .withColumn("withServ", MapOps.update(
         map(lit("service.name"),
             firstNonEmpty(col("spanFirst"), localChain, "OTLPResourceNoServiceName"),
@@ -417,44 +442,59 @@ object WireFormats {
     StructField("sum", StructType(Seq(
       StructField("dataPoints", ArrayType(otlpDataPoint)))))))
 
+  private val otlpScopeMetrics = StructType(Seq(
+    StructField("metrics", ArrayType(otlpMetric))))
+
+  private val otlpResourceMetrics = StructType(Seq(
+    StructField("resource", StructType(Seq(
+      StructField("attributes", ArrayType(otlpAttr))))),
+    StructField("scopeMetrics", ArrayType(otlpScopeMetrics))))
+
   val otlpMetricsSchema: StructType = StructType(Seq(
-    StructField("resourceMetrics", ArrayType(StructType(Seq(
-      StructField("resource", StructType(Seq(
-        StructField("attributes", ArrayType(otlpAttr))))),
-      StructField("scopeMetrics", ArrayType(StructType(Seq(
-        StructField("metrics", ArrayType(otlpMetric))))))))))))
+    StructField("resourceMetrics", ArrayType(otlpResourceMetrics))))
 
   /** OTLP metrics → canonical samples: gauge and sum data points flatten
     * identically; labels = resource attrs + data-point attrs + __name__.
+    *
+    * The bounded-recursion AnyValue makes the parsed body a struct of
+    * thousands of nested fields, far past `spark.sql.codegen.maxFields`.
+    * A plan node that OUTPUTS such a struct — an `explode` per nesting
+    * level emitting `rm`/`sm`/`m` — falls out of whole-stage codegen, and
+    * its fallback projection is then generated and compiled for that
+    * struct in every task, a fixed cost of hundreds of ms per push
+    * whatever its size. So the body is parsed and flattened inside ONE
+    * projection: nested `transform`/`flatten` build an array of small
+    * per-point structs, and only that array is exploded. The resource
+    * attr map is folded once per resource (the outer transform pairs it
+    * with the resource's scopes) and only copied per point.
     */
-  def decodeOtlpMetrics(bodies: DataFrame): DataFrame =
+  def decodeOtlpMetrics(bodies: DataFrame): DataFrame = {
+    val resources = transform(orEmpty(from_json(col("body"),
+        otlpMetricsSchema).getField("resourceMetrics"), otlpResourceMetrics),
+      rm => struct(attrsToMap(attrsOf(rm.getField("resource"))).as("res"),
+        orEmpty(rm.getField("scopeMetrics"), otlpScopeMetrics).as("sms")))
+    def points(m: Column, kind: String) =
+      orEmpty(m.getField(kind).getField("dataPoints"), otlpDataPoint)
+    val samples = flatten(transform(resources, rm => flatten(transform(
+      rm.getField("sms"), sm => flatten(transform(
+        orEmpty(sm.getField("metrics"), otlpMetric), m => transform(
+          concat(points(m, "gauge"), points(m, "sum")), dp => struct(
+            rm.getField("res").as("res"),
+            m.getField("name").as("name"),
+            attrsToMap(attrsOf(dp)).as("dpAttrs"),
+            dp.getField("timeUnixNano").cast("long").as("timestamp_ns"),
+            coalesce(dp.getField("asDouble"),
+              dp.getField("asInt").cast("double")).as("value")))))))))
     bodies
-      .select(explode(from_json(col("body"), otlpMetricsSchema)
-        .getField("resourceMetrics")).as("rm"))
-      // same staging discipline as decodeOtlpLogs: resource attrs fold
-      // runs once per resource, not per scope-metrics element
-      .select(attrsToMap(coalesce(col("rm.resource.attributes"),
-        array().cast(ArrayType(otlpAttr)))).as("res"),
-        col("rm.scopeMetrics").as("sms"))
-      .select(col("res"), explode(col("sms")).as("sm"))
-      .select(col("res"), explode(col("sm.metrics")).as("m"))
-      .select(col("res"), col("m.name").as("name"),
-        explode(concat(
-          coalesce(col("m.gauge.dataPoints"), array().cast(ArrayType(otlpDataPoint))),
-          coalesce(col("m.sum.dataPoints"), array().cast(ArrayType(otlpDataPoint)))))
-          .as("dp"))
-      // same projection-before-merge as decodeOtlpLogs: the data-point attr
-      // map must reach MapOps.update as an attribute ref, not a subtree
-      .select(col("res"), col("name"),
-        attrsToMap(coalesce(col("dp.attributes"),
-          array().cast(ArrayType(otlpAttr)))).as("dpAttrs"),
-        col("dp.timeUnixNano").cast("long").as("timestamp_ns"),
-        coalesce(col("dp.asDouble"), col("dp.asInt").cast("double")).as("value"))
+      .select(explode(samples).as("p"))
+      // the merge reads each staged map as a field of the exploded struct,
+      // never as an inline attr-map subtree (see DecodePlanSpec)
       .select(
-        MapOps.update(MapOps.update(col("res"), col("dpAttrs")),
-          map(lit("__name__"), col("name"))).as("labels"),
-        col("timestamp_ns"), col("value"))
+        MapOps.update(MapOps.update(col("p.res"), col("p.dpAttrs")),
+          map(lit("__name__"), col("p.name"))).as("labels"),
+        col("p.timestamp_ns").as("timestamp_ns"), col("p.value").as("value"))
       .withColumn("fingerprint", Tables.fingerprintOf(col("labels")))
+  }
 
   // --- Datadog logs JSON (`datadog_json.go`) ------------------------------
 

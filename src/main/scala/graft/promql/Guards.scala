@@ -89,17 +89,19 @@ object Guards {
     */
   def seriesCount(spark: SparkSession, dir: String, sel: Selector,
       loNs: Long, hiNs: Long): Long = {
-    if (graft.model.Tables.promMetric(sel.name).isEmpty)
-      throw new IllegalArgumentException(s"unknown metric: ${sel.name}")
+    // the dictionary holds pushed families too; a name it lacks (and, in
+    // derived mode, any name outside the built families) counts 0 series,
+    // as the compiler answers it with an empty result
     val base =
       if (graft.store.Store.enabled(spark))
-        graft.store.Store.promSeries(spark, dir, sel.name)
+        Some(graft.store.Store.promSeries(spark, dir, sel.name))
       else
-        graft.model.Tables.promMetric(sel.name).get(spark, dir)
-          .filter(col("timestamp_ns") >= loNs && col("timestamp_ns") < hiNs)
-    sel.matchers.foldLeft(base)((df, m) => df.filter(matcherCond(m)))
-      .agg(approx_count_distinct(col("fingerprint")).as("n"))
-      .head().getLong(0)
+        graft.model.Tables.promMetric(sel.name).map(_(spark, dir)
+          .filter(col("timestamp_ns") >= loNs && col("timestamp_ns") < hiNs))
+    base.fold(0L)(b =>
+      sel.matchers.foldLeft(b)((df, m) => df.filter(matcherCond(m)))
+        .agg(approx_count_distinct(col("fingerprint")).as("n"))
+        .head().getLong(0))
   }
 
   /** Peak-sample estimate for a query: Σ over selectors of

@@ -1,9 +1,9 @@
 package graft.promql
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{MapType, StringType}
+import org.apache.spark.sql.types.{DoubleType, LongType, MapType, StringType, StructField, StructType}
 
 import graft.model.Tables
 import PromQLAst._
@@ -177,6 +177,15 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
     * family's derivation is in the plan.
     */
   private def scan(sel: Selector, loNs: Long, hiNs: Long): DataFrame = {
+    // a name that was never built nor pushed selects no series: Prometheus
+    // answers such a query with an empty result, not an error, so a panel
+    // over a family that has not arrived yet shows no data
+    def noSamples = spark.createDataFrame(
+      java.util.Collections.emptyList[Row](),
+      StructType(Seq(StructField("timestamp_ns", LongType),
+        StructField("labels", MapType(StringType, StringType)),
+        StructField("value", DoubleType),
+        StructField("fingerprint", LongType))))
     val base =
       if (graft.store.Store.enabled(spark))
         // materialized family (date-partitioned, fingerprint-sorted): the
@@ -184,11 +193,10 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
         // counter families are ingest-time materialized views (log.sql:96)
         graft.store.Store.promMetric(spark, dir, sel.name, loNs, hiNs)
           .map(_.drop("date"))
-          .getOrElse(throw new IllegalArgumentException(s"unknown metric: ${sel.name}"))
+          .getOrElse(noSamples)
       else
-        Tables.promMetric(sel.name).getOrElse(
-          throw new IllegalArgumentException(s"unknown metric: ${sel.name}"))(spark, dir)
-          .filter(col("timestamp_ns") >= loNs && col("timestamp_ns") < hiNs)
+        Tables.promMetric(sel.name).fold(noSamples)(_(spark, dir)
+          .filter(col("timestamp_ns") >= loNs && col("timestamp_ns") < hiNs))
     var df = base
     for (m <- sel.matchers) df = df.filter(matcherCond(m))
     df
@@ -788,7 +796,9 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
       val w = Window.partitionBy(col("fingerprint")).orderBy(col("__ord"))
         .rangeBetween(-rangeNs, -bucketNs)
       val v: Column = fn match {
-        case "count_over_time"   => sum(col("cnt")).cast("double").over(w)
+        // the cast goes OUTSIDE .over: a window wraps the aggregate itself,
+        // and an aggregate under a cast reads as a plain (group-by) one
+        case "count_over_time"   => sum(col("cnt")).over(w).cast("double")
         case "min_over_time"     => min(col("min")).over(w)
         case "max_over_time"     => max(col("max")).over(w)
         // per-series buckets are time-ordered, so frame-last = latest bucket
@@ -891,7 +901,7 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
     // null-ignoring equivalents for those three, reuse the caller's
     // aggregate (all null-ignoring) otherwise
     val v: Column = fn match {
-      case "count_over_time"   => count(col("value")).cast("double").over(w)
+      case "count_over_time"   => count(col("value")).over(w).cast("double")
       case "last_over_time"    => last(col("value"), ignoreNulls = true).over(w)
       case "present_over_time" => lit(1.0)
       case _                   => agg.over(w)

@@ -1,9 +1,10 @@
 package graft.store
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{Materialize, Tables}
@@ -26,6 +27,14 @@ import graft.model.{Materialize, Tables}
   *                  materialized once instead of re-running the cumsum
   *                  window per query (ingest-time MV in the reference,
   *                  log.sql:96-107)
+  *
+  * Appends (one HTTP push, or one ruler tick's writeback) share one
+  * contract ([[appendBatch]]): the batch is decoded once, by collecting
+  * it; each table delta is written from that local copy in one Spark job
+  * with no exchange; a table gains one file per touched (oid, date) leaf;
+  * and a dictionary table gains a file only when the batch carries series
+  * it does not hold yet, so a push of known series writes no dictionary
+  * file at all.
   *
   * Built once per (JVM, testdata dir) under target/graft-store and reused
   * across sessions via the parquet _SUCCESS markers. At 100 TB this build
@@ -468,7 +477,6 @@ object Store {
         else anc = up
       }
     }
-    import scala.jdk.CollectionConverters._
     out.entrySet().iterator().asScala
       .map(e => (e.getKey._1, e.getKey._2, e.getKey._3, e.getValue))
       .toSeq
@@ -506,37 +514,20 @@ object Store {
     *
     *   - `samples` gains the rows (same oid/date partition layout as the
     *     build; small-file accumulation is what [[compact]] exists for);
-    *   - `time_series` gains only NEW fingerprints (anti-join against the
-    *     dictionary — dup dictionary rows would fan out every broadcast
-    *     join downstream);
+    *   - `time_series` gains only NEW fingerprints (dup dictionary rows
+    *     would fan out every broadcast join downstream);
     *   - `metrics_15s` gains the batch's own 15s PARTIALS: the downsample
     *     readers merge per-bucket partials additively (sum(cnt)/
     *     sum(bytes) over the window), so independent batch partials
     *     compose without read-modify-write.
     *
-    * Cached readers + the catalog file index for the touched tables are
-    * invalidated, so the next compiled query sees the pushed rows. At
-    * 100 TB this is the `foreachBatch` body of the ingest stream; each
-    * append is one bounded batch write, never a table rewrite. Returns
-    * the number of sample rows appended.
+    * Same protocol as every append ([[appendBatch]]). At 100 TB this is
+    * the `foreachBatch` body of the ingest stream; each append is one
+    * bounded batch write, never a table rewrite. Returns the number of
+    * sample rows appended.
     */
-  def appendLogs(spark: SparkSession, dir: String, rows: DataFrame): Long = {
-    val root = ensure(spark, dir)
-    val batch = graft.model.Materialize(rows) // 3 consumers below
-    // a null timestamp_ns (e.g. a non-integer values-path timestamp in a
-    // Loki push) would land in a date=null partition every window scan
-    // drops — silent data loss behind a 204. Loki 400s the push instead;
-    // reject the whole batch the same way (the IllegalArgumentException
-    // maps to the bad_data envelope at the route layer).
-    val counted = batch.agg(count(lit(1)).as("total"),
-      count(col("timestamp_ns")).as("timestamped")).head()
-    val total = counted.getLong(0)
-    val n = counted.getLong(1)
-    if (n < total)
-      throw new IllegalArgumentException(
-        s"${total - n} of $total entries have missing/invalid timestamps")
-    if (n > 0) appendLock.synchronized {
-      writerLock(root).ensureHeld()
+  def appendLogs(spark: SparkSession, dir: String, rows: DataFrame): Long =
+    appendBatch(spark, dir, rows) { (root, batch) =>
       appendWrite(withPushOid(spark, withDate(batch.select(
           col("timestamp_ns"), col("fingerprint"), col("line"),
           col("value")))),
@@ -544,16 +535,11 @@ object Store {
       // dictionary dedup is per (oid, fingerprint): two tenants pushing
       // the same label set each need their own dictionary row, or the
       // second tenant's series would be invisible to its own label APIs
-      val existing = dictExisting(spark, s"$root/time_series",
-        batch.select(col("fingerprint")), Seq("oid", "fingerprint"))
-      withPushOid(spark, batch.select(col("fingerprint"), col("labels"))
-          .dropDuplicates("fingerprint"))
-        .join(existing, Seq("oid", "fingerprint"), "left_anti")
-        // one file per push: the new-series delta of one batch is tiny
-        .coalesce(1)
-        .write.mode("append").parquet(s"$root/time_series")
+      val dictWritten = appendDictDelta(spark, s"$root/time_series",
+        withPushOid(spark, batch.select(col("fingerprint"), col("labels"))),
+        Seq("oid", "fingerprint"))
       val bucketNs = 15L * 1000 * 1000 * 1000
-      val partials = batch
+      val partials = batch.coalesce(1)
         .groupBy(col("fingerprint"),
           (col("timestamp_ns") - pmod(col("timestamp_ns"), lit(bucketNs)))
             .as("timestamp_ns"))
@@ -567,33 +553,83 @@ object Store {
           sum(length(col("line"))).as("bytes"))
       appendWrite(withPushOid(spark, withDate(partials)),
         Seq("fingerprint", "timestamp_ns"), s"$root/metrics_15s")
-      invalidate(spark, root, Seq("samples", "time_series", "metrics_15s"))
+      Seq("samples", "metrics_15s") ++
+        (if (dictWritten) Seq("time_series") else Nil)
     }
-    n
-  }
 
   private val appendLock = new Object
 
-  /** Existing-key side of an append's dictionary anti-join, SCOPED to the
-    * batch's own fingerprints: a push batch is one bounded HTTP request,
-    * so its distinct fingerprints collect to an In() filter the parquet
-    * scan prunes with row-group stats — where the old shape scanned and
-    * `distinct()`-shuffled the WHOLE dictionary per push (a per-push full
-    * table pass at 1e8 series). Above the cap (a pathological mega-batch)
-    * fall back to the unscoped scan, which stays shuffle-bounded; the
-    * anti-join never needed the right-side distinct either way (left_anti
-    * tests existence, duplicates on the probe side are free).
+  /** The append protocol every push path shares:
+    *
+    *   1. the decoded batch is collected to the driver ONCE — a push is
+    *      one HTTP request body and ruler writeback is one tick's output,
+    *      so the rows are driver-sized already — which runs the decode as
+    *      one Spark job;
+    *   2. a null `timestamp_ns` (e.g. a non-integer values-path timestamp
+    *      in a Loki push) would land in a date=null partition every
+    *      window scan drops — silent data loss behind a 2xx. Loki 400s
+    *      the push instead; the whole batch is rejected the same way,
+    *      before anything is written (the IllegalArgumentException maps
+    *      to the bad_data envelope at the route layer);
+    *   3. the rows are rebuilt as a local frame, so each table write
+    *      below re-reads them without re-decoding, in one task and
+    *      without an exchange ([[appendWrite]]).
+    *
+    * `write` returns the tables it changed, and only their cached readers
+    * are invalidated: a dictionary a push left unchanged keeps its file
+    * listing for the next probe. Returns the number of rows appended.
     */
-  private def dictExisting(spark: SparkSession, path: String,
-      batchFps: DataFrame, keep: Seq[String]): DataFrame = {
-    val base = readTable(spark, path).select(keep.map(col): _*)
+  private def appendBatch(spark: SparkSession, dir: String, rows: DataFrame)(
+      write: (String, DataFrame) => Seq[String]): Long = {
+    val root = ensure(spark, dir)
+    val collected = rows.collect()
+    val tsIdx = rows.schema.fieldIndex("timestamp_ns")
+    val missing = collected.count(_.isNullAt(tsIdx))
+    if (missing > 0)
+      throw new IllegalArgumentException(s"$missing of ${collected.length} " +
+        "entries have missing/invalid timestamps")
+    if (collected.nonEmpty) appendLock.synchronized {
+      writerLock(root).ensureHeld()
+      val batch = spark.createDataFrame(
+        java.util.Arrays.asList(collected: _*), rows.schema)
+      invalidate(spark, root, write(root, batch))
+    }
+    collected.length.toLong
+  }
+
+  /** Dictionary delta of one batch: the rows of `cands` (a projection of
+    * the local batch frame, so collecting it runs no job) whose `keys` the
+    * dictionary does not hold yet, first occurrence per key. The stored
+    * side is probed for the batch's OWN fingerprints only — an In()
+    * filter the parquet scan prunes with row-group stats, never a pass
+    * over the whole dictionary. Above the cap (a pathological mega-batch)
+    * the probe is a semi-join against the batch's keys, still bounded by
+    * the batch. The delta is written as one file, and only when it is
+    * non-empty: a push of known series (the steady state) writes nothing
+    * here. Returns whether anything was written.
+    */
+  private def appendDictDelta(spark: SparkSession, path: String,
+      cands: DataFrame, keys: Seq[String]): Boolean = {
+    val idx = keys.map(cands.schema.fieldIndex)
+    val fresh = new java.util.LinkedHashMap[Seq[Any], Row]()
+    cands.collect().foreach(r => fresh.putIfAbsent(idx.map(r.get), r): Unit)
     // null fingerprints can't match any dictionary row (null = never
-    // joins), so dropping them keeps the In-filter a superset of the
-    // probe keys — and keeps getLong from NPEing the whole push
-    val fps = batchFps.filter(col("fingerprint").isNotNull)
-      .distinct().limit(100001).collect().map(_.getLong(0))
-    if (fps.length <= 100000) base.filter(col("fingerprint").isin(fps: _*))
-    else base
+    // joins), so they stay in the delta, as the anti-join kept them
+    val fpIdx = cands.schema.fieldIndex("fingerprint")
+    val fps = fresh.values.iterator.asScala
+      .collect { case r if !r.isNullAt(fpIdx) => r.getLong(fpIdx) }
+      .toSeq.distinct
+    if (fps.nonEmpty) {
+      val stored = readTable(spark, path).select(keys.map(col): _*)
+      val probe =
+        if (fps.length <= 100000) stored.filter(col("fingerprint").isin(fps: _*))
+        else stored.join(cands.select(keys.map(col): _*), keys, "left_semi")
+      probe.collect().foreach(r => fresh.remove(keys.indices.map(r.get)): Unit)
+    }
+    if (!fresh.isEmpty)
+      spark.createDataFrame(new java.util.ArrayList(fresh.values), cands.schema)
+        .coalesce(1).write.mode("append").parquet(path)
+    !fresh.isEmpty
   }
 
   /** Per-root single-writer guard (see [[WriterLock]]): every mutating
@@ -606,19 +642,19 @@ object Store {
   private def writerLock(root: String): WriterLock =
     writerLocks.getOrElseUpdate(root, new WriterLock(root))
 
-  /** One-file-per-leaf append write. A push batch is bounded (one HTTP
-    * request), so letting it fan across shuffle partitions writes up to
-    * `shuffle.partitions` part-files per touched (oid, date) leaf per
-    * push — a tiny-files factory that [[maintain]] then has to clean up.
-    * Repartitioning the batch by its partition columns gives exactly one
-    * writer task per touched leaf, hence ONE part-file per leaf per push;
-    * the sort keeps row-group locality for the scan pruning. The same
-    * shape is right at cluster scale: per-batch write parallelism is
-    * bounded by the partitions the batch actually touches.
+  /** One-file-per-leaf append write. A push batch is a local frame
+    * ([[appendBatch]]); `coalesce(1)` writes it in ONE task, and the sort
+    * by the partition columns first makes the dynamic-partition writer
+    * close each (oid, date) leaf's file before opening the next — one
+    * part-file per touched leaf per push, from one job with no exchange.
+    * (The 15s partials coalesce their input before aggregating: a
+    * single-partition child satisfies the aggregate's distribution, so it
+    * needs no exchange either.) The sort keys keep row-group locality for
+    * the scan pruning.
     */
   private def appendWrite(df: DataFrame, sortCols: Seq[String],
       path: String): Unit =
-    df.repartition(col("oid"), col("date"))
+    df.coalesce(1)
       .sortWithinPartitions(
         (Seq("oid", "date") ++ sortCols).map(col): _*)
       .write.mode("append").partitionBy("oid", "date").parquet(path)
@@ -683,21 +719,6 @@ object Store {
        else lit(null)).cast(f.dataType).as(f.name)): _*)
   }
 
-  /** Reject batches carrying null timestamps (same contract as
-    * [[appendLogs]]: a date=null partition is silent data loss behind a
-    * 2xx) and return the batch size.
-    */
-  private def countStrict(batch: DataFrame): Long = {
-    val counted = batch.agg(count(lit(1)).as("total"),
-      count(col("timestamp_ns")).as("timestamped")).head()
-    val total = counted.getLong(0)
-    if (counted.getLong(1) < total)
-      throw new IllegalArgumentException(
-        s"${total - counted.getLong(1)} of $total entries have " +
-          "missing/invalid timestamps")
-    total
-  }
-
   /** Live trace ingest (`writer/service/insert/` tempo path): a decoded
     * span batch — (trace_id, span_id, parent_id, name, service_name,
     * timestamp_ns, duration_ns, attrs map) with LONG ids — fans out to
@@ -711,15 +732,11 @@ object Store {
     *     insert makes the same assumption), so parent links resolve
     *     within the batch.
     *
-    * Same bounded-batch shape as [[appendLogs]] — one append per table,
-    * never a rewrite. Returns the number of span rows appended.
+    * Same protocol as [[appendLogs]] ([[appendBatch]]) — one append per
+    * table, never a rewrite. Returns the number of span rows appended.
     */
-  def appendSpans(spark: SparkSession, dir: String, spans: DataFrame): Long = {
-    val root = ensure(spark, dir)
-    val batch = graft.model.Materialize(spans) // spans+attrs+closure consumers
-    val n = countStrict(batch)
-    if (n > 0) appendLock.synchronized {
-      writerLock(root).ensureHeld()
+  def appendSpans(spark: SparkSession, dir: String, spans: DataFrame): Long =
+    appendBatch(spark, dir, spans) { (root, batch) =>
       appendWrite(withPushOid(spark, withDate(conformTo(spark,
           s"$root/spans", batch, Set("oid", "date")))),
         Seq("trace_id", "span_id"), s"$root/spans")
@@ -737,17 +754,18 @@ object Store {
       // repair: parents-first (the new children walk up through stored
       // parents) and children-first (stored orphans gain ancestors when
       // their parents arrive).
-      // one push batch touches a BOUNDED set of trace ids (one HTTP
-      // request), so collect them and push an In() filter INTO the
+      // the batch's trace ids come from the collected rows (a projection
+      // of the local frame runs no job) and push an In() filter INTO the
       // parquet scans — the (trace_id, span_id) sort order turns it into
       // row-group skipping, where a semi-join would scan the whole table.
       // Above the cap (a pathological mega-batch) fall back to the
       // semi-join, which stays shuffle-bounded.
-      val ids = batch.select(col("trace_id")).distinct()
-      val idList = ids.limit(100001).collect().map(_.getLong(0))
+      val ids = batch.select(col("trace_id"))
+      val idList = ids.collect().collect {
+        case r if !r.isNullAt(0) => r.getLong(0) }.distinct
       def scopeToBatch(df: DataFrame): DataFrame =
         if (idList.length <= 100000) df.filter(col("trace_id").isin(idList: _*))
-        else df.join(ids, Seq("trace_id"), "left_semi")
+        else df.join(ids.distinct(), Seq("trace_id"), "left_semi")
       // a scoped session repairs only against ITS tenant's rows — trace
       // ids are per-tenant namespaces, and another org's colliding ids
       // must neither join in nor suppress this org's closure rows
@@ -793,10 +811,8 @@ object Store {
       appendWrite(withPushOid(spark, withDate(conformTo(spark,
           s"$root/span_ancestors", fresh, Set("oid", "date")))),
         Seq("trace_id", "span_id"), s"$root/span_ancestors")
-      invalidate(spark, root, Seq("spans", "span_attrs", "span_ancestors"))
+      Seq("spans", "span_attrs", "span_ancestors")
     }
-    n
-  }
 
   /** Live metric ingest (remote-write / OTLP metrics / Datadog series /
     * Influx fields): decoded samples — (timestamp_ns, labels, value,
@@ -807,27 +823,17 @@ object Store {
     * PromQL compiler (via [[promMetric]]'s pushed-family fallback) see
     * them without any table rewrite. Returns sample rows appended.
     */
-  def appendMetrics(spark: SparkSession, dir: String, rows: DataFrame): Long = {
-    val root = ensure(spark, dir)
-    val batch = graft.model.Materialize(rows.select(col("timestamp_ns"),
-      col("labels"), col("value"), col("fingerprint")))
-    val n = countStrict(batch)
-    if (n > 0) appendLock.synchronized {
-      writerLock(root).ensureHeld()
+  def appendMetrics(spark: SparkSession, dir: String, rows: DataFrame): Long =
+    appendBatch(spark, dir, rows.select(col("timestamp_ns"),
+        col("labels"), col("value"), col("fingerprint"))) { (root, batch) =>
       appendWrite(withPushOid(spark, withDate(batch)),
         Seq("fingerprint", "timestamp_ns"), s"$root/prom_pushed")
-      val dict = batch
-        .select(element_at(col("labels"), "__name__").as("family"),
-          col("fingerprint"), col("labels"))
-        .filter(col("family").isNotNull)
-        .dropDuplicates("family", "fingerprint")
-      val existing = dictExisting(spark, s"$root/prom_series",
-        batch.select(col("fingerprint")), Seq("oid", "family", "fingerprint"))
-      withPushOid(spark, dict)
-        .join(existing, Seq("oid", "family", "fingerprint"), "left_anti")
-        // one file per push: the new-series delta of one batch is tiny
-        .coalesce(1)
-        .write.mode("append").parquet(s"$root/prom_series")
+      val dictWritten = appendDictDelta(spark, s"$root/prom_series",
+        withPushOid(spark, batch
+          .select(element_at(col("labels"), "__name__").as("family"),
+            col("fingerprint"), col("labels"))
+          .filter(col("family").isNotNull)),
+        Seq("oid", "family", "fingerprint"))
       // the batch's own 15s downsample PARTIALS (the `metrics_15s` MV
       // analog for pushed families, log.sql:96-107): independent batches
       // append disjoint partial rows for the same bucket, the readers
@@ -835,7 +841,7 @@ object Store {
       // merges them physically — so the PromQL downsample routing rule
       // fires on LIVE data, not only the batch-built store
       val bucketNs = 15L * 1000 * 1000 * 1000
-      val partials = batch
+      val partials = batch.coalesce(1)
         .groupBy(
           element_at(col("labels"), "__name__").as("family"),
           col("fingerprint"),
@@ -852,29 +858,21 @@ object Store {
       appendWrite(withPushOid(spark, withDate(partials)),
         Seq("family", "fingerprint", "timestamp_ns"),
         s"$root/prom_pushed_15s")
-      invalidate(spark, root,
-        Seq("prom_pushed", "prom_series", "prom_pushed_15s"))
+      Seq("prom_pushed", "prom_pushed_15s") ++
+        (if (dictWritten) Seq("prom_series") else Nil)
     }
-    n
-  }
 
   /** Live profile ingest (pprof `/ingest`, OTLP profiles): rows already in
     * the profiles-table shape (profile_id, service_name, timestamp_ns,
     * type_id, sample_types_units, tags, tree). Returns rows appended.
     */
-  def appendProfiles(spark: SparkSession, dir: String, rows: DataFrame): Long = {
-    val root = ensure(spark, dir)
-    val batch = graft.model.Materialize(rows)
-    val n = countStrict(batch)
-    if (n > 0) appendLock.synchronized {
-      writerLock(root).ensureHeld()
+  def appendProfiles(spark: SparkSession, dir: String, rows: DataFrame): Long =
+    appendBatch(spark, dir, rows) { (root, batch) =>
       appendWrite(withPushOid(spark, withDate(conformTo(spark,
           s"$root/profiles", batch, Set("oid", "date")))),
         Seq("service_name", "timestamp_ns"), s"$root/profiles")
-      invalidate(spark, root, Seq("profiles"))
+      Seq("profiles")
     }
-    n
-  }
 
   /** All pushed-family dictionary rows (fingerprint, labels, family) —
     * the [[promSeries]] surface for families that arrived over HTTP
@@ -1160,7 +1158,6 @@ object Store {
     // no Spark jobs) and route any drifted leaf through its own
     // mergeSchema rewrite with its own column set.
     def footerFields(leaf: Path): Set[String] = {
-      import scala.jdk.CollectionConverters._
       listStatus(fs, leaf).iterator
         .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
         .flatMap { s =>

@@ -706,6 +706,19 @@ class FrontendSpec extends SparkSpec {
     assert(streams(Some("42")) == 0)
   }
 
+  test("PromQL over a metric name never pushed answers 200 with an empty " +
+      "result, as Prometheus does") {
+    val (c1, range) = get("/api/v1/query_range?query=" +
+      enc("sum(rate(no_such_metric[5m]))") +
+      s"&start=$StartS&end=$EndS&step=6h")
+    assert(c1 == 200, range)
+    assert(range.contains(""""resultType":"matrix","result":[]"""), range)
+    val (c2, instant) = get("/api/v1/query?query=" + enc("no_such_metric") +
+      s"&time=$StartS")
+    assert(c2 == 200, instant)
+    assert(instant.contains(""""resultType":"vector","result":[]"""), instant)
+  }
+
   test("error envelopes: parse errors are 400 bad_data, unknown routes 404") {
     val (code, body) = get("/loki/api/v1/query_range?query=" +
       enc("{unclosed") + s"&start=$StartS&end=$EndS")

@@ -2,6 +2,9 @@ package graft.ingest
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, MapFilter, MapFromEntries}
+import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import graft.SparkSpec
 
@@ -136,5 +139,86 @@ class DecodePlanSpec extends SparkSpec {
     assert(labels("k") == "rec")          // record attr wins on conflict
     assert(labels("only_res") == "r")     // resource attr preserved
     assert(labels("level") == "WARN")     // severity → level, verbatim
+  }
+
+  /** Nested field count of a type, as whole-stage codegen counts it when
+    * it decides whether a plan node is too wide to compile.
+    */
+  private def nestedFields(t: DataType): Int = t match {
+    case st: StructType => st.fields.map(f => nestedFields(f.dataType)).sum
+    case m: MapType => nestedFields(m.keyType) + nestedFields(m.valueType)
+    case a: ArrayType => nestedFields(a.elementType)
+    case _ => 1
+  }
+
+  private val otlpTracesBody =
+    """{"resourceSpans":[{"resource":{"attributes":[
+      |{"key":"service.name","value":{"stringValue":"api"}}]},
+      |"scopeSpans":[{"spans":[{"traceId":"5b8efff798038103d269b633813fc60c",
+      |"spanId":"eee19b7ec3c1b174","name":"get","kind":2,
+      |"startTimeUnixNano":"1704067200000000000",
+      |"endTimeUnixNano":"1704067200001000000",
+      |"attributes":[{"key":"k","value":{"stringValue":"v"}}]}]}]}]}"""
+      .stripMargin.replace("\n", "")
+
+  test("OTLP decoders: no Generate outputs more nested fields than " +
+      "spark.sql.codegen.maxFields") {
+    // a node whose output carries the parsed AnyValue struct falls out of
+    // whole-stage codegen, and its fallback projection is generated for
+    // that struct again in every task — a fixed per-push cost
+    val maxFields = spark.conf.get("spark.sql.codegen.maxFields").toInt
+    // non-foldable source: constant folding must not hide the plan
+    def src(body: String) = spark.range(1).select(
+      regexp_replace(lit(body), lit("@@"), col("id").cast("string")).as("body"))
+    val decoders = Seq(
+      "decodeOtlpLogs" -> WireFormats.decodeOtlpLogs(src(otlpLogsBody)),
+      "decodeOtlpTraces" -> WireFormats.decodeOtlpTraces(src(otlpTracesBody)),
+      "decodeOtlpMetrics" -> WireFormats.decodeOtlpMetrics(src(otlpMetricsBody)))
+    for ((name, df) <- decoders) {
+      val plan = df.queryExecution.optimizedPlan
+      val widths = plan.collect { case g: Generate => nestedFields(g.schema) }
+      assert(widths.nonEmpty, s"$name: no Generate in\n$plan")
+      assert(widths.forall(_ <= maxFields),
+        s"$name: a Generate outputs ${widths.max} nested fields " +
+          s"(max $maxFields):\n$plan")
+    }
+  }
+
+  test("decodeOtlpMetrics: fixed rows — resource attrs bind to their own " +
+      "points across gauge/sum, asInt and a nested kvlist attr") {
+    val s = spark
+    import s.implicits._
+    val body =
+      """{"resourceMetrics":[
+        |{"resource":{"attributes":[
+        |  {"key":"host","value":{"stringValue":"a"}},
+        |  {"key":"meta","value":{"kvlistValue":{"values":[
+        |    {"key":"zone","value":{"stringValue":"eu"}}]}}}]},
+        | "scopeMetrics":[{"metrics":[
+        |  {"name":"cpu","gauge":{"dataPoints":[
+        |    {"timeUnixNano":"1000","asDouble":1.5,
+        |     "attributes":[{"key":"core","value":{"intValue":"0"}}]}]}},
+        |  {"name":"reqs","sum":{"dataPoints":[
+        |    {"timeUnixNano":"2000","asInt":"7"}]}}]}]},
+        |{"resource":{"attributes":[{"key":"host","value":{"stringValue":"b"}}]},
+        | "scopeMetrics":[{"metrics":[
+        |  {"name":"cpu","gauge":{"dataPoints":[
+        |    {"timeUnixNano":"3000","asDouble":2.5},
+        |    {"timeUnixNano":"4000","asInt":"3","attributes":[
+        |      {"key":"host","value":{"stringValue":"override"}}]}]}}]}]}]}"""
+        .stripMargin.replace("\n", "")
+    val rows = WireFormats.decodeOtlpMetrics(Seq(body).toDF("body"))
+      .select("labels", "timestamp_ns", "value").collect()
+      .map(r => (r.getMap[String, String](0).toMap, r.getLong(1), r.getDouble(2)))
+      .toSeq
+    // a kvlist VALUE has no scalar rendering on the metrics path: the key
+    // stays, with a null value
+    assert(rows == Seq(
+      (Map("host" -> "a", "meta" -> null, "core" -> "0", "__name__" -> "cpu"),
+        1000L, 1.5),
+      (Map("host" -> "a", "meta" -> null, "__name__" -> "reqs"), 2000L, 7.0),
+      (Map("host" -> "b", "__name__" -> "cpu"), 3000L, 2.5),
+      (Map("host" -> "override", "__name__" -> "cpu"), 4000L, 3.0)),
+      rows.mkString("\n"))
   }
 }

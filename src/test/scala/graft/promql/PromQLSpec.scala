@@ -223,6 +223,30 @@ class PromQLSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.window.ratio")
   }
 
+  test("count_over_time: windowed and explode plans agree at range/step 16 " +
+      "and 4, over the 15s downsample and over raw samples") {
+    // events_value routes to the 15s partials, events_total stays raw. A
+    // count's cast must sit outside its window: under the cast the
+    // aggregate read as a plain one and analysis failed with
+    // MISSING_GROUP_BY once range/step reached the window ratio (16)
+    val eng = new PromQLCompiler(spark, sf, PromParams(StartNs, EndNs, 900L))
+    def run(q: String, ratio: Option[String]): Seq[(String, Long, Double)] = {
+      ratio.foreach(spark.conf.set("spark.graft.window.ratio", _))
+      try eng.compile(q)
+        .select(to_json(col("labels")), col("ts"), col("value")).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+      finally spark.conf.unset("spark.graft.window.ratio")
+    }
+    for (name <- Seq("events_value", "events_total");
+         range <- Seq("4h", "1h")) { // range/step 16 and 4
+      val q = s"""count_over_time($name{event_type="click"}[$range])"""
+      val exploded = run(q, Some("1000000"))
+      assert(exploded.nonEmpty, q)
+      assert(run(q, None) == exploded, q) // default ratio 16
+      assert(run(q, Some("4")) == exploded, q) // both ranges windowed
+    }
+  }
+
   test("vector agg drops __name__; by keeps only listed labels") {
     val df = engine.compile("""sum by (event_type) (count_over_time(events_value[6h]))""")
     val keys = df.select(explode(map_keys(col("labels")))).distinct()

@@ -10,6 +10,19 @@ class StoreSpec extends SparkSpec {
   private def engine =
     new LogQLCompiler(spark, sf, EvalParams(StartNs, EndNs, StepS))
 
+  /** A private copy of the sf0.001 inputs, for cases that append: appends
+    * mutate the dir's store, and the shared sf0.001 store's contents are
+    * load-bearing for other suites.
+    */
+  private def inputsCopy(prefix: String): String = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tmp.deleteOnExit()
+    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
+      java.nio.file.Files.copy(f.toPath,
+        new java.io.File(tmp, f.getName).toPath)
+    tmp.getAbsolutePath
+  }
+
   private def scanPaths(q: String): Seq[String] =
     engine.compileMetric(LogQLParser.parseOrThrow(q))
       .queryExecution.sparkPlan.collect {
@@ -555,14 +568,7 @@ class StoreSpec extends SparkSpec {
 
   test("appendSpans/appendMetrics/appendProfiles land in the queryable " +
       "store: attrs GIN, ancestor closure, pushed-family PromQL, profiles") {
-    // tmp copy: appends mutate the dir's store, and the shared sf0.001
-    // store's contents are load-bearing for other suites
-    val tmp = java.nio.file.Files.createTempDirectory("graft-append").toFile
-    tmp.deleteOnExit()
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    val dir = tmp.getAbsolutePath
+    val dir = inputsCopy("graft-append")
     val s = spark
     import s.implicits._
     val ts = 1704100000000000000L // inside the 2024-01 window
@@ -660,12 +666,7 @@ class StoreSpec extends SparkSpec {
 
   test("append closure driver fast path agrees with the distributed " +
       "fallback on split-trace pushes (children first)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-closure").toFile
-    tmp.deleteOnExit()
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    val dir = tmp.getAbsolutePath
+    val dir = inputsCopy("graft-closure")
     val s = spark
     import s.implicits._
     val ts = 1704100000000000000L
@@ -728,5 +729,184 @@ class StoreSpec extends SparkSpec {
         .agg(sum("value")).collect()(0).getDouble(0)
       assert(math.abs(ds - raw) < 1e-6, s"$ds vs $raw")
     } finally spark.conf.set("spark.graft.store.disabled", "false")
+  }
+
+  // ---- append contract: one decode, one file per leaf, no empty dictionary
+  // files, nothing written for a rejected batch ------------------------------
+
+  /** One store serves the append-contract cases below; each case pushes
+    * its own series.
+    */
+  private lazy val appendDir: String = {
+    val dir = inputsCopy("graft-append-contract")
+    Store.ensure(spark, dir)
+    dir
+  }
+
+  private val appendTables = Seq("samples", "time_series", "metrics_15s",
+    "prom_pushed", "prom_series", "prom_pushed_15s")
+
+  /** Every parquet file of one store table, as paths below the table. */
+  private def tableFiles(table: String): Set[String] = {
+    val (fs, p) = Store.fsFor(s"${Store.rootFor(appendDir)}/$table")
+    if (!fs.exists(p)) Set.empty
+    else {
+      val it = fs.listFiles(p, true)
+      val base = fs.makeQualified(p).toString + "/"
+      val out = Set.newBuilder[String]
+      while (it.hasNext) {
+        val f = it.next().getPath.toString
+        if (f.endsWith(".parquet")) out += f.stripPrefix(base)
+      }
+      out.result()
+    }
+  }
+
+  private def allFiles(): Map[String, Set[String]] =
+    appendTables.map(t => t -> tableFiles(t)).toMap
+
+  /** Loki push body: one stream per host, one line per timestamp. */
+  private def lokiBody(job: String, hosts: Seq[String], ts: Seq[String]): String =
+    hosts.map { h =>
+      s"""{"stream":{"job":"$job","host":"$h"},"values":[""" +
+        ts.map(t => s"""["$t","line $h $t"]""").mkString(",") + "]}"
+    }.mkString("""{"streams":[""", ",", "]}")
+
+  private def lokiRows(body: String) = {
+    val s = spark
+    import s.implicits._
+    graft.ingest.LokiPush.decodeRows(Seq(body).toDF("body"))
+  }
+
+  /** (oid=…, date=…) leaf dirs a decoded unscoped batch touches. */
+  private def leavesOf(rows: org.apache.spark.sql.DataFrame): Set[String] =
+    rows.select(
+      concat(lit("oid="), pmod(col("fingerprint"), lit(2L)).cast("string"),
+        lit("/date="), date_from_unix_date(
+          (col("timestamp_ns") / 86400000000000L).cast("int")).cast("string")))
+      .collect().map(_.getString(0)).toSet
+
+  private def leafOf(file: String): String =
+    file.split("/").dropRight(1).mkString("/")
+
+  private val day1 = "1704103200000000000" // 2024-01-01T10:00Z
+  private val day2 = "1704189600000000000" // 2024-01-02T10:00Z
+
+  test("append: each table gains one file per touched (oid, date) leaf, and " +
+      "a push of known series adds no dictionary file") {
+    val hosts = (0 until 4).map(i => s"h$i")
+    val first = lokiBody("contract_logs", hosts, Seq(day1, day2))
+    val leaves = leavesOf(lokiRows(first))
+    def pushAndCheck(body: String): Map[String, Set[String]] = {
+      val before = allFiles()
+      assert(Store.appendLogs(spark, appendDir, lokiRows(body)) == 8)
+      val after = allFiles()
+      for (t <- Seq("samples", "metrics_15s")) {
+        val added = (after(t) -- before(t)).toSeq
+        assert(added.map(leafOf).sorted == leaves.toSeq.sorted,
+          s"$t gained ${added.mkString(", ")}")
+      }
+      after.map { case (t, fs) => t -> (fs -- before(t)) }
+    }
+    val firstAdded = pushAndCheck(first)
+    assert(firstAdded("time_series").size == 1) // the four new series
+    // the same series again, later in the day: no dictionary file at all
+    val again = lokiBody("contract_logs", hosts,
+      Seq("1704110400000000000", "1704196800000000000"))
+    assert(pushAndCheck(again)("time_series").isEmpty)
+    assert(Store.timeSeries(spark, appendDir)
+      .filter(element_at(col("labels"), "job") === "contract_logs")
+      .count() == 4)
+
+    // the metric path follows the same contract on prom_series
+    val s = spark
+    import s.implicits._
+    val m = Seq((day1.toLong, 1.0), (day2.toLong, 2.0))
+      .map { case (t, v) => (t, Map("__name__" -> "contract_gauge", "host" -> "h0"), v) }
+      .toDF("timestamp_ns", "labels", "value")
+      .withColumn("fingerprint", graft.model.Tables.fingerprintOf(col("labels")))
+    val b0 = allFiles()
+    assert(Store.appendMetrics(spark, appendDir, m) == 2)
+    val b1 = allFiles()
+    assert((b1("prom_series") -- b0("prom_series")).size == 1)
+    assert(Store.appendMetrics(spark, appendDir, m) == 2)
+    val b2 = allFiles()
+    assert(b2("prom_series") == b1("prom_series"))
+    for (t <- Seq("prom_pushed", "prom_pushed_15s"))
+      assert((b2(t) -- b1(t)).map(leafOf) == leavesOf(m), t)
+  }
+
+  test("append: a batch with one null timestamp leaves every table's file " +
+      "list unchanged") {
+    val body = lokiBody("contract_null", Seq("h0", "h1"), Seq(day1, day2))
+      .replaceFirst(day2, "not-a-number")
+    val before = allFiles()
+    val e = intercept[IllegalArgumentException](
+      Store.appendLogs(spark, appendDir, lokiRows(body)))
+    assert(e.getMessage == "1 of 4 entries have missing/invalid timestamps")
+    val s = spark
+    import s.implicits._
+    val m = Seq((Option(day1.toLong), 1.0), (Option.empty[Long], 2.0))
+      .map { case (t, v) => (t, Map("__name__" -> "contract_null"), v) }
+      .toDF("timestamp_ns", "labels", "value")
+      .withColumn("fingerprint", graft.model.Tables.fingerprintOf(col("labels")))
+    intercept[IllegalArgumentException](Store.appendMetrics(spark, appendDir, m))
+    assert(allFiles() == before)
+  }
+
+  test("append: a tenant-scoped push dedups its dictionary per " +
+      "(oid, fingerprint)") {
+    val body = lokiBody("contract_tenant", Seq("h0"), Seq(day1))
+    val fp = lokiRows(body).select("fingerprint").head().getLong(0)
+    def dictOids(): Seq[String] = Store.readTable(spark,
+        s"${Store.rootFor(appendDir)}/time_series")
+      .filter(col("fingerprint") === fp)
+      .select("oid").collect().map(_.getString(0)).toSeq.sorted
+    def pushAs(tenant: String, b: String): Unit = {
+      spark.conf.set("spark.graft.tenant", tenant)
+      try assert(Store.appendLogs(spark, appendDir, lokiRows(b)) == 1)
+      finally spark.conf.unset("spark.graft.tenant")
+    }
+    pushAs("t1", body)
+    pushAs("t1", lokiBody("contract_tenant", Seq("h0"), Seq(day2)))
+    assert(dictOids() == Seq("t1"))
+    // another tenant pushing the same label set owns its own row
+    pushAs("t2", body)
+    assert(dictOids() == Seq("t1", "t2"))
+  }
+
+  test("append: a Loki push of known series runs at most 5 Spark jobs and " +
+      "writes no shuffle bytes") {
+    import org.apache.spark.scheduler._
+    val hosts = Seq("h0", "h1", "h2", "h3")
+    Store.appendLogs(spark, appendDir,
+      lokiRows(lokiBody("contract_jobs", hosts, Seq(day1, day2))))
+    val group = s"append-guard-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          j.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskMetrics != null)
+          shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "known-series push")
+      try Store.appendLogs(spark, appendDir, lokiRows(lokiBody(
+        "contract_jobs", hosts, Seq("1704110400000000000",
+          "1704196800000000000"))))
+      finally sc.clearJobGroup()
+      org.apache.spark.grafttest.ListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get > 0 && jobs.get <= 5, s"${jobs.get} jobs")
+    assert(shuffleBytes.get == 0L, s"${shuffleBytes.get} shuffle bytes")
   }
 }
