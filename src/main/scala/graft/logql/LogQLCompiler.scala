@@ -457,34 +457,22 @@ class LogQLCompiler(spark: SparkSession, dir: String, params: EvalParams) {
     * Plan shape at scale: matchers that only touch ingest-time labels are
     * evaluated on the series dictionary (`time_series`) and the fact table
     * is semi-joined on fingerprint (broadcast — the dictionary is ~1e6 rows
-    * when samples are 1e12). Here both live in one derived view, so the
-    * filter applies directly and Catalyst pushes it into the scan.
+    * when samples are 1e12). Matcher work is O(streams), not O(rows), and
+    * the parquet scan reads only (ts, fingerprint) + used columns.
     *
     * `loNs`/`hiNs` widen or shift the scan window (used by `offset` and
     * sliding ranges so every emitted bucket sees its full lookback).
     */
   def compileLog(sel: Selector, stages: Seq[Stage],
       loNs: Long = params.startNs, hiNs: Long = params.endNs): DataFrame = {
-    val base =
-      if (graft.store.Store.enabled(spark)) {
-        // materialized path: matchers evaluate on the (small) series
-        // dictionary; the date-partitioned fact scan broadcast-joins the
-        // surviving fingerprints — matcher work is O(streams), not O(rows),
-        // and the parquet scan reads only (ts, fingerprint) + used columns.
-        var dict = graft.store.Store.timeSeries(spark, dir)
-        for (m <- sel.matchers) dict = dict.filter(matcherCond(m))
-        graft.store.Store.samples(spark, dir, loNs, hiNs)
-          .drop("date")
-          .join(graft.store.Store.maybeBroadcastDict(spark, dir, dict),
-            Seq("fingerprint"))
-          .select(col("timestamp_ns"), col("labels"), col("line"),
-            col("value"), col("fingerprint"))
-      } else {
-        var df = Tables.logs(spark, dir)
-          .filter(col("timestamp_ns") >= loNs && col("timestamp_ns") < hiNs)
-        for (m <- sel.matchers) df = df.filter(matcherCond(m))
-        df
-      }
+    var dict = graft.store.Store.timeSeries(spark, dir)
+    for (m <- sel.matchers) dict = dict.filter(matcherCond(m))
+    val base = graft.store.Store.samples(spark, dir, loNs, hiNs)
+      .drop("date")
+      .join(graft.store.Store.maybeBroadcastDict(spark, dir, dict),
+        Seq("fingerprint"))
+      .select(col("timestamp_ns"), col("labels"), col("line"),
+        col("value"), col("fingerprint"))
     val staged = stages.foldLeft(base)(applyStage)
     // re-key once if any stage mutated labels (pruned when fp is unused)
     if (stages.exists(mutatesLabels))
@@ -503,7 +491,7 @@ class LogQLCompiler(spark: SparkSession, dir: String, params: EvalParams) {
   private def downsampled(ra: RangeAgg): Option[DataFrame] = {
     val r = ra.range
     val q = 15000000000L
-    val eligible = graft.store.Store.enabled(spark) && r.stages.isEmpty &&
+    val eligible = r.stages.isEmpty &&
       Set("rate", "count_over_time", "bytes_over_time", "bytes_rate")(ra.fn) &&
       stepNs % q == 0 && r.rangeNs % q == 0 && r.offsetNs % q == 0
     if (!eligible) None

@@ -212,17 +212,6 @@ object Tables {
       .withColumn("fingerprint", fingerprintOf(col("labels")))
   }
 
-  /** Metric-name → samples DataFrame dispatch (the PromQL compiler selects
-    * the right family statically, so unqueried unions never scan).
-    */
-  def promMetric(name: String): Option[(SparkSession, String) => DataFrame] =
-    name match {
-      case "events_value"  => Some(gaugeSamples)
-      case "events_total"  => Some(counterSamples)
-      case "events_bucket" => Some(bucketSamples)
-      case _               => None
-    }
-
   /** Span table derived from events: every 10 consecutive event_ids form a
     * trace; each event is a span. Mirrors `tempo_traces`
     * (`ctrl/qryn/sql/traces.sql:7-19`). Purely arithmetic so the DuckDB

@@ -20,17 +20,12 @@ import graft.model.{Materialize, Tables}
 object Profiles {
 
   /** Materialized-store read of the profiles table (date-partitioned,
-    * service-sorted — Store.ensure); falls back to the raw derivation when
-    * the store is disabled. Query planners go through here so the scan is
-    * pruned, not derived per query.
+    * service-sorted — Store.ensure). Query planners go through here so the
+    * scan is pruned, not derived per query.
     */
   def profiles(spark: SparkSession, dir: String,
       loNs: Long = 0L, hiNs: Long = Long.MaxValue): DataFrame =
-    if (graft.store.Store.enabled(spark))
-      graft.store.Store.profiles(spark, dir, loNs, hiNs).drop("date")
-    else
-      derive(spark, dir)
-        .filter(col("timestamp_ns") >= loNs && col("timestamp_ns") < hiNs)
+    graft.store.Store.profiles(spark, dir, loNs, hiNs).drop("date")
 
   /** One profile per event: service + a 3-node call tree
     * main → <event_type> → op<user_id%3>, with self-costs derived from the

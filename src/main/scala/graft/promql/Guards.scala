@@ -80,29 +80,19 @@ object Guards {
     }
   }
 
-  /** Matched-series count for one selector. With the store enabled this
-    * reads the `prom_series` DICTIONARY (series-ever-seen per family —
-    * MBs where the sample tables are TBs, so admission costs milliseconds
-    * regardless of store size; the count is a safe upper bound on the
-    * window's series). Derived mode falls back to a window-pruned,
-    * column-pruned distinct over the family samples.
+  /** Matched-series count for one selector, read from the `prom_series`
+    * DICTIONARY (series-ever-seen per family — MBs where the sample tables
+    * are TBs, so admission costs milliseconds regardless of store size;
+    * the count is a safe upper bound on the window's series). The
+    * dictionary holds pushed families too; a name it lacks counts 0
+    * series, as the compiler answers it with an empty result.
     */
-  def seriesCount(spark: SparkSession, dir: String, sel: Selector,
-      loNs: Long, hiNs: Long): Long = {
-    // the dictionary holds pushed families too; a name it lacks (and, in
-    // derived mode, any name outside the built families) counts 0 series,
-    // as the compiler answers it with an empty result
-    val base =
-      if (graft.store.Store.enabled(spark))
-        Some(graft.store.Store.promSeries(spark, dir, sel.name))
-      else
-        graft.model.Tables.promMetric(sel.name).map(_(spark, dir)
-          .filter(col("timestamp_ns") >= loNs && col("timestamp_ns") < hiNs))
-    base.fold(0L)(b =>
-      sel.matchers.foldLeft(b)((df, m) => df.filter(matcherCond(m)))
-        .agg(approx_count_distinct(col("fingerprint")).as("n"))
-        .head().getLong(0))
-  }
+  def seriesCount(spark: SparkSession, dir: String, sel: Selector): Long =
+    sel.matchers
+      .foldLeft(graft.store.Store.promSeries(spark, dir, sel.name))(
+        (df, m) => df.filter(matcherCond(m)))
+      .agg(approx_count_distinct(col("fingerprint")).as("n"))
+      .head().getLong(0)
 
   /** Peak-sample estimate for a query: Σ over selectors of
     * series × gridPoints × perPointBudget, where perPointBudget is 1 for
@@ -116,10 +106,7 @@ object Guards {
       val points = (params.endNs - params.startNs) / selStepNs + 1
       val perPoint = sel.rangeNs.fold(1L)(r =>
         math.max(1L, r / ScrapeIntervalNs))
-      val lookNs = sel.rangeNs.getOrElse(params.lookbackNs)
-      val lo = params.startNs - lookNs - sel.offsetNs
-      val hi = params.endNs + 1 - sel.offsetNs
-      seriesCount(spark, dir, sel, lo, hi) * points * perPoint
+      seriesCount(spark, dir, sel) * points * perPoint
     }.sum
   }
 

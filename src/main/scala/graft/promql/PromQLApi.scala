@@ -3,13 +3,12 @@ package graft.promql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.Tables
-
 /** The non-query PromQL HTTP surface beyond labels/values (reference
   * `reader/service/metadata.go:25-80`): `/api/v1/metadata` lists each
   * metric family with its type plus the live series count — the reference
   * scans the `time_series` dictionary for `__name__` + stored metadata;
-  * here each family's dictionary scan aggregates distinct fingerprints.
+  * here each family's `prom_series` dictionary rows (tenant-scoped, like
+  * every store read) count distinct fingerprints.
   */
 object PromQLApi {
 
@@ -20,7 +19,7 @@ object PromQLApi {
 
   def metadata(spark: SparkSession, dir: String): DataFrame = {
     val built = Families.map { case (name, typ) =>
-      Tables.promMetric(name).get(spark, dir)
+      graft.store.Store.promSeries(spark, dir, name)
         .agg(countDistinct(col("fingerprint")).as("series"))
         .select(lit(name).as("metric_name"), lit(typ).as("type"),
           col("series"))

@@ -173,8 +173,10 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
   private def matcherCond(m: Matcher): Column = Matchers.cond(m)
 
   /** Scan the metric family for a selector, matchers applied, over
-    * [loNs, hiNs). The name picks the source statically so only the queried
-    * family's derivation is in the plan.
+    * [loNs, hiNs). The name picks the materialized family table
+    * (date-partitioned, fingerprint-sorted) statically, so only the
+    * queried family is in the plan and no query re-derives the counter
+    * cumsum window (the reference's ingest-time views, log.sql:96).
     */
   private def scan(sel: Selector, loNs: Long, hiNs: Long): DataFrame = {
     // a name that was never built nor pushed selects no series: Prometheus
@@ -186,18 +188,9 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
         StructField("labels", MapType(StringType, StringType)),
         StructField("value", DoubleType),
         StructField("fingerprint", LongType))))
-    val base =
-      if (graft.store.Store.enabled(spark))
-        // materialized family (date-partitioned, fingerprint-sorted): the
-        // per-query cumsum-window re-derivation disappears — at 100 TB the
-        // counter families are ingest-time materialized views (log.sql:96)
-        graft.store.Store.promMetric(spark, dir, sel.name, loNs, hiNs)
-          .map(_.drop("date"))
-          .getOrElse(noSamples)
-      else
-        Tables.promMetric(sel.name).fold(noSamples)(_(spark, dir)
-          .filter(col("timestamp_ns") >= loNs && col("timestamp_ns") < hiNs))
-    var df = base
+    var df = graft.store.Store.promMetric(spark, dir, sel.name, loNs, hiNs)
+      .map(_.drop("date"))
+      .getOrElse(noSamples)
     for (m <- sel.matchers) df = df.filter(matcherCond(m))
     df
   }
@@ -742,7 +735,7 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
     // falling back to raw when nothing was ever pushed).
     val familyOk = sel.name == "events_value" ||
       !Set("events_total", "events_bucket")(sel.name)
-    graft.store.Store.enabled(spark) && DownsampleFns(fn) && familyOk &&
+    DownsampleFns(fn) && familyOk &&
       sel.rangeNs.exists(_ % q == 0) && stepNs % q == 0 &&
       sel.offsetNs % q == 0 && gridStart % q == 0 // pinned @ grids may be unaligned
   }

@@ -38,18 +38,14 @@ import graft.model.{Materialize, Tables}
   *
   * Built once per (JVM, testdata dir) under target/graft-store and reused
   * across sessions via the parquet _SUCCESS markers. At 100 TB this build
-  * is the ingest pipeline (§2.A Structured Streaming foreachBatch); query
-  * compilers only depend on the table schemas.
+  * is the ingest pipeline (§2.A Structured Streaming foreachBatch). These
+  * tables are the one read path: every query engine (LogQL, PromQL,
+  * TraceQL, profiles, admission guards, metadata) scans them, and none
+  * re-derives a table from raw events at query time.
   */
 object Store {
 
   private val built = TrieMap[String, String]()
-
-  /** Kill-switch: spark.graft.store.disabled=true falls back to the
-    * derive-per-query path (used by tests to compare both paths).
-    */
-  def enabled(spark: SparkSession): Boolean =
-    !spark.conf.getOption("spark.graft.store.disabled").contains("true")
 
   /** Store location: `SPARK_GRAFT_STORE_ROOT` env or the
     * `spark.graft.store.root` system property, defaulting to the repo's
@@ -407,9 +403,9 @@ object Store {
 
   /** Bounded ancestor closure (trace_id, span_id, anc_id, timestamp_ns):
     * one row per (span, proper ancestor), built once at ingest by iterative
-    * doubling — ⌈log₂ depth⌉ self-joins, depth capped at 64. Turns the
-    * TraceQL `>>` true-descendant walk (a driver-synchronized loop of up to
-    * 64 jobs) into ONE equi-join at query time. Size is Σ span depths —
+    * doubling — ⌈log₂ depth⌉ self-joins, depth capped at 64. TraceQL's
+    * `>>`, `!>>` and `<<~` read it with one equi-join per query and no
+    * driver loop. Size is Σ span depths —
     * bounded by 64× the span table, ~5× for typical trace shapes; the same
     * space-for-join trade as the attrs GIN.
     */

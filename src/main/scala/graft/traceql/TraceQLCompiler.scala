@@ -3,7 +3,6 @@ package graft.traceql
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.{Materialize, Tables}
 import graft.store.Store
 import TraceQLAst._
 
@@ -43,20 +42,16 @@ class TraceQLCompiler(spark: SparkSession, dir: String,
   private def applySample(df: DataFrame): DataFrame =
     sampleHint.fold(df)(n => sampleTraces(df, n))
 
-  // Scans go through the materialized store (date-partitioned,
+  // Scans read the materialized store (date-partitioned,
   // (trace_id, span_id)-sorted — Store.ensure) with the query window as a
   // partition-pruning predicate BELOW the bitmask aggregate, mirroring the
   // reference's leaf scan (`clickhouse_transpiler/init.go:21`,
-  // `traces.sql:7-32`). Derive-per-query is the kill-switch fallback only.
-  private def spans: DataFrame = applySample(
-    if (Store.enabled(spark)) Store.spans(spark, dir, loNs, hiNs).drop("date")
-    else Tables.spans(spark, dir)
-      .filter(col("timestamp_ns") >= loNs && col("timestamp_ns") < hiNs))
+  // `traces.sql:7-32`).
+  private def spans: DataFrame =
+    applySample(Store.spans(spark, dir, loNs, hiNs).drop("date"))
 
-  private def attrs: DataFrame = applySample(
-    if (Store.enabled(spark)) Store.spanAttrs(spark, dir, loNs, hiNs).drop("date")
-    else Tables.spanAttrs(spark, dir)
-      .filter(col("timestamp_ns") >= loNs && col("timestamp_ns") < hiNs))
+  private def attrs: DataFrame =
+    applySample(Store.spanAttrs(spark, dir, loNs, hiNs).drop("date"))
 
   private def leaves(c: AttrCond): Seq[AttrCond] = c match {
     case CondAnd(l, r) => leaves(l) ++ leaves(r)
@@ -224,86 +219,16 @@ class TraceQLCompiler(spark: SparkSession, dir: String,
           .select(children("trace_id")).distinct()
     }
     case StructDescendant(l, r) =>
-      // TRUE descendant. Store path: ONE join pipeline against the
-      // ingest-time ancestor-closure table (Store.ancestorClosure) — no
-      // driver loop at all. Fallback (store disabled): a batched ancestor
-      // walk, keyed on (trace_id, span_id) — span ids are only unique
-      // within a trace. Materialization points go through Materialize:
-      // localCheckpoint locally, persist(MEMORY_AND_DISK) under
-      // spark.graft.checkpoint.reliable=true so a cluster executor loss
-      // recomputes instead of failing (the store path has no such state).
-      val (lSpans0, rSpans) = (simpleCond(l), simpleCond(r)) match {
-        case (Some(cl), Some(cr)) => // shared scan+agg for both sides
-          val (frame, idx) = maskedFrame(Seq(cl, cr))
-          (frame.filter(maskCond(cl, idx)),
-            frame.filter(maskCond(cr, idx)))
-        case _ => throw new IllegalArgumentException(">> needs simple span-sets")
-      }
-      if (Store.enabled(spark)) {
-        val anc = Store.ancestors(spark, dir, loNs, hiNs)
-          .select(col("trace_id"), col("span_id"), col("anc_id"))
-        return rSpans.select(col("trace_id"), col("span_id")).alias("c")
-          .join(anc.alias("t"), col("c.trace_id") === col("t.trace_id") &&
-            col("c.span_id") === col("t.span_id"))
-          .join(lSpans0.select(col("trace_id"), col("span_id")).alias("p"),
-            col("t.trace_id") === col("p.trace_id") &&
-              col("t.anc_id") === col("p.span_id"), "left_semi")
-          .select(col("c.trace_id").as("trace_id")).distinct()
-      }
-      val lSpans = Materialize(lSpans0
-        .select(col("trace_id"), col("span_id").as("__aid")))
-      val parentOf = Materialize(spans
-        .select(col("trace_id"), col("span_id"), col("parent_id")))
-      val MaxDepth = 64
-      val BatchLevels = 8
-      def hitsOf(f: DataFrame): DataFrame =
-        f.join(lSpans,
-            f("trace_id") === lSpans("trace_id") &&
-              f("__anc") === lSpans("__aid"))
-          .select(f("trace_id"))
-      var frontier = Materialize(rSpans
-        .select(col("trace_id"), col("span_id"), col("parent_id").as("__anc"))
-        .filter(col("__anc").isNotNull))
-      var hitParts = List[DataFrame](hitsOf(frontier))
-      var depth = 1
-      while (depth < MaxDepth && !frontier.isEmpty) {
-        // one batch = BatchLevels closure joins UNIONED with a level tag,
-        // materialized by a single Materialize(): hits for all batch
-        // levels come from one join against the materialized union, and
-        // the next frontier is a cheap filter of it — so the final count
-        // never re-executes join chains, and driver sync is per batch
-        var f = frontier
-        var acc: DataFrame = null
-        var steps = 0
-        while (steps < BatchLevels && depth + steps < MaxDepth) {
-          f = f.join(parentOf.select(col("trace_id"),
-              col("span_id").as("__anc"), col("parent_id").as("__next")),
-              Seq("trace_id", "__anc"))
-            .filter(col("__next").isNotNull)
-            .select(col("trace_id"), col("span_id"), col("__next").as("__anc"))
-          val lvl = f.withColumn("__lvl", lit(steps))
-          acc = if (acc == null) lvl else acc.union(lvl)
-          steps += 1
-        }
-        val levels = Materialize(acc)
-        hitParts ::= hitsOf(levels.drop("__lvl"))
-        frontier = levels.filter(col("__lvl") === steps - 1).drop("__lvl")
-        depth += steps
-      }
-      hitParts.reduce(_ union _).distinct()
+      // TRUE descendant: r-spans with an l-span among their closure rows
+      val (lSp, rSp) = simplePair(l, r, ">>")
+      descendants(lSp, rSp).select(col("trace_id")).distinct()
 
     case StructNotDescendant(l, r) =>
       // traces containing an r-span with NO l-span ancestor: the positive
-      // descendant set (closure semi-join) anti-joined back against the
-      // r-spans — one extra left_anti over the `>>` machinery
+      // descendant set anti-joined back against the r-spans
       val (lSp, rSp) = simplePair(l, r, "!>>")
-      val descOfL = closureOf(rSp).alias("t")
-        .join(lSp.select(col("trace_id"), col("span_id")).alias("p"),
-          col("t.trace_id") === col("p.trace_id") &&
-            col("t.anc_id") === col("p.span_id"), "left_semi")
-        .select(col("trace_id"), col("span_id")).distinct()
       rSp.select(col("trace_id"), col("span_id"))
-        .join(descOfL, Seq("trace_id", "span_id"), "left_anti")
+        .join(descendants(lSp, rSp), Seq("trace_id", "span_id"), "left_anti")
         .select(col("trace_id")).distinct()
 
     case StructNotAncestor(l, r) =>
@@ -329,41 +254,26 @@ class TraceQLCompiler(spark: SparkSession, dir: String,
       case _ => throw new IllegalArgumentException(s"$op needs simple span-sets")
     }
 
+  /** (trace_id, span_id) of the r-spans that have an l-span ancestor:
+    * the r-spans' closure rows semi-joined against the l-spans on anc_id
+    * (one row per matching ancestor; callers dedup or anti-join).
+    */
+  private def descendants(lSp: DataFrame, rSp: DataFrame): DataFrame =
+    closureOf(rSp).alias("t")
+      .join(lSp.select(col("trace_id"), col("span_id")).alias("p"),
+        col("t.trace_id") === col("p.trace_id") &&
+          col("t.anc_id") === col("p.span_id"), "left_semi")
+      .select(col("trace_id"), col("span_id"))
+
   /** Transitive ancestor closure rows (trace_id, span_id, anc_id) of the
-    * given spans: the ingest-time closure table when the store is on
-    * (Store.ancestorClosure — one semi-join, no iteration), a bounded
-    * per-level parent walk otherwise (kill-switch fallback; trace depth
-    * caps the loop and an empty frontier stops it early).
+    * given spans, read from the ingest-time closure table
+    * (Store.ancestorClosure): one semi-join, no iteration.
     */
   private def closureOf(seed: DataFrame): DataFrame =
-    if (Store.enabled(spark))
-      Store.ancestors(spark, dir, loNs, hiNs)
-        .select(col("trace_id"), col("span_id"), col("anc_id"))
-        .join(seed.select(col("trace_id"), col("span_id")),
-          Seq("trace_id", "span_id"), "left_semi")
-    else {
-      val parentOf = Materialize(spans
-        .select(col("trace_id"), col("span_id"), col("parent_id")))
-      val MaxDepth = 64
-      var frontier = Materialize(seed
-        .select(col("trace_id"), col("span_id"), col("parent_id").as("__anc"))
-        .filter(col("__anc").isNotNull))
-      var parts = List[DataFrame](frontier
-        .select(col("trace_id"), col("span_id"), col("__anc").as("anc_id")))
-      var depth = 1
-      while (depth < MaxDepth && !frontier.isEmpty) {
-        frontier = Materialize(frontier
-          .join(parentOf.select(col("trace_id"),
-              col("span_id").as("__anc"), col("parent_id").as("__next")),
-            Seq("trace_id", "__anc"))
-          .filter(col("__next").isNotNull)
-          .select(col("trace_id"), col("span_id"), col("__next").as("__anc")))
-        parts ::= frontier
-          .select(col("trace_id"), col("span_id"), col("__anc").as("anc_id"))
-        depth += 1
-      }
-      parts.reduce(_ union _).distinct()
-    }
+    Store.ancestors(spark, dir, loNs, hiNs)
+      .select(col("trace_id"), col("span_id"), col("anc_id"))
+      .join(seed.select(col("trace_id"), col("span_id")),
+        Seq("trace_id", "span_id"), "left_semi")
 
   /** Matched spans of any structural expr (union-of-matches for non-leaf). */
   private def structSpans(e: TExpr): DataFrame = e match {

@@ -23,7 +23,7 @@ class GuardsSpec extends SparkSpec {
   test("series dictionary count matches the derived distinct-series count") {
     val sel = PromQLParser.parseOrThrow("""events_value{level="error"}""")
       .asInstanceOf[PromQLAst.Selector]
-    val n = Guards.seriesCount(spark, sf, sel, StartNs, EndNs)
+    val n = Guards.seriesCount(spark, sf, sel)
     val expect = graft.model.Tables.gaugeSamples(spark, sf)
       .filter(element_at(col("labels"), "level") === "error")
       .select("fingerprint").distinct().count()

@@ -129,36 +129,60 @@ class StoreSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
-  test("store path and derive path agree on a stage-bearing query") {
+  // Fails when the store read of a stage-bearing query (dictionary
+  // matchers, samples scan, json + unwrap) drops, duplicates or changes
+  // rows. The pinned figures were read off the store path and the
+  // per-query derivation from raw events, which agreed on them, before
+  // the derivation was deleted.
+  test("stage-bearing query returns the pinned per-user rows") {
     val q = """sum by (user) (sum_over_time({event_type="click"} | json | unwrap k [6h]))"""
-    val viaStore = engine.compileMetric(LogQLParser.parseOrThrow(q))
+    val rows = engine.compileMetric(LogQLParser.parseOrThrow(q))
       .select(element_at(col("labels"), "user").as("u"), col("ts"), col("value"))
-      .orderBy("u", "ts").collect()
-    spark.conf.set("spark.graft.store.disabled", "true")
-    try {
-      val derived = engine.compileMetric(LogQLParser.parseOrThrow(q))
-        .select(element_at(col("labels"), "user").as("u"), col("ts"), col("value"))
-        .orderBy("u", "ts").collect()
-      assert(viaStore.length == derived.length && viaStore.length > 0)
-      viaStore.zip(derived).foreach { case (a, b) =>
-        assert(a.getString(0) == b.getString(0) && a.getLong(1) == b.getLong(1))
-        assert(math.abs(a.getDouble(2) - b.getDouble(2)) < 1e-9)
-      }
-    } finally spark.conf.set("spark.graft.store.disabled", "false")
+    assert(rows.count() == 200)
+    val perUser = rows.groupBy("u").agg(count(lit(1)).as("n"), sum("value").as("s"))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    val expected = Map(
+      "0" -> (14L, 602.0), "1" -> (14L, 795.0), "2" -> (12L, 529.0),
+      "3" -> (15L, 684.0), "4" -> (18L, 1021.0), "5" -> (15L, 731.0),
+      "6" -> (15L, 775.0), "7" -> (15L, 518.0), "8" -> (11L, 417.0),
+      "9" -> (10L, 379.0), "10" -> (13L, 632.0), "11" -> (10L, 496.0),
+      "12" -> (14L, 811.0), "13" -> (9L, 423.0), "14" -> (15L, 894.0))
+    assert(perUser.keySet == expected.keySet, perUser)
+    for ((u, (n, total)) <- expected) {
+      assert(perUser(u)._1 == n, s"user $u rows")
+      assert(math.abs(perUser(u)._2 - total) < 1e-9, s"user $u value sum")
+    }
   }
 
-  test("descendant closure table agrees with the iterative-walk fallback") {
+  // Fails when the closure table misses or invents an ancestor, or the
+  // `>>` plan joins it on the wrong side: the reference walks each
+  // `purchase` span's parent chain over the raw span derivation on the
+  // driver, with no store table involved.
+  test("descendant closure table agrees with a driver-side parent walk") {
     import graft.traceql.{TraceQLCompiler, TraceQLParser}
     val eng = new TraceQLCompiler(spark, sf, StartNs, EndNs)
     val q = TraceQLParser.parseOrThrow("""{ .name="view" } >> { .name="purchase" }""")
     val viaClosure = eng.matchingTraces(q.expr).orderBy("trace_id")
       .collect().map(_.getLong(0))
-    spark.conf.set("spark.graft.store.disabled", "true")
-    try {
-      val viaWalk = eng.matchingTraces(q.expr).orderBy("trace_id")
-        .collect().map(_.getLong(0))
-      assert(viaClosure.nonEmpty && viaClosure.sameElements(viaWalk))
-    } finally spark.conf.set("spark.graft.store.disabled", "false")
+
+    val parentOf = graft.model.Tables.spans(spark, sf)
+      .filter(col("parent_id").isNotNull)
+      .select("trace_id", "span_id", "parent_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val names = graft.model.Tables.spanAttrs(spark, sf)
+      .filter(col("key") === "name" &&
+        col("timestamp_ns") >= StartNs && col("timestamp_ns") < EndNs)
+      .select("trace_id", "span_id", "val").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+    val views = names.collect { case (t, s, "view") => (t, s) }.toSet
+    def ancestors(t: Long, s: Long): Iterator[Long] =
+      Iterator.iterate(parentOf.get((t, s)))(_.flatMap(p => parentOf.get((t, p))))
+        .take(64).takeWhile(_.isDefined).map(_.get)
+    val viaWalk = names.collect {
+      case (t, s, "purchase") if ancestors(t, s).exists(a => views((t, a))) => t
+    }.distinct.sorted
+    assert(viaWalk.nonEmpty && viaClosure.sameElements(viaWalk),
+      s"closure ${viaClosure.mkString(",")} vs walk ${viaWalk.mkString(",")}")
   }
 
   test("tenant conf prunes to the tenant's oid partitions") {
@@ -198,6 +222,27 @@ class StoreSpec extends SparkSpec {
     spark.conf.set("spark.graft.tenant", "0")
     try assert(total() < all)
     finally spark.conf.unset("spark.graft.tenant")
+  }
+
+  // Fails when /api/v1/metadata ignores the tenant: counting each built
+  // family's series from events.parquet sees every tenant's series.
+  test("metadata series counts are tenant-scoped and match the series dictionary") {
+    val families = Seq("events_bucket", "events_total", "events_value")
+    def counts() = graft.promql.PromQLApi.metadata(spark, sf)
+      .filter(col("metric_name").isin(families: _*))
+      .collect().map(r => r.getAs[String]("metric_name") -> r.getAs[Long]("series"))
+      .toMap
+    val all = counts()
+    spark.conf.set("spark.graft.tenant", "0")
+    try {
+      val scoped = counts()
+      for (f <- families) {
+        val dict = Store.promSeries(spark, sf, f).count()
+        assert(dict > 0 && scoped(f) == dict,
+          s"$f: metadata ${scoped(f)} vs tenant dictionary $dict")
+      }
+      assert(families.exists(f => scoped(f) < all(f)), s"$scoped vs unscoped $all")
+    } finally spark.conf.unset("spark.graft.tenant")
   }
 
   test("expire drops partitions before the cutoff, later queries unaffected") {
@@ -548,22 +593,20 @@ class StoreSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
   }
 
+  // Fails when the persist(MEMORY_AND_DISK) materialization changes any
+  // row of an iterative plan: the flamegraph BFS materializes the merge
+  // once and every level after it.
   test("reliable-checkpoint mode gives identical iterative results") {
-    import graft.traceql.{TraceQLCompiler, TraceQLParser}
-    val q = TraceQLParser.parseOrThrow("""{ .name="view" } >> { .name="purchase" }""")
-    // the >> fallback walk is the deepest Materialize() user
-    spark.conf.set("spark.graft.store.disabled", "true")
-    try {
-      val eng = new TraceQLCompiler(spark, sf, StartNs, EndNs)
-      val local = eng.matchingTraces(q.expr).orderBy("trace_id")
-        .collect().map(_.getLong(0))
-      spark.conf.set("spark.graft.checkpoint.reliable", "true")
-      try {
-        val reliable = eng.matchingTraces(q.expr).orderBy("trace_id")
-          .collect().map(_.getLong(0))
-        assert(local.nonEmpty && local.sameElements(reliable))
-      } finally spark.conf.unset("spark.graft.checkpoint.reliable")
-    } finally spark.conf.set("spark.graft.store.disabled", "false")
+    import graft.prof.Profiles
+    def levels() = Profiles.flamegraphLevels(Profiles.mergeTree(spark, sf, "svc1"))
+      .orderBy("level", "fn", "self", "total").collect().toSeq
+    val local = levels()
+    spark.conf.set("spark.graft.checkpoint.reliable", "true")
+    val reliable = try levels()
+      finally spark.conf.unset("spark.graft.checkpoint.reliable")
+    // three BFS levels (main → event type → op), so the loop iterates
+    assert(local.map(_.getLong(0)).distinct.size >= 3, local.mkString("; "))
+    assert(local == reliable)
   }
 
   test("appendSpans/appendMetrics/appendProfiles land in the queryable " +
@@ -719,16 +762,19 @@ class StoreSpec extends SparkSpec {
       gotDist.sorted.mkString("; "))
   }
 
+  // Fails when the metrics_15s re-aggregation and the raw samples scan
+  // disagree. A stage that removes no rows (`| level="info"` after the
+  // same matcher) disqualifies the 15s route, so the second query takes
+  // the raw path over identical rows.
   test("downsample and raw paths agree on rate values") {
-    val q = """sum by (event_type) (rate({level="info"}[12h]))"""
-    val ds = engine.compileMetric(LogQLParser.parseOrThrow(q))
+    def total(q: String) = engine.compileMetric(LogQLParser.parseOrThrow(q))
       .agg(sum("value")).collect()(0).getDouble(0)
-    spark.conf.set("spark.graft.store.disabled", "true")
-    try {
-      val raw = engine.compileMetric(LogQLParser.parseOrThrow(q))
-        .agg(sum("value")).collect()(0).getDouble(0)
-      assert(math.abs(ds - raw) < 1e-6, s"$ds vs $raw")
-    } finally spark.conf.set("spark.graft.store.disabled", "false")
+    val dsQ = """sum by (event_type) (rate({level="info"}[12h]))"""
+    val rawQ = """sum by (event_type) (rate({level="info"} | level="info" [12h]))"""
+    assert(scanPaths(dsQ).exists(_.contains("metrics_15s")))
+    assert(!scanPaths(rawQ).exists(_.contains("metrics_15s")))
+    val (ds, raw) = (total(dsQ), total(rawQ))
+    assert(ds > 0 && math.abs(ds - raw) < 1e-6, s"$ds vs $raw")
   }
 
   // ---- append contract: one decode, one file per leaf, no empty dictionary
