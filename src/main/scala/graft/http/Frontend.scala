@@ -345,9 +345,10 @@ class Frontend(private[http] val spark: SparkSession, dir: String,
 
   /** `/loki/api/v1/query` — LogQL INSTANT query
     * (`reader/controller/query_range.go:66-150`,
-    * `service/query_range.go:569-660` QueryInstant): evaluate over
-    * [time−5m, time], log selectors export streams, metric queries keep
-    * the LATEST point per series and render a `vector`. The literal
+    * `service/query_range.go:569-660` QueryInstant): log selectors export
+    * the streams of [time−5m, time); metric queries evaluate ONE point,
+    * the window of each range ending at `time` (floored to the second),
+    * and render a `vector` stamped with that time. The literal
     * `vector(1)+vector(1)` health probe short-circuits to "2" exactly as
     * upstream (Grafana's datasource test query).
     */
@@ -359,27 +360,27 @@ class Frontend(private[http] val spark: SparkSession, dir: String,
       return ok(obj(Seq("resultType" -> str("vector"), "result" -> arr(Seq(
         obj(Seq("metric" -> "{}",
           "value" -> arr(Seq(num((tNs / 1000000000L).toDouble), str("2"))))))))))
-    val ev = EvalParams(tNs - 300000000000L, tNs,
-      parseDurationS(p.first("step").getOrElse("1")))
-    val c = new LogQLCompiler(spark, dir, ev)
     LogQLParser.parseOrThrow(q) match {
       case LogExpr(_, _) =>
+        val c = new LogQLCompiler(spark, dir,
+          EvalParams(tNs - 300000000000L, tNs, 1))
         val limit = p.first("limit").map(_.toInt).getOrElse(100)
         val forward = p.first("direction").contains("forward")
         val rows = c.compileLogQuery(q, Some(limit), forward)
           .select(col("timestamp_ns"), col("labels"), col("line"))
           .collect().toSeq
         ok(lokiStreams(rows, forward))
-      case _ =>
-        val rows = c.compile(q)
-          .select(col("ts"), col("labels"),
-            round(col("value"), 6).as("value"))
+      case metric =>
+        // a one-second grid whose single bucket [t−1s, t) is labelled
+        // t−1s and covers the lookback [t−range, t)
+        val tS = Math.floorDiv(tNs, 1000000000L)
+        val c = new LogQLCompiler(spark, dir,
+          EvalParams((tS - 1) * 1000000000L, tS * 1000000000L, 1))
+        val vector = c.compileExpr(metric)
+          .select(col("labels"), round(col("value"), 6).as("value"))
           .collect().toSeq
-        val latest = rows.groupBy(r => r.getMap[String, String](1).toMap)
-          .map { case (labels, rs) => labels -> rs.maxBy(_.getLong(0)) }
-        val vector = latest.toSeq
-          .map { case (labels, r) => labelsJson(labels) ->
-            arr(Seq(num(r.getLong(0).toDouble), str(num(r.getDouble(2))))) }
+          .map { r => labelsJson(r.getMap[String, String](0).toMap) ->
+            arr(Seq(num(tS.toDouble), str(num(r.getDouble(1))))) }
           .sortBy(_._1)
           .map { case (lj, v) => obj(Seq("metric" -> lj, "value" -> v)) }
         ok(obj(Seq("resultType" -> str("vector"), "result" -> arr(vector))))

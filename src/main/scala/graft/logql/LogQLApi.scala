@@ -1,6 +1,6 @@
 package graft.logql
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import LogQLAst._
@@ -12,16 +12,6 @@ import LogQLAst._
   * STRINGS and goes through the real parser — no hand-built ASTs.
   */
 object LogQLApi {
-
-  /** Exact distinct counts by default (oracle-matched);
-    * spark.graft.distinct.approx=true swaps in HLL sketches — the
-    * reference's `uniq()` estimate (`query_range.go:807+`) — for 100 TB
-    * index-stats endpoints where exactness is not part of the contract.
-    */
-  private def distinctCount(spark: SparkSession, c: Column): Column =
-    if (spark.conf.getOption("spark.graft.distinct.approx").contains("true"))
-      approx_count_distinct(c)
-    else countDistinct(c)
 
   private def parseSelector(q: String): (Selector, Seq[Stage]) =
     LogQLParser.parseOrThrow(q) match {
@@ -81,7 +71,7 @@ object LogQLApi {
     c.compileLog(sel, stages)
       .select(explode(map_entries(col("labels"))).as("e"))
       .groupBy(col("e.key").as("label"))
-      .agg(distinctCount(spark, col("e.value")).as("cardinality"))
+      .agg(countDistinct(col("e.value")).as("cardinality"))
   }
 
   // logfmt pair extraction — same pattern as the compiler's LogfmtStage
@@ -120,7 +110,7 @@ object LogQLApi {
         allMatch("^-?[0-9]+(\\.[0-9]+)?$").as("__f"),
         allMatch("^-?[0-9]+(\\.[0-9]+)?(ns|us|µs|ms|s|m|h)$").as("__d"),
         allMatch("^-?[0-9]+(\\.[0-9]+)?\\s*([kKmMgGtTpP]i?[bB]|[bB])$").as("__y"),
-        distinctCount(spark, col("e.value")).as("cardinality"))
+        countDistinct(col("e.value")).as("cardinality"))
       .select(col("field"), col("parser"),
         when(col("__b"), "boolean").when(col("__i"), "int")
           .when(col("__f"), "float").when(col("__d"), "duration")
@@ -134,7 +124,7 @@ object LogQLApi {
     val c = new LogQLCompiler(spark, dir, params)
     val (sel, stages) = parseSelector(selector)
     c.compileLog(sel, stages).agg(
-      distinctCount(spark, col("fingerprint")).as("streams"),
+      countDistinct(col("fingerprint")).as("streams"),
       count(lit(1)).as("entries"),
       sum(length(col("line"))).cast("long").as("bytes"))
   }

@@ -505,48 +505,14 @@ class LogQLCompiler(spark: SparkSession, dir: String, params: EvalParams) {
         .join(graft.store.Store.maybeBroadcastDict(spark, dir, dict),
           Seq("fingerprint"))
       val rangeS = r.rangeNs / 1e9
-      if (r.rangeNs / stepNs >= WindowPathRatio) {
-        // RANGE-frame plan over the 15s partials (same fork as the raw
-        // path): markers carry the grid, frame = [b-range+step, b+step)
-        val rekeyed = rekeyByWithout(ra, m15)
-        val gridStart = (params.startNs / stepNs) * stepNs
-        val gridEnd = ((params.endNs - 1) / stepNs) * stepNs
-        val sRows = rekeyed.select(col("fingerprint"), col("labels"),
-          col("cnt"), col("bytes"),
-          (col("timestamp_ns") + lit(r.offsetNs)).as("__ord"),
-          lit(false).as("__marker"))
-        val markers = rekeyed.groupBy(col("fingerprint"))
-          .agg(first(col("labels")).as("labels"))
-          .withColumn("__ord",
-            explode(sequence(lit(gridStart), lit(gridEnd), lit(stepNs))))
-          .select(col("fingerprint"), col("labels"),
-            lit(null).cast("long").as("cnt"),
-            lit(null).cast("long").as("bytes"),
-            col("__ord"), lit(true).as("__marker"))
-        val w = Window.partitionBy(col("fingerprint")).orderBy(col("__ord"))
-          .rangeBetween(-(r.rangeNs - stepNs), stepNs - 1)
-        val v: Column = ra.fn match {
-          case "rate"            => sum(col("cnt")).over(w) / rangeS
-          case "count_over_time" => sum(col("cnt")).over(w).cast("double")
-          case "bytes_over_time" => sum(col("bytes")).over(w).cast("double")
-          case "bytes_rate"      => sum(col("bytes")).over(w) / rangeS
-        }
-        sRows.unionByName(markers)
-          .withColumn("__v", v)
-          .withColumn("__n", count(col("cnt")).over(w))
-          .filter(col("__marker") && col("__n") > 0)
-          .select(col("fingerprint"), col("labels"),
-            expr("__ord div 1000000000").as("ts"), col("__v").as("value"))
-      } else {
-        val b = bucketed(m15, r.rangeNs, r.offsetNs)
-        val agg: Column = ra.fn match {
-          case "rate"            => sum(col("cnt")) / rangeS
-          case "count_over_time" => sum(col("cnt")).cast("double")
-          case "bytes_over_time" => sum(col("bytes")).cast("double")
-          case "bytes_rate"      => sum(col("bytes")) / rangeS
-        }
-        aggregateBuckets(b, ra, agg)
+      val b = bucketed(m15, r.rangeNs, r.offsetNs)
+      val agg: Column = ra.fn match {
+        case "rate"            => sum(col("cnt")) / rangeS
+        case "count_over_time" => sum(col("cnt")).cast("double")
+        case "bytes_over_time" => sum(col("bytes")).cast("double")
+        case "bytes_rate"      => sum(col("bytes")) / rangeS
       }
+      aggregateBuckets(b, ra, agg)
     }
   }
 
@@ -584,10 +550,13 @@ class LogQLCompiler(spark: SparkSession, dir: String, params: EvalParams) {
     * class doc. range == step tumbles (plain groupBy, map-side partial
     * agg). range > step explodes each sample over the range/step buckets
     * whose lookback covers it: t ∈ [floorTo(ts), floorTo(ts+range-step)],
-    * clamped to the query grid — shuffle volume grows only by range/step.
-    * `offset` shifts sample timestamps forward (equivalent to shifting the
-    * window back); [[compileRangeAgg]] widens the scan so shifted samples
-    * exist.
+    * clamped to the query grid, so a sample emits at most
+    * min(range/step, grid buckets) rows (one for an instant query). This is
+    * the one plan for every range aggregation: Spark's RANGE-frame window
+    * re-aggregates its whole frame per input row, which goes quadratic on
+    * long ranges. `offset` shifts sample timestamps forward (equivalent to
+    * shifting the window back); [[compileRangeAgg]] widens the scan so
+    * shifted samples exist.
     */
   private def bucketed(df0: DataFrame, rangeNs: Long, offsetNs: Long): DataFrame = {
     val tsEff = col("timestamp_ns") + lit(offsetNs)
@@ -603,81 +572,6 @@ class LogQLCompiler(spark: SparkSession, dir: String, params: EvalParams) {
         explode(when(firstT <= lastT, sequence(firstT, lastT, lit(stepNs)))
           .otherwise(array())))
     }
-  }
-
-  /** range/step ratio above which an LRA evaluates on a RANGE-frame
-    * window instead of the bounded explode (amplification = ratio per
-    * sample; shuffle volume matters more than the window sort at scale).
-    */
-  private def WindowPathRatio: Long =
-    spark.conf.getOption("spark.graft.window.ratio").map(_.toLong)
-      .getOrElse(16L) // override lets tests pit both plans on equal params
-
-  private def rekeyByWithout(ra: RangeAgg, df: DataFrame): DataFrame =
-    if (ra.by.nonEmpty) {
-      val nl = map_filter(col("labels"), (k, _) => k.isInCollection(ra.by))
-      df.withColumn("labels", nl)
-        .withColumn("fingerprint", Tables.fingerprintOf(col("labels")))
-    } else if (ra.without.nonEmpty) {
-      val nl = map_filter(col("labels"), (k, _) => !k.isInCollection(ra.without))
-      df.withColumn("labels", nl)
-        .withColumn("fingerprint", Tables.fingerprintOf(col("labels")))
-    } else df
-
-  /** RANGE-frame LRA: marker rows (null sample columns) carry the eval
-    * grid; each bucket b aggregates samples with
-    * tsEff ∈ [b − range + step, b + step) — the same coverage as
-    * [[bucketed]]'s explode, with no per-sample amplification. Aggregates
-    * are null-ignoring; count rides a non-null `__one` so null unwrap
-    * values still count (as in the explode path's count(lit(1))).
-    */
-  private def windowedRangeAgg(ra: RangeAgg, base: DataFrame): DataFrame = {
-    val rangeNs = ra.range.rangeNs
-    val rangeS = rangeNs / 1e9
-    val rekeyed = rekeyByWithout(ra, base)
-    val gridStart = (params.startNs / stepNs) * stepNs
-    val gridEnd = ((params.endNs - 1) / stepNs) * stepNs
-    val s = rekeyed.select(col("fingerprint"), col("labels"),
-      col("timestamp_ns"), col("value"), col("line"),
-      (col("timestamp_ns") + lit(ra.range.offsetNs)).as("__ord"),
-      lit(1).as("__one"), lit(false).as("__marker"))
-    val markers = rekeyed.groupBy(col("fingerprint"))
-      .agg(first(col("labels")).as("labels"))
-      .withColumn("__ord",
-        explode(sequence(lit(gridStart), lit(gridEnd), lit(stepNs))))
-      .select(col("fingerprint"), col("labels"),
-        lit(null).cast("long").as("timestamp_ns"),
-        lit(null).cast("double").as("value"),
-        lit(null).cast("string").as("line"),
-        col("__ord"), lit(null).cast("int").as("__one"),
-        lit(true).as("__marker"))
-    val w = Window.partitionBy(col("fingerprint")).orderBy(col("__ord"))
-      .rangeBetween(-(rangeNs - stepNs), stepNs - 1)
-    val v: Column = ra.fn match {
-      case "rate"              => count(col("__one")).over(w) / rangeS
-      case "count_over_time"   => count(col("__one")).over(w).cast("double")
-      case "bytes_over_time"   => sum(length(col("line"))).over(w).cast("double")
-      case "bytes_rate"        => sum(length(col("line"))).over(w) / rangeS
-      case "sum_over_time"     => sum(col("value")).over(w)
-      case "avg_over_time"     => avg(col("value")).over(w)
-      case "max_over_time"     => max(col("value")).over(w)
-      case "min_over_time"     => min(col("value")).over(w)
-      case "first_over_time"   => first(col("value"), ignoreNulls = true).over(w)
-      case "last_over_time"    => last(col("value"), ignoreNulls = true).over(w)
-      case "stddev_over_time"  => stddev_pop(col("value")).over(w)
-      case "stdvar_over_time"  => var_pop(col("value")).over(w)
-      case "quantile_over_time" =>
-        if (spark.conf.getOption("spark.graft.quantile.approx").contains("true"))
-          percentile_approx(col("value"), lit(ra.param.get), lit(10000)).over(w)
-        else percentile(col("value"), lit(ra.param.get)).over(w)
-      case other => throw new IllegalArgumentException(s"range fn $other")
-    }
-    s.unionByName(markers)
-      .withColumn("__v", v)
-      .withColumn("__n", count(col("__one")).over(w))
-      .filter(col("__marker") && col("__n") > 0)
-      .select(col("fingerprint"), col("labels"),
-        expr("__ord div 1000000000").as("ts"), col("__v").as("value"))
   }
 
   /** Shared tail of a range aggregation: optional by/without re-keying,
@@ -713,12 +607,6 @@ class LogQLCompiler(spark: SparkSession, dir: String, params: EvalParams) {
     val base = compileLog(ra.range.selector, ra.range.stages, lo, hi)
     if (ra.fn == "absent_over_time") return compileAbsent(ra, base)
 
-    // large range/step: the bucketed explode amplifies every sample
-    // range/step× — switch to a RANGE-frame window over the samples (same
-    // fork and threshold as the PromQL compiler)
-    if (ra.range.rangeNs / stepNs >= WindowPathRatio)
-      return windowedRangeAgg(ra, base)
-
     val b = bucketed(base, ra.range.rangeNs, ra.range.offsetNs)
     val rangeS = ra.range.rangeNs / 1e9
 
@@ -736,11 +624,8 @@ class LogQLCompiler(spark: SparkSession, dir: String, params: EvalParams) {
       case "stddev_over_time"  => stddev_pop(col("value"))
       case "stdvar_over_time"  => var_pop(col("value"))
       case "quantile_over_time" =>
-        // exact interpolated percentile == DuckDB quantile_cont; set
-        // spark.graft.quantile.approx=true for sketch-sized state at 100 TB.
-        if (spark.conf.getOption("spark.graft.quantile.approx").contains("true"))
-          percentile_approx(col("value"), lit(ra.param.get), lit(10000))
-        else percentile(col("value"), lit(ra.param.get))
+        // exact interpolated percentile == DuckDB quantile_cont
+        percentile(col("value"), lit(ra.param.get))
       case other => throw new IllegalArgumentException(s"range fn $other")
     }
 

@@ -25,7 +25,8 @@ final case class PromParams(
   * stage here — but we compile the WHOLE expression, so there is no
   * raw-sample fallback path and no engine/SQL split:
   *
-  *   - `over_time.go:30-127`  → windowed aggs over the eval grid
+  *   - `over_time.go:30-127`  → aggregates per eval point over the
+  *     samples in its window
   *   - `counter.go:62-175`    → rate/increase/delta with counter-reset
   *     compensation: resets = Σ prev·(prev>val) over in-window sample pairs,
   *     value = (last − first + resets)/range
@@ -41,6 +42,13 @@ final case class PromParams(
   * start is attributed only when the previous sample is itself in-window
   * (the reference's staleness-bounded openWnd differs at most by one
   * boundary sample).
+  *
+  * Plan: every range function, and the instant-vector lookback, is one
+  * bounded explode — each sample is copied to the eval points whose
+  * window holds it, at most min(range/step, grid points) of them, and a
+  * groupBy per (series, eval point) aggregates. Spark's RANGE-frame
+  * window is no cheaper alternative: it re-aggregates its whole frame for
+  * every input row, which goes quadratic on long ranges.
   *
   * Frame schema: (fingerprint L, labels M, ts L [epoch sec], value D).
   */
@@ -197,34 +205,12 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
 
   /** Instant vector: at each eval point t, the most recent sample within
     * (t−lookback, t]. Bounded explode: each sample covers at most
-    * lookback/step eval points; groupBy picks the latest per (series, t).
+    * min(lookback/step, grid points) eval points — one for an instant
+    * query; groupBy picks the latest per (series, t).
     */
   private def instantVector(sel: Selector): DataFrame = {
     val off = sel.offsetNs
     val df = scan(sel, gridStart - params.lookbackNs - off, gridEnd + 1 - off)
-    // fine eval grids (lookback/step ≥ threshold, e.g. 1s steps under the
-    // 5m staleness window) explode each sample lookback/step× — use the
-    // RANGE-frame carry instead: last sample in (t−lookback, t]
-    if (params.lookbackNs / stepNs >= WindowPathRatio) {
-      val s = df.select(col("fingerprint"), col("labels"), col("value"),
-        (col("timestamp_ns") + lit(off)).as("__ord"),
-        lit(false).as("__marker"))
-      val markers = df.groupBy(col("fingerprint"))
-        .agg(first(col("labels")).as("labels"))
-        .withColumn("__ord",
-          explode(sequence(lit(gridStart), lit(gridEnd), lit(stepNs))))
-        .select(col("fingerprint"), col("labels"),
-          lit(null).cast("double").as("value"),
-          col("__ord"), lit(true).as("__marker"))
-      val w = Window.partitionBy(col("fingerprint")).orderBy(col("__ord"))
-        .rangeBetween(-(params.lookbackNs - 1), 0)
-      return s.unionByName(markers)
-        .withColumn("__v", last(col("value"), ignoreNulls = true).over(w))
-        .withColumn("__n", count(col("value")).over(w))
-        .filter(col("__marker") && col("__n") > 0)
-        .select(col("fingerprint"), col("labels"),
-          expr("__ord div 1000000000").as("ts"), col("__v").as("value"))
-    }
     val tsEff = col("timestamp_ns") + lit(off)
     val firstT = greatest(ceilTo(tsEff, stepNs), lit(gridStart))
     val lastT = least(floorTo(tsEff + (params.lookbackNs - 1), stepNs), lit(gridEnd))
@@ -274,16 +260,6 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
 
   // --- functions ---------------------------------------------------------
 
-
-  /** Exact interpolated percentile by default (bit-matches the DuckDB
-    * oracle); spark.graft.quantile.approx=true swaps in the bounded-state
-    * sketch for 100 TB runs — same knob as the LogQL compiler.
-    */
-  private def pctile(v: Column, q: Column): Column =
-    if (spark.conf.getOption("spark.graft.quantile.approx").contains("true"))
-      percentile_approx(v, q, lit(10000))
-    else percentile(v, q)
-
   private def compileFn(f: FnCall): DataFrame = {
     // `@` on the argument selector/subquery: run the whole function pinned,
     // spread across the real grid
@@ -310,7 +286,7 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
 
     case "quantile_over_time" =>
       val NumLit(q) = f.args.head: @unchecked
-      overTime("quantile_over_time", f.args(1), pctile(col("value"), lit(q)))
+      overTime("quantile_over_time", f.args(1), percentile(col("value"), lit(q)))
 
     case fn if RangeFns.contains(fn) =>
       val arg = f.args.head
@@ -532,8 +508,8 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
     * the IDENTICAL fold via list_reduce, so the arithmetic order (and thus
     * every double) matches bit for bit.
     */
-  /** Holt fold over a time-ordered value array (shared by the explode
-    * and RANGE-frame plans — identical arithmetic order on both).
+  /** Holt fold over a time-ordered value array (the caller sorts the
+    * in-window samples by time, so the fold order is the oracle's).
     */
   private def holtValue(vals: Column, sf: Double, tf: Double): Column = {
     val posed = transform(vals, (v, i) =>
@@ -556,47 +532,7 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
     folded.getField("s1")
   }
 
-  private def holtWintersWindowed(samples: DataFrame, rangeNs: Long,
-      offNs: Long, sf: Double, tf: Double): DataFrame = {
-    val s = samples.select(col("fingerprint"), col("labels"),
-      struct((col("timestamp_ns") + lit(offNs)).as("ts"),
-        col("value").as("v")).as("__s"),
-      (col("timestamp_ns") + lit(offNs)).as("__ord"),
-      lit(false).as("__marker"))
-    val markers = samples.groupBy(col("fingerprint"))
-      .agg(first(col("labels")).as("labels"))
-      .withColumn("__ord",
-        explode(sequence(lit(gridStart), lit(gridEnd), lit(stepNs))))
-      .select(col("fingerprint"), col("labels"),
-        lit(null).cast(s.schema("__s").dataType).as("__s"),
-        col("__ord"), lit(true).as("__marker"))
-    val w = Window.partitionBy(col("fingerprint")).orderBy(col("__ord"))
-      .rangeBetween(-(rangeNs - 1), 0)
-    val agg = s.unionByName(markers)
-      .withColumn("__svs", collect_list(col("__s")).over(w))
-      .filter(col("__marker") && size(col("__svs")) >= 2)
-    val vals = transform(col("__svs"), x => x.getField("v"))
-    dropName(agg.select(col("fingerprint"), col("labels"),
-      expr("__ord div 1000000000").as("ts"),
-      holtValue(vals, sf, tf).as("value")))
-  }
-
   private def holtWinters(arg: PExpr, sf: Double, tf: Double): DataFrame = {
-    // large range/step: collect the in-window samples with a RANGE frame
-    // (frame order is time order, so the array arrives sorted) instead of
-    // exploding each sample into range/step eval points
-    arg match {
-      case sel: Selector if sel.rangeNs.exists(_ / stepNs >= WindowPathRatio) =>
-        val r = sel.rangeNs.get
-        return holtWintersWindowed(
-          scan(sel, gridStart - r - sel.offsetNs, gridEnd + 1 - sel.offsetNs)
-            .select(col("fingerprint"), col("labels"),
-              col("timestamp_ns"), col("value")),
-          r, sel.offsetNs, sf, tf)
-      case sq: Subquery if sq.rangeNs / stepNs >= WindowPathRatio =>
-        return holtWintersWindowed(subquerySamples(sq), sq.rangeNs, 0L, sf, tf)
-      case _ =>
-    }
     val frame = arg match {
       case sel: Selector => rangeFrame(sel)
       case sq: Subquery  => subqueryFrame(sq)
@@ -623,22 +559,6 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
     * closed form DuckDB's regr_slope/regr_intercept use.
     */
   private def regressionFn(fn: String, arg: PExpr, predictS: Double): DataFrame = {
-    // the regression moments are translation-invariant in x, so the
-    // RANGE-frame plan computes them on absolute sample time and shifts
-    // the mean by the eval point afterwards — same fork as over_time
-    arg match {
-      case sel: Selector if sel.rangeNs.exists(_ / stepNs >= WindowPathRatio) =>
-        val r = sel.rangeNs.get
-        return regressionWindowed(fn,
-          scan(sel, gridStart - r - sel.offsetNs, gridEnd + 1 - sel.offsetNs)
-            .select(col("fingerprint"), col("labels"),
-              col("timestamp_ns"), col("value")),
-          r, sel.offsetNs, predictS)
-      case sq: Subquery if sq.rangeNs / stepNs >= WindowPathRatio =>
-        return regressionWindowed(fn, subquerySamples(sq), sq.rangeNs, 0L,
-          predictS)
-      case _ =>
-    }
     val (frame, offNs) = arg match {
       case sel: Selector =>
         sel.rangeNs.getOrElse(
@@ -666,49 +586,6 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
         expr("t_ns div 1000000000").as("ts"), v.as("value")))
   }
 
-  /** RANGE-frame deriv / predict_linear: covar/var/means over the frame
-    * with x = absolute sample seconds; slope is translation-invariant and
-    * the intercept at the eval point is ym − slope·(mean(x) − t).
-    */
-  private def regressionWindowed(fn: String, samples: DataFrame,
-      rangeNs: Long, offNs: Long, predictS: Double): DataFrame = {
-    // x anchored at gridStart, not the epoch: slope/var/cov are
-    // translation-invariant and the smaller magnitudes keep the moment
-    // arithmetic well-conditioned
-    val s = samples.select(col("fingerprint"), col("labels"),
-      ((col("timestamp_ns") + lit(offNs) - lit(gridStart)).cast("double") / 1e9)
-        .as("__x"),
-      col("value"),
-      (col("timestamp_ns") + lit(offNs)).as("__ord"),
-      lit(false).as("__marker"))
-    val markers = samples.groupBy(col("fingerprint"))
-      .agg(first(col("labels")).as("labels"))
-      .withColumn("__ord",
-        explode(sequence(lit(gridStart), lit(gridEnd), lit(stepNs))))
-      .select(col("fingerprint"), col("labels"),
-        lit(null).cast("double").as("__x"),
-        lit(null).cast("double").as("value"),
-        col("__ord"), lit(true).as("__marker"))
-    val w = Window.partitionBy(col("fingerprint")).orderBy(col("__ord"))
-      .rangeBetween(-(rangeNs - 1), 0)
-    val agg = s.unionByName(markers)
-      .withColumn("__n", count(col("value")).over(w))
-      .withColumn("__cov", covar_pop(col("__x"), col("value")).over(w))
-      .withColumn("__var", var_pop(col("__x")).over(w))
-      .withColumn("__xm", avg(col("__x")).over(w))
-      .withColumn("__ym", avg(col("value")).over(w))
-      .filter(col("__marker") && col("__n") >= 2 && col("__var") > 0)
-    val slope = col("__cov") / col("__var")
-    val tSec = (col("__ord") - lit(gridStart)).cast("double") / 1e9
-    val v = fn match {
-      case "deriv"          => slope
-      case "predict_linear" =>
-        col("__ym") - slope * (col("__xm") - tSec) + slope * predictS
-    }
-    dropName(agg.select(col("fingerprint"), col("labels"),
-      expr("__ord div 1000000000").as("ts"), v.as("value")))
-  }
-
   /** over_time fns whose re-aggregation from 15s partials is EXACT
     * (order-independent): these route to the downsample table. sum/avg/
     * stddev stay on raw samples — FP summation over partials associates
@@ -717,15 +594,6 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
   private val DownsampleFns =
     Set("count_over_time", "min_over_time", "max_over_time",
       "last_over_time", "present_over_time")
-
-  /** range/step ratio at which *_over_time switches from the bounded
-    * explode (amplification = ratio per sample) to the RANGE-frame window
-    * plan (no amplification, one sort per series). Conf-overridable so
-    * tests can pit both plans on identical params.
-    */
-  private def WindowPathRatio: Long =
-    spark.conf.getOption("spark.graft.window.ratio").map(_.toLong)
-      .getOrElse(16L)
 
   private def downsampleEligible(fn: String, sel: Selector): Boolean = {
     val q = 15000000000L
@@ -770,41 +638,6 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
     // grid boundaries in this model — µs-truncated event times — so the
     // open/closed edge conventions coincide)
     val bucketNs = 15000000000L
-    if (rangeNs / stepNs >= WindowPathRatio) {
-      // RANGE-frame plan over the partials (same fork as the raw path):
-      // marker at t aggregates buckets with b+off ∈ [t-range, t-15s]
-      val s = df.select(col("fingerprint"), col("labels"), tsEff.as("__ord"),
-        col("cnt"), col("min"), col("max"), col("last"),
-        lit(false).as("__marker"))
-      val markers = df.groupBy(col("fingerprint"))
-        .agg(first(col("labels")).as("labels"))
-        .withColumn("__ord",
-          explode(sequence(lit(gridStart), lit(gridEnd), lit(stepNs))))
-        .select(col("fingerprint"), col("labels"), col("__ord"),
-          lit(null).cast("long").as("cnt"),
-          lit(null).cast("double").as("min"),
-          lit(null).cast("double").as("max"),
-          lit(null).cast("double").as("last"),
-          lit(true).as("__marker"))
-      val w = Window.partitionBy(col("fingerprint")).orderBy(col("__ord"))
-        .rangeBetween(-rangeNs, -bucketNs)
-      val v: Column = fn match {
-        // the cast goes OUTSIDE .over: a window wraps the aggregate itself,
-        // and an aggregate under a cast reads as a plain (group-by) one
-        case "count_over_time"   => sum(col("cnt")).over(w).cast("double")
-        case "min_over_time"     => min(col("min")).over(w)
-        case "max_over_time"     => max(col("max")).over(w)
-        // per-series buckets are time-ordered, so frame-last = latest bucket
-        case "last_over_time"    => last(col("last"), ignoreNulls = true).over(w)
-        case "present_over_time" => lit(1.0)
-      }
-      return dropName(s.unionByName(markers)
-        .withColumn("__v", v)
-        .withColumn("__n", count(col("cnt")).over(w))
-        .filter(col("__marker") && col("__n") > 0)
-        .select(col("fingerprint"), col("labels"),
-          expr("__ord div 1000000000").as("ts"), col("__v").as("value")))
-    }
     val firstT = greatest(ceilTo(tsEff + bucketNs, stepNs), lit(gridStart))
     val lastT = least(floorTo(tsEff + rangeNs, stepNs), lit(gridEnd))
     val exploded = df.withColumn("t_ns",
@@ -837,24 +670,6 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
         }
       case _ =>
     }
-    // large range/step: the explode amplifies each sample range/step× —
-    // a [6h:15s]-shaped window at a 15min eval step is 24 rows per inner
-    // point. Above the threshold, switch to a RANGE-frame window over the
-    // raw samples (`over_time.go:30-127` uses a range frame for the same
-    // reason): shuffle volume stays #samples + #eval points per series
-    // instead of #samples × ratio.
-    arg match {
-      case sel: Selector if sel.rangeNs.exists(_ / stepNs >= WindowPathRatio) =>
-        val r = sel.rangeNs.get
-        return overTimeWindowed(fn,
-          scan(sel, gridStart - r - sel.offsetNs, gridEnd + 1 - sel.offsetNs)
-            .select(col("fingerprint"), col("labels"),
-              col("timestamp_ns"), col("value")),
-          r, sel.offsetNs, agg)
-      case sq: Subquery if sq.rangeNs / stepNs >= WindowPathRatio =>
-        return overTimeWindowed(fn, subquerySamples(sq), sq.rangeNs, 0L, agg)
-      case _ =>
-    }
     val frame = arg match {
       case sel: Selector => rangeFrame(sel)
       case sq: Subquery  => subqueryFrame(sq)
@@ -867,57 +682,10 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
         expr("t_ns div 1000000000").as("ts"), col("value")))
   }
 
-  /** RANGE-frame evaluation of *_over_time: union the samples with one
-    * null-valued marker row per (series, eval point), sort each series once
-    * by effective time, and evaluate the aggregate over the frame
-    * (t−range, t] — marker rows contribute nothing (null value) and carry
-    * the result out. Empty windows (no sample in frame) are dropped,
-    * matching the explode path where such eval points never materialize.
-    */
-  private def overTimeWindowed(fn: String, samples: DataFrame, rangeNs: Long,
-      offNs: Long, agg: Column): DataFrame = {
-    val s = samples.select(col("fingerprint"), col("labels"),
-      col("timestamp_ns"), col("value"),
-      (col("timestamp_ns") + lit(offNs)).as("__ord"),
-      lit(false).as("__marker"))
-    val markers = samples.groupBy(col("fingerprint"))
-      .agg(first(col("labels")).as("labels"))
-      .withColumn("__ord",
-        explode(sequence(lit(gridStart), lit(gridEnd), lit(stepNs))))
-      .select(col("fingerprint"), col("labels"),
-        lit(null).cast("long").as("timestamp_ns"),
-        lit(null).cast("double").as("value"),
-        col("__ord"), lit(true).as("__marker"))
-    val w = Window.partitionBy(col("fingerprint")).orderBy(col("__ord"))
-      .rangeBetween(-(rangeNs - 1), 0)
-    // count(lit(1))/max_by/lit(1.0) would see the marker rows; substitute
-    // null-ignoring equivalents for those three, reuse the caller's
-    // aggregate (all null-ignoring) otherwise
-    val v: Column = fn match {
-      case "count_over_time"   => count(col("value")).over(w).cast("double")
-      case "last_over_time"    => last(col("value"), ignoreNulls = true).over(w)
-      case "present_over_time" => lit(1.0)
-      case _                   => agg.over(w)
-    }
-    dropName(s.unionByName(markers)
-      .withColumn("__v", v)
-      .withColumn("__n", count(col("value")).over(w))
-      .filter(col("__marker") && col("__n") > 0)
-      .select(col("fingerprint"), col("labels"),
-        expr("__ord div 1000000000").as("ts"), col("__v").as("value")))
-  }
-
-  /** Subquery frame: evaluate the inner expression on the finer
-    * [range:step] grid (widened left by `range` so the first outer windows
-    * are complete), then assign each inner eval point to the outer windows
-    * (t−range, t] that contain it — the inner points act as samples.
-    */
-  /** Inner subquery eval as plain samples (fingerprint, labels,
-    * timestamp_ns, value) on the finer grid, widened left by `range`.
-    */
-  /** Inner eval points of `expr[r:s]` as samples on the OUTER timeline:
-    * with `offset o` the inner grid shifts back by o and the returned
-    * timestamps shift forward by o, so every downstream window/frame
+  /** Inner eval points of `expr[r:s]` as samples (fingerprint, labels,
+    * timestamp_ns, value) on the OUTER timeline, on the finer grid widened
+    * left by `range`: with `offset o` the inner grid shifts back by o and
+    * the returned timestamps shift forward by o, so every downstream frame
     * treats them exactly like offset-adjusted selector samples.
     */
   private def subquerySamples(sq: Subquery): DataFrame = {
@@ -932,6 +700,9 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
     inner.select(col("fingerprint"), col("labels"), tsNs, col("value"))
   }
 
+  /** Subquery frame: assign each inner eval point to the outer windows
+    * (t−range, t] that contain it — the inner points act as samples.
+    */
   private def subqueryFrame(sq: Subquery): DataFrame = {
     val withTs = subquerySamples(sq)
     // prev columns so counter functions work over subqueries too
@@ -954,22 +725,6 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
     * compensation; resets/changes count transitions instead.
     */
   private def counterFn(fn: String, arg: PExpr): DataFrame = {
-    // same large-range/step fork as *_over_time: above the ratio the
-    // explode amplifies every sample range/step×, so evaluate on a RANGE
-    // frame instead (counter semantics need one extra correction — see
-    // counterFnWindowed)
-    arg match {
-      case sel: Selector if sel.rangeNs.exists(_ / stepNs >= WindowPathRatio) =>
-        val r = sel.rangeNs.get
-        return counterFnWindowed(fn,
-          scan(sel, gridStart - r - sel.offsetNs, gridEnd + 1 - sel.offsetNs)
-            .select(col("fingerprint"), col("labels"),
-              col("timestamp_ns"), col("value")),
-          r, sel.offsetNs)
-      case sq: Subquery if sq.rangeNs / stepNs >= WindowPathRatio =>
-        return counterFnWindowed(fn, subquerySamples(sq), sq.rangeNs, 0L)
-      case _ =>
-    }
     val (frame, rangeNs, offNs) = arg match {
       case sel: Selector => (rangeFrame(sel), sel.rangeNs.getOrElse(
         throw new IllegalArgumentException(s"$fn needs a range vector")), sel.offsetNs)
@@ -1015,85 +770,6 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
     }
     dropName(filtered.select(col("fingerprint"), col("labels"),
       expr("t_ns div 1000000000").as("ts"), v.as("value")))
-  }
-
-  /** RANGE-frame counter evaluation. Each sample carries its in-series
-    * prev pair (lag); per eval point the frame (t−range, t] yields n,
-    * first/last sample structs, and pair sums. One correction vs the
-    * frame sums: only the FIRST in-window sample can have its prev
-    * OUTSIDE the window (samples are time-ordered per series, so every
-    * later sample's prev is itself in-window) — when it does, that pair's
-    * reset/change contribution is subtracted, which reproduces the
-    * explode path's prev_in_window condition exactly.
-    */
-  private def counterFnWindowed(fn: String, samples: DataFrame,
-      rangeNs: Long, offNs: Long): DataFrame = {
-    val rangeS = rangeNs / 1e9
-    val wSeries = Window.partitionBy(col("fingerprint"))
-      .orderBy(col("timestamp_ns"))
-    val sp = samples
-      .withColumn("prev_ts", lag(col("timestamp_ns"), 1).over(wSeries))
-      .withColumn("prev_val", lag(col("value"), 1).over(wSeries))
-    val s = sp.select(col("fingerprint"), col("labels"),
-      struct(col("timestamp_ns").as("ts"), col("value").as("v"),
-        col("prev_ts").as("pts"), col("prev_val").as("pv")).as("__s"),
-      (col("timestamp_ns") + lit(offNs)).as("__ord"),
-      lit(false).as("__marker"))
-    val markers = samples.groupBy(col("fingerprint"))
-      .agg(first(col("labels")).as("labels"))
-      .withColumn("__ord",
-        explode(sequence(lit(gridStart), lit(gridEnd), lit(stepNs))))
-      .select(col("fingerprint"), col("labels"),
-        lit(null).cast(s.schema("__s").dataType).as("__s"),
-        col("__ord"), lit(true).as("__marker"))
-    val w = Window.partitionBy(col("fingerprint")).orderBy(col("__ord"))
-      .rangeBetween(-(rangeNs - 1), 0)
-    val sv = col("__s")
-    val drop = sv.getField("pv") > sv.getField("v") // null prev → false branch
-    val chg = sv.getField("pv") =!= sv.getField("v")
-    val agg = s.unionByName(markers)
-      .withColumn("__n", count(sv).over(w))
-      .withColumn("__fs", first(sv, ignoreNulls = true).over(w))
-      .withColumn("__ls", last(sv, ignoreNulls = true).over(w))
-      .withColumn("__drops",
-        sum(when(drop, sv.getField("pv")).otherwise(0.0)).over(w))
-      .withColumn("__nresets", sum(when(drop, 1.0).otherwise(0.0)).over(w))
-      .withColumn("__nchanges", sum(when(chg, 1.0).otherwise(0.0)).over(w))
-      .filter(col("__marker") && col("__n") > 0)
-    val fs = col("__fs")
-    val ls = col("__ls")
-    val firstPrevOut = !coalesce(
-      fs.getField("pts") + offNs > col("__ord") - rangeNs, lit(false))
-    val fDrop = coalesce(fs.getField("pv") > fs.getField("v"), lit(false))
-    val fChg = coalesce(fs.getField("pv") =!= fs.getField("v"), lit(false))
-    val resetComp = col("__drops") -
-      when(firstPrevOut && fDrop, fs.getField("pv")).otherwise(0.0)
-    val resets = col("__nresets") -
-      when(firstPrevOut && fDrop, 1.0).otherwise(0.0)
-    val changes = col("__nchanges") -
-      when(firstPrevOut && fChg, 1.0).otherwise(0.0)
-    val lastPairIn = coalesce(
-      ls.getField("pts") + offNs > col("__ord") - rangeNs, lit(false))
-    val filtered = fn match {
-      case "rate" | "increase" | "delta" => agg.filter(col("__n") >= 2)
-      case "irate" | "idelta"            => agg.filter(lastPairIn)
-      case _                             => agg
-    }
-    val idt = (ls.getField("ts") - ls.getField("pts")) / 1e9
-    val v = fn match {
-      case "rate"     => (ls.getField("v") - fs.getField("v") + resetComp) / rangeS
-      case "increase" => ls.getField("v") - fs.getField("v") + resetComp
-      case "delta"    => ls.getField("v") - fs.getField("v")
-      case "irate"    =>
-        when(ls.getField("v") >= ls.getField("pv"),
-          ls.getField("v") - ls.getField("pv"))
-          .otherwise(ls.getField("v")) / idt
-      case "idelta"   => ls.getField("v") - ls.getField("pv")
-      case "resets"   => resets
-      case "changes"  => changes
-    }
-    dropName(filtered.select(col("fingerprint"), col("labels"),
-      expr("__ord div 1000000000").as("ts"), v.as("value")))
   }
 
   /** histogram_quantile over `le`-labeled cumulative buckets: group by
@@ -1202,7 +878,7 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
           case "group"    => first(lit(1.0))
           case "stddev"   => stddev_pop(col("value"))
           case "stdvar"   => var_pop(col("value"))
-          case "quantile" => pctile(col("value"), lit(a.param.get))
+          case "quantile" => percentile(col("value"), lit(a.param.get))
         }
         rekeyed
           .withColumn("fingerprint", Tables.fingerprintOf(col("labels")))

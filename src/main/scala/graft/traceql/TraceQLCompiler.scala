@@ -479,10 +479,7 @@ class TraceQLCompiler(spark: SparkSession, dir: String,
       case "quantile_over_time" =>
         withTarget
           .groupBy(keyCols :+ bucket.as("bucket_ns"): _*)
-          .agg((if (spark.conf.getOption("spark.graft.quantile.approx")
-              .contains("true"))
-            percentile_approx(target, lit(m.param.get), lit(10000))
-          else percentile(target, lit(m.param.get))).as("value"))
+          .agg(percentile(target, lit(m.param.get)).as("value"))
           .select(keyCols ++ Seq(
             expr("bucket_ns div 1000000000").as("ts"), col("value")): _*)
       case "histogram_over_time" =>

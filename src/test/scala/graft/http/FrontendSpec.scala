@@ -588,6 +588,40 @@ class FrontendSpec extends SparkSpec {
       (200, """{"status":"success","data":{"version":""}}"""))
   }
 
+  test("loki instant metric query evaluates the one window ending at time") {
+    // a COPY of the fixture dir: the pushes mutate its store
+    val tmp = java.nio.file.Files.createTempDirectory("graft-instant").toFile
+    tmp.deleteOnExit()
+    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
+      java.nio.file.Files.copy(f.toPath,
+        new java.io.File(tmp, f.getName).toPath)
+    val srv = new Frontend(spark, tmp.getAbsolutePath).start(0)
+    try {
+      val b = s"http://127.0.0.1:${srv.getAddress.getPort}"
+      def push(host: String, tS: Long): Int =
+        client.send(HttpRequest.newBuilder(URI.create(b + "/loki/api/v1/push"))
+          .POST(HttpRequest.BodyPublishers.ofString(
+            s"""{"streams":[{"stream":{"event_type":"instant","host":"$host"},
+               |"values":[["${tS}000000000","line"]]}]}"""
+              .stripMargin.replace("\n", ""))).build(),
+          HttpResponse.BodyHandlers.ofString()).statusCode()
+      // `fresh` has a line inside the [1m] window ending at EndS; `stale`
+      // only 200 s before EndS, in [EndS−range−300s, EndS−range)
+      assert(push("fresh", EndS - 30) == 204)
+      assert(push("stale", EndS - 200) == 204)
+      val r = client.send(HttpRequest.newBuilder(URI.create(b +
+          "/loki/api/v1/query?query=" +
+          enc("""sum by (host) (count_over_time({event_type="instant"}[1m]))""") +
+          s"&time=$EndS")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200, r.body())
+      assert(!r.body().contains("stale"), r.body())
+      assert(r.body() == """{"status":"success","data":{"resultType":"vector",""" +
+        s""""result":[{"metric":{"host":"fresh"},"value":[$EndS,"1"]}]}}""",
+        r.body())
+    } finally srv.stop(0)
+  }
+
   test("rules CRUD over HTTP: YAML group lifecycle, Prometheus-format " +
       "listing with health, and alert rules posted through it evaluate") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-rules").toFile

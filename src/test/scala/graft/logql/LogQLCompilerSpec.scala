@@ -134,23 +134,20 @@ class LogQLCompilerSpec extends SparkSpec {
     assert(c2 > c1 && c2 <= 2 * c1)
   }
 
-  test("windowed LRA plan equals explode plan on identical params") {
+  // The pinned figures were read where a RANGE-frame window plan and the
+  // bounded explode both evaluated this query and agreed on them; the
+  // explode is now the one plan.
+  test("unwrap range aggregation at range/step 24 returns the pinned values") {
     import graft.logql.LogQLParser
     val q = """sum by (user) (sum_over_time({event_type="click"} | json | unwrap k [6h]))"""
     val eng = new LogQLCompiler(spark, sf,
       EvalParams(StartNs, StartNs + 2 * 86400L * 1000000000L, 900L))
-    def run() = eng.compileMetric(LogQLParser.parseOrThrow(q))
-      .select(element_at(col("labels"), "user").as("u"), col("ts"),
-        round(col("value"), 6).as("v"))
-      .orderBy("u", "ts").collect()
-    val windowed = run() // ratio 24 >= 16 -> RANGE frame
-    assert(eng.compileMetric(LogQLParser.parseOrThrow(q))
-      .queryExecution.executedPlan.toString.contains("RangeFrame"))
-    spark.conf.set("spark.graft.window.ratio", "1000000")
-    try {
-      val exploded = run()
-      assert(windowed.length == exploded.length && windowed.nonEmpty)
-      windowed.zip(exploded).foreach { case (a, b) => assert(a == b) }
-    } finally spark.conf.unset("spark.graft.window.ratio")
+    val df = eng.compileMetric(LogQLParser.parseOrThrow(q))
+    assert(!df.queryExecution.executedPlan.toString.contains("RangeFrame"))
+    val r = df.agg(count(lit(1)), sum("ts"), sum(round(col("value"), 6)))
+      .collect()(0)
+    assert(r.getLong(0) == 210L, "rows")
+    assert(r.getLong(1) == 357874953300L, "eval points")
+    assert(math.abs(r.getDouble(2) - 11430.0) < 1e-9, "value sum")
   }
 }

@@ -135,23 +135,19 @@ class PromQLSpec extends SparkSpec {
     assert(df.count() < 121)
   }
 
-  test("large range/step over_time takes the RANGE-frame window plan and matches explode") {
-    // ratio 12h/15min = 48 ≥ threshold → windowed; same query at the 6h
-    // step (ratio 2) stays on the explode plan; results must agree where
-    // grids coincide
+  test("range/step 48 and 2 over_time take the explode plan and agree where grids coincide") {
+    // ratio 12h/15min = 48 on the fine grid, 12h/6h = 2 on the coarse
+    // one: both compile to the bounded explode (a Generate, no RANGE
+    // frame); results must agree where grids coincide
     val fine = new PromQLCompiler(spark, sf,
       PromParams(StartNs, EndNs, 900L))
       .compile("""max_over_time(events_value{event_type="click"}[12h])""")
     val coarse = engine
       .compile("""max_over_time(events_value{event_type="click"}[12h])""")
-    val finePlan = fine.queryExecution.executedPlan.toString
-    val coarsePlan = coarse.queryExecution.executedPlan.toString
-    // the window path still contains one bounded Generate (the marker
-    // grid, #series × #eval points) — the plan discriminator is the RANGE
-    // frame, absent from the per-sample explode plan
-    assert(finePlan.contains("RangeFrame"), "expected window plan")
-    assert(!coarsePlan.contains("RangeFrame"), "low ratio keeps explode plan")
-    assert(coarsePlan.contains("Generate"), "low ratio explodes")
+    for (plan <- Seq(fine, coarse).map(_.queryExecution.executedPlan.toString)) {
+      assert(!plan.contains("RangeFrame"), "no RANGE-frame window plan")
+      assert(plan.contains("Generate"), "explode plan")
+    }
     // coarse grid ⊂ fine grid: values at shared eval points identical
     val f = fine.select(col("ts"), col("value").as("vf"))
     val joined = coarse.select(col("ts"), col("value").as("vc"))
@@ -161,89 +157,68 @@ class PromQLSpec extends SparkSpec {
   }
 
   test("windowed counter path matches explode path where grids coincide") {
+    // the fine grid (range/step 48: each sample in 48 overlapping
+    // windows) against the coarse one (range/step 2), one plan for both
     val q = """increase(events_total{event_type="click"}[12h])"""
     val fine = new PromQLCompiler(spark, sf, PromParams(StartNs, EndNs, 900L))
-      .compile(q) // ratio 48 → RANGE-frame counter plan
-    val coarse = engine.compile(q) // ratio 2 → explode plan
-    assert(fine.queryExecution.executedPlan.toString.contains("RangeFrame"))
+      .compile(q)
+    val coarse = engine.compile(q)
+    assert(!fine.queryExecution.executedPlan.toString.contains("RangeFrame"))
     val joined = coarse.select(col("ts"), col("value").as("vc"))
       .join(fine.select(col("ts"), col("value").as("vf")), Seq("ts"))
     assert(joined.count() > 0)
     assert(joined.filter(abs(col("vf") - col("vc")) > 1e-9).count() == 0)
   }
 
-  test("windowed instant-vector and holt paths match explode on identical params") {
-    // instant: lookback 5m at 15s steps (ratio 20) over 6h;
-    // holt: 12h range at 15min steps (ratio 48) over the month
-    val cases = Seq(
-      ("""events_value{event_type="click"}""",
-        PromParams(StartNs, StartNs + 6L * 3600 * 1000000000L, 15L)),
-      ("""holt_winters(events_value{event_type="click"}[12h], 0.5, 0.3)""",
-        PromParams(StartNs, EndNs, 900L)),
-      ("""quantile_over_time(0.5, events_value{event_type="click"}[12h])""",
-        PromParams(StartNs, EndNs, 900L)),
-      ("""stddev_over_time(events_value{event_type="click"}[12h])""",
-        PromParams(StartNs, EndNs, 900L)))
-    for ((q, params) <- cases) {
-      val eng = new PromQLCompiler(spark, sf, params)
-      def run() = eng.compile(q)
-        .select(col("ts"), col("value")).orderBy("ts").collect()
-      val windowed = run() // lookback 300/900? — instant uses lookback/step
-      spark.conf.set("spark.graft.window.ratio", "1000000")
-      try {
-        val exploded = run()
-        assert(windowed.length == exploded.length, q)
-        windowed.zip(exploded).foreach { case (a, b) =>
-          assert(a.getLong(0) == b.getLong(0), q)
-          assert(math.abs(a.getDouble(1) - b.getDouble(1)) <=
-            1e-9 * math.max(1.0, math.abs(b.getDouble(1))), q)
-        }
-      } finally spark.conf.unset("spark.graft.window.ratio")
-    }
+  /** Checks (rows, Σ ts, Σ value) of a query's result. */
+  private def assertDigest(params: PromParams, q: String,
+      want: (Long, Long, Double)): Unit = {
+    val r = new PromQLCompiler(spark, sf, params).compile(q)
+      .agg(count(lit(1)), sum("ts"), sum("value")).collect()(0)
+    val v = r.getDouble(2)
+    assert(r.getLong(0) == want._1, s"$q rows")
+    assert(r.getLong(1) == want._2, s"$q eval points")
+    assert(math.abs(v - want._3) <= 1e-9 * math.max(1.0, math.abs(want._3)),
+      s"$q value sum $v, want ${want._3}")
   }
 
-  test("windowed regression path matches explode path on identical params") {
-    val q = """predict_linear(events_value{event_type="click"}[12h], 600)"""
-    val eng = new PromQLCompiler(spark, sf, PromParams(StartNs, EndNs, 900L))
-    def run() = eng.compile(q)
-      .select(col("ts"), col("value")).orderBy("ts").collect()
-    val windowed = run() // ratio 48 → RANGE frame
-    spark.conf.set("spark.graft.window.ratio", "1000000")
-    try {
-      val exploded = run()
-      assert(windowed.length == exploded.length && windowed.nonEmpty)
-      windowed.zip(exploded).foreach { case (a, b) =>
-        assert(a.getLong(0) == b.getLong(0))
-        // absolute-epoch x loses a few ulps vs the t-centered explode
-        // formulation; the moments are still stable to ~1e-9 relative
-        assert(math.abs(a.getDouble(1) - b.getDouble(1)) <=
-          1e-6 + 1e-7 * math.abs(b.getDouble(1)),
-          s"${a.getDouble(1)} vs ${b.getDouble(1)}")
-      }
-    } finally spark.conf.unset("spark.graft.window.ratio")
+  // The pinned figures below were read where a RANGE-frame window plan and
+  // the bounded explode both evaluated these queries and agreed on them;
+  // the explode is now the one plan.
+  test("instant-vector, holt, quantile and stddev return the pinned values " +
+      "at lookback/step 20 and range/step 48") {
+    // instant: 5m lookback at 15s steps over the month's last day
+    assertDigest(PromParams(EndNs - 86400L * 1000000000L, EndNs, 15L),
+      """events_value{event_type="click"}""", (140L, 238924379550L, 6923.0))
+    val month900 = PromParams(StartNs, EndNs, 900L)
+    assertDigest(month900,
+      """holt_winters(events_value{event_type="click"}[12h], 0.5, 0.3)""",
+      (2359L, 4022988573600L, 116790.57422987712))
+    assertDigest(month900,
+      """quantile_over_time(0.5, events_value{event_type="click"}[12h])""",
+      (2728L, 4652261184600L, 116275.00000000083))
+    assertDigest(month900,
+      """stddev_over_time(events_value{event_type="click"}[12h])""",
+      (2728L, 4652261184600L, 81434.89193304956))
   }
 
-  test("count_over_time: windowed and explode plans agree at range/step 16 " +
-      "and 4, over the 15s downsample and over raw samples") {
-    // events_value routes to the 15s partials, events_total stays raw. A
-    // count's cast must sit outside its window: under the cast the
-    // aggregate read as a plain one and analysis failed with
-    // MISSING_GROUP_BY once range/step reached the window ratio (16)
-    val eng = new PromQLCompiler(spark, sf, PromParams(StartNs, EndNs, 900L))
-    def run(q: String, ratio: Option[String]): Seq[(String, Long, Double)] = {
-      ratio.foreach(spark.conf.set("spark.graft.window.ratio", _))
-      try eng.compile(q)
-        .select(to_json(col("labels")), col("ts"), col("value")).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
-      finally spark.conf.unset("spark.graft.window.ratio")
-    }
-    for (name <- Seq("events_value", "events_total");
-         range <- Seq("4h", "1h")) { // range/step 16 and 4
-      val q = s"""count_over_time($name{event_type="click"}[$range])"""
-      val exploded = run(q, Some("1000000"))
-      assert(exploded.nonEmpty, q)
-      assert(run(q, None) == exploded, q) // default ratio 16
-      assert(run(q, Some("4")) == exploded, q) // both ranges windowed
+  test("predict_linear returns the pinned values at range/step 48") {
+    assertDigest(PromParams(StartNs, EndNs, 900L),
+      """predict_linear(events_value{event_type="click"}[12h], 600)""",
+      (2359L, 4022988573600L, 95350.92287886626))
+  }
+
+  test("count_over_time returns the pinned values at range/step 16 and 4, " +
+      "over the 15s downsample and over raw samples") {
+    // events_value routes to the 15s partials, events_total stays raw.
+    // range/step 16 once failed analysis with MISSING_GROUP_BY: a count
+    // cast sat between its aggregate and a window
+    val month900 = PromParams(StartNs, EndNs, 900L)
+    for (name <- Seq("events_value", "events_total")) {
+      assertDigest(month900, s"""count_over_time($name{event_type="click"}[4h])""",
+        (1840L, 3137949790200L, 3360.0))
+      assertDigest(month900, s"""count_over_time($name{event_type="click"}[1h])""",
+        (711L, 1212534395100L, 840.0))
     }
   }
 
