@@ -89,8 +89,7 @@ object DevEndurance {
     def census(): (Int, Int) = {
       def walk(f: java.io.File): Seq[java.io.File] = {
         val kids = Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-        val dirs = kids.filter(d => d.isDirectory && !d.getName.endsWith(".compact")
-          && !d.getName.endsWith(".old"))
+        val dirs = kids.filter(_.isDirectory)
         if (dirs.isEmpty) Seq(f) else dirs.toSeq.flatMap(walk)
       }
       val tables = Seq("samples", "metrics_15s", "time_series",

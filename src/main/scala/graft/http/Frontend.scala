@@ -3,6 +3,8 @@ package graft.http
 import java.net.URLDecoder
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -320,10 +322,10 @@ class Frontend(private[http] val spark: SparkSession, dir: String,
     * upgrade ([[orgOk]]).
     */
   private[http] def tailFrameFor(org: Option[String], p: Params,
-      cursorNs: Long): (String, Long) = org match {
+      cursorNs: Long): (String, Long) = graft.store.Store.pinned(org match {
     case Some(o) => forTenant(o).tailFrame(p, cursorNs, newestFirst = true)
     case None    => tailFrame(p, cursorNs, newestFirst = true)
-  }
+  })
 
   private[http] def orgOk(org: Option[String]): Boolean =
     org.forall(validOrg)
@@ -1133,15 +1135,13 @@ class Frontend(private[http] val spark: SparkSession, dir: String,
     * leak scoping across them.
     */
   /** LRU-bounded: sessions are cheap to rebuild (a `newSession()` + conf
-    * copy; the store readers cache is keyed per session and re-fills on
-    * first scan), so evicting the least-recently-used tenant only costs
-    * that tenant a warm-up — while an UNBOUNDED map lets any client
-    * streaming random X-Scope-OrgID values grow driver memory without
-    * bound. accessOrder=true makes every lookup a touch. Eviction also
-    * purges the store-layer caches keyed by the evicted session
-    * ([[graft.store.Store.evictSession]]) — those entries would otherwise
-    * pin the session (and its resolved file indexes) forever, defeating
-    * the bound this LRU exists for.
+    * copy), so evicting the least-recently-used tenant only costs that
+    * tenant a warm-up — while an UNBOUNDED map lets any client streaming
+    * random X-Scope-OrgID values grow driver memory without bound.
+    * accessOrder=true makes every lookup a touch. Eviction also purges
+    * the store-layer caches keyed by the evicted session
+    * ([[graft.store.Store.evictSession]]), which would otherwise pin the
+    * session forever.
     */
   private val MaxTenantSessions = 64
   private val tenantFrontends =
@@ -1223,51 +1223,24 @@ class Frontend(private[http] val spark: SparkSession, dir: String,
          |# HELP jvm_memory_max_bytes Heap ceiling.
          |# TYPE jvm_memory_max_bytes gauge
          |jvm_memory_max_bytes ${rt.maxMemory()}
+         |# HELP graft_maintenance_runs_total Maintenance passes run by the timer.
+         |# TYPE graft_maintenance_runs_total counter
+         |graft_maintenance_runs_total ${maintenanceRuns.get()}
+         |# HELP graft_maintenance_failures_total Maintenance passes that failed.
+         |# TYPE graft_maintenance_failures_total counter
+         |graft_maintenance_failures_total ${maintenanceFailures.get()}
+         |# HELP graft_maintenance_last_duration_seconds Duration of the last maintenance pass.
+         |# TYPE graft_maintenance_last_duration_seconds gauge
+         |graft_maintenance_last_duration_seconds ${maintenanceLastNs.get() / 1e9}
          |""".stripMargin
     HttpResult(200, body, "text/plain; version=0.0.4")
   }
 
   private val bootNs = System.nanoTime()
   private val requestCount = new java.util.concurrent.atomic.AtomicLong
-
-  /** Query routes race the maintenance timer's write-new-then-swap
-    * compaction: a plan holding the pre-swap file listing fails its scan
-    * with FILE_NOT_EXIST once the originals are renamed away (or
-    * PATH_NOT_FOUND inside the flat dictionary swap's two-rename window).
-    * The data is intact — refresh the store's cached listings and re-run.
-    * Only the idempotent query routes retry; push routes are serialized
-    * against maintenance by the store's append lock and never race it.
-    */
-  private def retryingOnSwapRace(run: => HttpResult): HttpResult = {
-    var attempt = 0
-    while (attempt < 3) {
-      try return run
-      catch {
-        case e: Exception if isMissingFileError(e) =>
-          attempt += 1
-          graft.store.Store.refreshRoot(spark, dir)
-      }
-    }
-    run
-  }
-
-  private def isMissingFileError(e: Throwable): Boolean = {
-    var t: Throwable = e
-    var depth = 0
-    while (t != null && depth < 16) {
-      t match {
-        case _: java.io.FileNotFoundException => return true
-        case _ =>
-          val m = String.valueOf(t.getMessage)
-          if (m.contains("FAILED_READ_FILE") || m.contains("PATH_NOT_FOUND") ||
-              m.contains("Path does not exist") ||
-              m.contains("files have been updated")) return true
-      }
-      t = t.getCause
-      depth += 1
-    }
-    false
-  }
+  private val maintenanceRuns = new java.util.concurrent.atomic.AtomicLong
+  private val maintenanceFailures = new java.util.concurrent.atomic.AtomicLong
+  private val maintenanceLastNs = new java.util.concurrent.atomic.AtomicLong
 
   private def routeRaw0(path: String, p: Params, method: String,
       bytes: Array[Byte]): HttpResult = {
@@ -1307,12 +1280,14 @@ class Frontend(private[http] val spark: SparkSession, dir: String,
           elasticDocPush(target, body)
         case ("POST", RulesNsRe(ns)) => rulesSetGroup(ns, body)
         case ("POST", qp) if isQueryPostRoute(qp) =>
-          retryingOnSwapRace(routeGet(qp, Params.merge(p, Params.fromQuery(body))))
+          graft.store.Store.pinned(
+            routeGet(qp, Params.merge(p, Params.fromQuery(body))))
         case ("POST", other) => notFound(s"POST $other")
         case ("DELETE", RulesGroupRe(ns, group)) =>
           rulesDelete(ns, Some(group))
         case ("DELETE", RulesNsRe(ns)) => rulesDelete(ns, None)
-        case ("GET", _) => retryingOnSwapRace(routeGet(path, p))
+        // a query reads one store version from its first scan to its last
+        case ("GET", _) => graft.store.Store.pinned(routeGet(path, p))
         case (other, _) => HttpResult(405, obj(Seq(
           "status" -> str("error"), "errorType" -> str("bad_data"),
           "error" -> str(s"method $other not allowed"))))
@@ -1422,9 +1397,10 @@ class Frontend(private[http] val spark: SparkSession, dir: String,
     * + ClickHouse's own background merges): every `intervalS`, compact
     * the append-mutable tables (merging downsample partials) and, when
     * `spark.graft.retention.days` is set, drop expired `date=` partitions.
-    * A failed pass logs nothing and keeps the timer alive — maintenance
-    * must never take the serving path down. Returns the scheduler so the
-    * owner can `shutdown()` it.
+    * A failed pass keeps the timer alive — maintenance must never take
+    * the serving path down — and shows on `/metrics` as
+    * `graft_maintenance_failures_total`; fatal errors are not caught.
+    * Returns the scheduler so the owner can `shutdown()` it.
     */
   def startMaintenance(intervalS: Long = 3600, maxFiles: Int = 8)
       : java.util.concurrent.ScheduledExecutorService = {
@@ -1433,14 +1409,20 @@ class Frontend(private[http] val spark: SparkSession, dir: String,
         val t = new Thread(r, "graft-maintenance"); t.setDaemon(true); t
       })
     ex.scheduleWithFixedDelay(() => {
-      try {
-        graft.store.Store.maintain(spark, dir, maxFiles)
-        spark.conf.getOption("spark.graft.retention.days").foreach { d =>
-          val cutoff = java.time.LocalDate
-            .now(java.time.ZoneOffset.UTC).minusDays(d.toLong).toString
-          graft.store.Store.expire(spark, dir, cutoff)
-        }
-      } catch { case _: Throwable => () }
+      val t0 = System.nanoTime()
+      val failed =
+        try {
+          graft.store.Store.maintain(spark, dir, maxFiles)
+          spark.conf.getOption("spark.graft.retention.days").foreach { d =>
+            val cutoff = java.time.LocalDate
+              .now(java.time.ZoneOffset.UTC).minusDays(d.toLong).toString
+            graft.store.Store.expire(spark, dir, cutoff)
+          }
+          false
+        } catch { case NonFatal(_) => true }
+      maintenanceLastNs.set(System.nanoTime() - t0)
+      maintenanceRuns.incrementAndGet()
+      if (failed) maintenanceFailures.incrementAndGet(): Unit
     }, intervalS, intervalS, java.util.concurrent.TimeUnit.SECONDS)
     ex
   }

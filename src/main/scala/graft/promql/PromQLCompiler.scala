@@ -208,7 +208,13 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
     * min(lookback/step, grid points) eval points — one for an instant
     * query; groupBy picks the latest per (series, t).
     */
-  private def instantVector(sel: Selector): DataFrame = {
+  private def instantVector(sel: Selector): DataFrame =
+    lookback(sel, max_by(col("value"), col("timestamp_ns")))
+
+  /** The lookback explode both instant-vector shapes share: `agg` folds
+    * the in-lookback samples of one (series, eval point) into its value.
+    */
+  private def lookback(sel: Selector, agg: Column): DataFrame = {
     val off = sel.offsetNs
     val df = scan(sel, gridStart - params.lookbackNs - off, gridEnd + 1 - off)
     val tsEff = col("timestamp_ns") + lit(off)
@@ -218,8 +224,7 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
         explode(when(firstT <= lastT, sequence(firstT, lastT, lit(stepNs)))
           .otherwise(array())))
       .groupBy(col("fingerprint"), col("t_ns"))
-      .agg(first(col("labels")).as("labels"),
-        max_by(col("value"), col("timestamp_ns")).as("value"))
+      .agg(first(col("labels")).as("labels"), agg.as("value"))
       .select(col("fingerprint"), col("labels"),
         expr("t_ns div 1000000000").as("ts"), col("value"))
   }
@@ -482,22 +487,8 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
   /** timestamp(): instant vector whose value is the chosen (latest
     * in-lookback) sample's own timestamp in seconds.
     */
-  private def timestampVector(sel: Selector): DataFrame = {
-    val off = sel.offsetNs
-    val df = scan(sel, gridStart - params.lookbackNs - off, gridEnd + 1 - off)
-    val tsEff = col("timestamp_ns") + lit(off)
-    val firstT = greatest(ceilTo(tsEff, stepNs), lit(gridStart))
-    val lastT = least(floorTo(tsEff + (params.lookbackNs - 1), stepNs), lit(gridEnd))
-    df.withColumn("t_ns",
-        explode(when(firstT <= lastT, sequence(firstT, lastT, lit(stepNs)))
-          .otherwise(array())))
-      .groupBy(col("fingerprint"), col("t_ns"))
-      .agg(first(col("labels")).as("labels"),
-        max(col("timestamp_ns")).as("__sts"))
-      .select(col("fingerprint"), col("labels"),
-        expr("t_ns div 1000000000").as("ts"),
-        (col("__sts") / 1000000000.0).as("value"))
-  }
+  private def timestampVector(sel: Selector): DataFrame =
+    lookback(sel, max(col("timestamp_ns")) / 1000000000.0)
 
   /** holt_winters / double_exponential_smoothing: Holt's linear trend over
     * the in-window samples in time order (Prometheus `functions.go

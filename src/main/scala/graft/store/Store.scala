@@ -3,9 +3,12 @@ package graft.store
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import graft.model.{Materialize, Tables}
 
@@ -36,12 +39,19 @@ import graft.model.{Materialize, Tables}
   * it does not hold yet, so a push of known series writes no dictionary
   * file at all.
   *
-  * Built once per (JVM, testdata dir) under target/graft-store and reused
-  * across sessions via the parquet _SUCCESS markers. At 100 TB this build
-  * is the ingest pipeline (§2.A Structured Streaming foreachBatch). These
-  * tables are the one read path: every query engine (LogQL, PromQL,
-  * TraceQL, profiles, admission guards, metadata) scans them, and none
-  * re-derives a table from raw events at query time.
+  * One commit protocol ([[ManifestLog]]): a store root is the set of files
+  * its `_manifest/` log lists, as a MergeTree table is its active parts.
+  * The build commits version 0; each push, compaction pass and expiry
+  * commits one version; reads plan against a version's file list, never a
+  * listing. A request pins one version ([[pinned]]); superseded files are
+  * deleted once no pin reads them, uncommitted ones by [[maintain]].
+  *
+  * Built once per testdata dir under target/graft-store and reused across
+  * JVMs through the log. At 100 TB this build is the ingest pipeline
+  * (§2.A Structured Streaming foreachBatch). These tables are the one read
+  * path: every query engine (LogQL, PromQL, TraceQL, profiles, admission
+  * guards, metadata) scans them, and none re-derives a table from raw
+  * events at query time.
   */
 object Store {
 
@@ -67,11 +77,11 @@ object Store {
   def overrideRoot(dir: String, root: String): Unit =
     rootOverrides.put(dir, root): Unit
 
-  // bump the version segment when a table SCHEMA changes: _SUCCESS-guarded
-  // writes would otherwise silently keep serving the old schema
+  // bump the version segment when a table SCHEMA or the store layout
+  // changes: a root's log would otherwise keep serving the old one
   private[store] def rootFor(dir: String): String =
     rootOverrides.getOrElse(dir,
-      storeRoot + "/v7/" + dir.replaceAll("[^a-zA-Z0-9.]+", "_"))
+      storeRoot + "/v8/" + dir.replaceAll("[^a-zA-Z0-9.]+", "_"))
 
   /** Tenant (`oid`) column — every reference table leads its partition/
     * order key with the organization id (`traces.sql:7`,
@@ -120,16 +130,16 @@ object Store {
   // epoch-day arithmetic, NOT to_date(timestamp_seconds(...)): the latter
   // follows spark.sql.session.timeZone, so a store written under one
   // session timezone and read under another would mis-prune partitions
-  // and silently drop rows (stores persist across JVMs via _SUCCESS)
+  // and silently drop rows (stores persist across JVMs)
   private def withDate(df: DataFrame): DataFrame =
     df.withColumn("date",
       date_from_unix_date((col("timestamp_ns") / 86400000000000L).cast("int")))
 
   /** Hadoop FileSystem for a store path, resolved from the path's URI and
-    * the session's hadoopConfiguration — every maintenance walk below
-    * (existence probes, partition listing, expiry deletes, compaction
-    * swaps) goes through this, so `maintain`/`expire`/pushed-table
-    * detection work identically on local disk, HDFS, or s3a:// roots: the
+    * the session's hadoopConfiguration — every file operation below
+    * (the commit log, staged moves, orphan sweeps, expiry and compaction
+    * deletes) goes through this, so `maintain`/`expire` and the log work
+    * identically on local disk, HDFS, or s3a:// roots: the
     * analog of the reference running its rotations server-side
     * (`ctrl/qryn/maintenance/rotate.go:48-66`) regardless of disk backend.
     * `FileSystem.get` caches per (scheme, authority), so this is cheap.
@@ -143,24 +153,39 @@ object Store {
     (p.getFileSystem(conf), p)
   }
 
-  private def listStatus(fs: FileSystem, p: Path): Array[FileStatus] =
-    try fs.listStatus(p)
-    catch { case _: java.io.FileNotFoundException => Array.empty }
 
-  private def haveTable(path: String): Boolean = {
+  /** Every parquet file below a table directory, as paths relative to it,
+    * with their sizes. Walks with `listStatus`: the located statuses of a
+    * recursive `listFiles` make the local filesystem fork a process per
+    * file to read its permissions.
+    */
+  private def listTable(path: String): Map[String, Long] = {
     val (fs, p) = fsFor(path)
-    fs.exists(new Path(p, "_SUCCESS"))
+    val base = fs.makeQualified(p).toString + "/"
+    def walk(d: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      (try fs.listStatus(d).toSeq catch { case _: java.io.FileNotFoundException => Nil })
+        .flatMap(s => if (s.isDirectory) walk(s.getPath) else Seq(s))
+    walk(p).filter(_.getPath.getName.endsWith(".parquet"))
+      .map(s => s.getPath.toString.stripPrefix(base) -> s.getLen).toMap
   }
 
-  private def writeSorted(df: DataFrame, path: String): Unit =
-    writePartitioned(df, path, Seq("fingerprint", "timestamp_ns"))
-
-  /** Date-partition + sort-within-partition writer: the Spark analog of the
-    * reference's `PARTITION BY toDate(...) ORDER BY (keys...)` DDL
-    * (`ctrl/qryn/sql/log.sql:16-32`, `traces.sql:7-32`). Partition pruning
-    * handles the query window; parquet row-group min/max on the sort keys
-    * handles the rest.
+  /** The recorded schema of a written frame: data columns in frame order,
+    * then the partition columns, all nullable (what a parquet read
+    * returns).
     */
+  private def schemaOf(df: DataFrame, partCols: Seq[String]): StructType =
+    nullable(StructType(df.schema.filterNot(f => partCols.contains(f.name)) ++
+      partCols.map(df.schema(_)))).asInstanceOf[StructType]
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
   /** Bounded output-batch size — the writer's 50 MiB insert cap analog
     * (`writer/service/generic_insert.go:33-35`): no store file exceeds
     * ~maxRecordsPerFile rows, so downstream readers and compaction see
@@ -171,29 +196,38 @@ object Store {
     spark.conf.getOption("spark.graft.store.maxRecordsPerFile")
       .map(_.toLong).getOrElse(8000000L)
 
+  /** Date-partition + sort-within-partition writer: the Spark analog of the
+    * reference's `PARTITION BY toDate(...) ORDER BY (keys...)` DDL
+    * (`ctrl/qryn/sql/log.sql:16-32`, `traces.sql:7-32`). Partition pruning
+    * handles the query window; parquet row-group min/max on the sort keys
+    * handles the rest. Returns the written frame's recorded schema.
+    */
   private[store] def writePartitioned(df: DataFrame, path: String,
-      sortCols: Seq[String]): Unit =
-    if (!haveTable(path))
-      withOid(withDate(df))
-        .repartition(col("oid"), col("date"))
-        .sortWithinPartitions(sortCols.map(col): _*)
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", maxRecordsPerFile(df.sparkSession))
-        .partitionBy("oid", "date").parquet(path)
+      sortCols: Seq[String]): StructType = {
+    val out = withOid(withDate(df))
+    out.repartition(col("oid"), col("date"))
+      .sortWithinPartitions(sortCols.map(col): _*)
+      .write.mode("overwrite")
+      .option("maxRecordsPerFile", maxRecordsPerFile(df.sparkSession))
+      .partitionBy("oid", "date").parquet(path)
+    schemaOf(out, DatePartitions)
+  }
 
-  /** Build (if absent) and return the store root for a testdata dir.
-    *
-    * Concurrency: a resident query service fires its first queries in
-    * parallel, and `TrieMap.getOrElseUpdate` may evaluate the builder in
-    * MORE than one thread under contention — two overlapping
-    * `overwrite` writes to the same parquet path corrupt the store. The
-    * lock serializes builds; the lock-free `get` keeps the built path
-    * uncontended. Builds are one-time per dir, so a coarse lock costs
-    * nothing steady-state.
+  private val DatePartitions = Seq("oid", "date")
+
+  /** Build (if the root has no version yet) and return the store root for
+    * a testdata dir. A resident query service fires its first queries in
+    * parallel, and two overlapping `overwrite` builds of one root corrupt
+    * it: the lock serializes builds, the lock-free `get` keeps the built
+    * path uncontended.
     */
   def ensure(spark: SparkSession, dir: String): String =
     built.get(dir).getOrElse(buildLock.synchronized {
-      ensureLocked(spark, dir)
+      built.getOrElseUpdate(dir, {
+        val root = rootFor(dir)
+        if (logFor(root).head.version < 0) build(spark, dir, root)
+        root
+      })
     })
 
   private val BuiltTables = Seq("samples", "time_series", "metrics_15s",
@@ -201,85 +235,75 @@ object Store {
     "prom_counter", "prom_bucket", "prom_gauge_15s", "prom_series")
 
   private val buildLock = new Object
-  private def ensureLocked(spark: SparkSession, dir: String): String =
-    built.getOrElseUpdate(dir, {
-      val root = rootFor(dir)
-      // the one-time build WRITES — take the single-writer lock like every
-      // other mutating path, so two cold-starting processes cannot race
-      // overlapping overwrites into the same root. Only when something
-      // actually needs building: a read-only replica against a complete
-      // store must never contend for (or be refused by) the writer lock.
-      if (BuiltTables.exists(t => !haveTable(s"$root/$t")))
-        writerLock(root).ensureHeld()
-      val logs = Tables.logs(spark, dir)
-      writeSorted(logs.select(col("timestamp_ns"), col("fingerprint"),
-        col("line"), col("value")), s"$root/samples")
-      if (!haveTable(s"$root/time_series"))
-        // fingerprint-hash sharded (NOT coalesce(1)): at 1e8 series a
-        // single-file dictionary write is a one-task straggler and a
-        // one-file read bottleneck; shard count is a config knob
-        withOid(logs.select(col("fingerprint"), col("labels"))
-            .dropDuplicates("fingerprint"))
-          .repartition(dictShards(spark), col("fingerprint"))
-          .write.mode("overwrite").parquet(s"$root/time_series")
-      if (!haveTable(s"$root/metrics_15s"))
-        withOid(withDate(Tables.metrics15s(spark, dir)))
-          .repartition(col("oid"), col("date"))
-          .sortWithinPartitions(col("fingerprint"), col("timestamp_ns"))
-          .write.mode("overwrite").partitionBy("oid", "date").parquet(s"$root/metrics_15s")
-      // trace + profile stores (round-4: were derive-per-query, which
-      // full-scanned events on every TraceQL/profiles query — the reference
-      // materializes tempo_traces / tempo_traces_attrs_gin / profiles as
-      // date-partitioned tables, traces.sql:7-32 / profiles.sql:5-17)
-      writePartitioned(Tables.spans(spark, dir), s"$root/spans",
-        Seq("trace_id", "span_id"))
-      writePartitioned(Tables.spanAttrs(spark, dir), s"$root/span_attrs",
-        Seq("key", "val", "trace_id"))
-      if (!haveTable(s"$root/span_ancestors"))
-        writePartitioned(ancestorClosure(Tables.spans(spark, dir)),
-          s"$root/span_ancestors", Seq("trace_id", "span_id"))
-      writePartitioned(graft.prof.Profiles.derive(spark, dir),
-        s"$root/profiles", Seq("service_name", "timestamp_ns"))
-      writeSorted(Tables.gaugeSamples(spark, dir), s"$root/prom_gauge")
-      writeSorted(Tables.counterSamples(spark, dir), s"$root/prom_counter")
-      writeSorted(Tables.bucketSamples(spark, dir), s"$root/prom_bucket")
-      if (!haveTable(s"$root/prom_gauge_15s")) {
-        val bucketNs = 15L * 1000 * 1000 * 1000
-        val g15 = Tables.gaugeSamples(spark, dir)
-          .groupBy(col("fingerprint"),
-            (col("timestamp_ns") - pmod(col("timestamp_ns"), lit(bucketNs)))
-              .as("timestamp_ns"))
-          .agg(first(col("labels")).as("labels"),
-            max_by(col("value"), col("timestamp_ns")).as("last"),
-            max(col("timestamp_ns")).as("last_ts"),
-            min(col("value")).as("min"),
-            max(col("value")).as("max"),
-            sum(col("value")).as("sum"),
-            count(lit(1)).as("cnt"))
-        withOid(withDate(g15))
-          .repartition(col("oid"), col("date"))
-          .sortWithinPartitions(col("fingerprint"), col("timestamp_ns"))
-          .write.mode("overwrite").partitionBy("oid", "date").parquet(s"$root/prom_gauge_15s")
-      }
-      if (!haveTable(s"$root/prom_series")) {
-        // per-family series DICTIONARY — the `time_series` analog for the
-        // metric families. Admission estimates and label lookups read this
-        // instead of the sample tables: at 100 TB the dictionary is MBs
-        // where the families are TBs
-        val fams = Seq(
+
+  /** The one-time build: write every table, then commit them all as
+    * version 0, under the single-writer lock like every mutating path. A
+    * build that dies before its commit leaves no version; the next ensure
+    * rebuilds over it.
+    */
+  private def build(spark: SparkSession, dir: String, root: String): Unit = {
+    writerLock(root).ensureHeld()
+    val logs = Tables.logs(spark, dir)
+    val bucketNs = 15L * 1000 * 1000 * 1000
+    // the reference materializes tempo_traces / tempo_traces_attrs_gin /
+    // profiles as date-partitioned tables (traces.sql:7-32, profiles.sql:5-17)
+    val partitioned: Seq[(String, DataFrame, Seq[String])] = Seq(
+      ("samples", logs.select(col("timestamp_ns"), col("fingerprint"),
+        col("line"), col("value")), Seq("fingerprint", "timestamp_ns")),
+      ("metrics_15s", Tables.metrics15s(spark, dir),
+        Seq("fingerprint", "timestamp_ns")),
+      ("spans", Tables.spans(spark, dir), Seq("trace_id", "span_id")),
+      ("span_attrs", Tables.spanAttrs(spark, dir),
+        Seq("key", "val", "trace_id")),
+      ("span_ancestors", ancestorClosure(Tables.spans(spark, dir)),
+        Seq("trace_id", "span_id")),
+      ("profiles", graft.prof.Profiles.derive(spark, dir),
+        Seq("service_name", "timestamp_ns")),
+      ("prom_gauge", Tables.gaugeSamples(spark, dir),
+        Seq("fingerprint", "timestamp_ns")),
+      ("prom_counter", Tables.counterSamples(spark, dir),
+        Seq("fingerprint", "timestamp_ns")),
+      ("prom_bucket", Tables.bucketSamples(spark, dir),
+        Seq("fingerprint", "timestamp_ns")),
+      ("prom_gauge_15s", Tables.gaugeSamples(spark, dir)
+        .groupBy(col("fingerprint"),
+          (col("timestamp_ns") - pmod(col("timestamp_ns"), lit(bucketNs)))
+            .as("timestamp_ns"))
+        .agg(first(col("labels")).as("labels"),
+          max_by(col("value"), col("timestamp_ns")).as("last"),
+          max(col("timestamp_ns")).as("last_ts"),
+          min(col("value")).as("min"),
+          max(col("value")).as("max"),
+          sum(col("value")).as("sum"),
+          count(lit(1)).as("cnt")),
+        Seq("fingerprint", "timestamp_ns")))
+    // the series DICTIONARIES are flat and fingerprint-hash sharded: a
+    // single-file dictionary is a one-task straggler at 1e8 series.
+    // prom_series is the per-family `time_series` analog that admission
+    // estimates and label lookups read instead of the sample tables
+    val dicts: Seq[(String, DataFrame)] = Seq(
+      ("time_series", logs.select(col("fingerprint"), col("labels"))
+        .dropDuplicates("fingerprint")),
+      ("prom_series", Seq(
           "events_value"  -> Tables.gaugeSamples(spark, dir),
           "events_total"  -> Tables.counterSamples(spark, dir),
           "events_bucket" -> Tables.bucketSamples(spark, dir))
-        val dict = fams.map { case (n, f) =>
+        .map { case (n, f) =>
           f.select(lit(n).as("family"), col("fingerprint"), col("labels"))
             .dropDuplicates("family", "fingerprint")
-        }.reduce(_.unionByName(_))
-        withOid(dict)
-          .repartition(dictShards(spark), col("fingerprint"))
-          .write.mode("overwrite").parquet(s"$root/prom_series")
+        }.reduce(_.unionByName(_))))
+    val written =
+      partitioned.map { case (t, df, sort) =>
+        t -> (writePartitioned(df, s"$root/$t", sort), DatePartitions)
+      } ++ dicts.map { case (t, df) =>
+        val out = withOid(df)
+        out.repartition(dictShards(spark), col("fingerprint"))
+          .write.mode("overwrite").parquet(s"$root/$t")
+        t -> (schemaOf(out, Nil), Seq.empty[String])
       }
-      root
-    })
+    commit(root, written.map { case (t, created) =>
+      TableChange(t, listTable(s"$root/$t"), created = Some(created)) })
+  }
 
   private def dictShards(spark: SparkSession): Int =
     spark.conf.getOption("spark.graft.dict.shards").map(_.toInt).getOrElse(8)
@@ -298,16 +322,13 @@ object Store {
       readTable(spark, s"${ensure(spark, dir)}/prom_series"))
       .filter(col("family") === family).drop("oid", "family")
 
-  /** Touch every store table once (file-index listing + footer reads) so a
+  /** Touch every store table once (footer and data reads) so a
     * fresh session's first real query doesn't pay the cold-reader cost —
     * the cache-warm a resident query service does at startup.
     */
   def warm(spark: SparkSession, dir: String): Unit = {
     val root = ensure(spark, dir)
-    Seq("samples", "time_series", "metrics_15s", "spans", "span_attrs",
-      "span_ancestors", "profiles", "prom_gauge", "prom_counter",
-      "prom_bucket", "prom_gauge_15s", "prom_series")
-      .foreach(t => readTable(spark, s"$root/$t").limit(1).count(): Unit)
+    BuiltTables.foreach(t => readTable(spark, s"$root/$t").limit(1).count(): Unit)
   }
 
   private val dictCounts = TrieMap[(SparkSession, String), Long]()
@@ -328,51 +349,72 @@ object Store {
     if (n <= thr) broadcast(filtered) else filtered
   }
 
-  /** Per-(session, path) reader cache: `spark.read.parquet` re-lists the
-    * partition directories and re-reads footers on EVERY call — a fixed
-    * ~0.4 s/scan locally, and a listing storm against object storage at
-    * 100 TB. Caching the base DataFrame reuses the resolved FileIndex the
-    * way a catalog table would; filters still prune partitions per query.
-    * Safe because store tables are write-once (guarded by _SUCCESS).
-    *
-    * Entries are invalidated immediately by THIS JVM's appends
-    * ([[invalidate]]), which covers the single-writer process fully. For
-    * the reader/writer split the writer lock encourages, a READ-ONLY
-    * replica process has no such signal: its entries expire after
-    * [[replicaRefreshMs]] and re-resolve on next use (refreshByPath + a
-    * fresh listing — one LIST per table per refresh window), so a replica
-    * converges on the writer's pushes without a restart. A process that
-    * HOLDS the root's writer lock skips the TTL — it is the only mutator,
-    * so its caches are authoritative and its hot path stays listing-free.
-    */
-  private val readers = TrieMap[(SparkSession, String), (DataFrame, Long)]()
+  private val logs = TrieMap[String, ManifestLog]()
+  private def logFor(root: String): ManifestLog =
+    logs.getOrElseUpdate(root, new ManifestLog(root))
 
-  /** Staleness bound for caches only another PROCESS can invalidate (the
-    * reader cache; negative dir probes use [[probeNegativeTtlMs]]).
-    */
-  @volatile var replicaRefreshMs: Long =
-    java.lang.Long.getLong("graft.store.replicaRefreshMs", 300000L)
+  /** Versions pinned by the current thread's request, per root. */
+  private val requestPins =
+    new ThreadLocal[scala.collection.mutable.Map[String, Snapshot]]
 
-  /** True when this JVM owns the writer lock covering `path` — then no
-    * other process can have changed the table under us.
+  /** Run one request against one version per store root: the first scan
+    * of a root inside `body` pins that root's head, and every later scan
+    * of it reads the same version. A process that does not hold the
+    * root's writer lock first checks the log for versions another process
+    * committed; the writer trusts its in-memory head. Superseded files
+    * outlive every pin ([[retire]]). Nested calls join the outer request.
     */
-  private def authoritative(path: String): Boolean =
-    // separator-bounded prefix: a lock on .../v7/a must not cover the
-    // sibling root .../v7/ab (same-prefix different store)
-    writerLocks.exists { case (r, l) =>
-      l.isHeld && (path == r || path.startsWith(r + "/")) }
+  def pinned[T](body: => T): T =
+    if (requestPins.get != null) body
+    else {
+      val pins = scala.collection.mutable.Map[String, Snapshot]()
+      requestPins.set(pins)
+      try body
+      finally {
+        requestPins.remove()
+        pins.foreach { case (root, s) => logFor(root).unpin(s.version) }
+      }
+    }
+
+  /** Run `body` outside any request pin: appends read the head they
+    * commit against.
+    */
+  private def unpinned[T](body: => T): T = {
+    val pins = requestPins.get
+    requestPins.remove()
+    try body finally if (pins != null) requestPins.set(pins)
+  }
+
+  private def snapshot(root: String): Snapshot =
+    Option(requestPins.get) match {
+      case None => logFor(root).head
+      case Some(pins) => pins.getOrElseUpdate(root, {
+        val log = logFor(root)
+        if (!writerLocks.get(root).exists(_.isHeld)) log.refresh()
+        log.pin()
+      })
+    }
+
+  /** A scan of `state`'s files (all of a table's committed files, or a
+    * subset) under its recorded schema: a [[ManifestFileIndex]] behind a
+    * plain `HadoopFsRelation`, so planning runs no Spark job.
+    */
+  private def relation(spark: SparkSession, path: String,
+      state: TableState): DataFrame = {
+    val (fs, p) = fsFor(path)
+    val index = new ManifestFileIndex(spark, fs.makeQualified(p), state)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index,
+      index.partitionSchema,
+      StructType(state.schema.filterNot(f => state.partitionBy.contains(f.name))),
+      None, new ParquetFileFormat, Map.empty)(spark))
+  }
 
   private[store] def readTable(spark: SparkSession, path: String): DataFrame = {
-    val now = System.currentTimeMillis()
-    readers.get((spark, path)) match {
-      case Some((df, at))
-          if now - at < replicaRefreshMs || authoritative(path) => df
-      case cached =>
-        if (cached.isDefined) spark.catalog.refreshByPath(path)
-        val df = spark.read.parquet(path)
-        readers.put((spark, path), (df, now))
-        df
-    }
+    val i = path.lastIndexOf('/')
+    val snap = snapshot(path.take(i))
+    relation(spark, path, snap.tables.getOrElse(path.drop(i + 1),
+      throw new IllegalStateException(
+        s"store table $path is not in version ${snap.version}")))
   }
 
   /** Fact scan over [loNs, hiNs): ts predicate + derived date predicate so
@@ -498,18 +540,13 @@ object Store {
   def profiles(spark: SparkSession, dir: String, loNs: Long, hiNs: Long): DataFrame =
     scanWindow(spark, s"${ensure(spark, dir)}/profiles", loNs, hiNs)
 
-  private val DatedTables = Seq("samples", "metrics_15s", "spans",
-    "span_attrs", "span_ancestors", "profiles", "prom_gauge",
-    "prom_counter", "prom_bucket", "prom_gauge_15s", "prom_pushed",
-    "prom_pushed_15s")
-
   /** Live ingest append — the batched fan-out write a push endpoint makes
     * (`writer/service/insert/`, one insert per canonical table): a decoded
     * batch (the [[graft.ingest.LokiPush.decodeRows]] shape — fingerprint,
     * labels, timestamp_ns, line, value) lands in the QUERYABLE store:
     *
     *   - `samples` gains the rows (same oid/date partition layout as the
-    *     build; small-file accumulation is what [[compact]] exists for);
+    *     build; small-file accumulation is what [[maintain]] exists for);
     *   - `time_series` gains only NEW fingerprints (dup dictionary rows
     *     would fan out every broadcast join downstream);
     *   - `metrics_15s` gains the batch's own 15s PARTIALS: the downsample
@@ -524,14 +561,14 @@ object Store {
     */
   def appendLogs(spark: SparkSession, dir: String, rows: DataFrame): Long =
     appendBatch(spark, dir, rows) { (root, batch) =>
-      appendWrite(withPushOid(spark, withDate(batch.select(
-          col("timestamp_ns"), col("fingerprint"), col("line"),
-          col("value")))),
-        Seq("fingerprint", "timestamp_ns"), s"$root/samples")
+      val samples = appendWrite(root, "samples", withPushOid(spark,
+          withDate(batch.select(col("timestamp_ns"), col("fingerprint"),
+            col("line"), col("value")))),
+        Seq("fingerprint", "timestamp_ns"))
       // dictionary dedup is per (oid, fingerprint): two tenants pushing
       // the same label set each need their own dictionary row, or the
       // second tenant's series would be invisible to its own label APIs
-      val dictWritten = appendDictDelta(spark, s"$root/time_series",
+      val dict = appendDictDelta(spark, root, "time_series",
         withPushOid(spark, batch.select(col("fingerprint"), col("labels"))),
         Seq("oid", "fingerprint"))
       val bucketNs = 15L * 1000 * 1000 * 1000
@@ -547,10 +584,9 @@ object Store {
           sum(col("value")).as("sum"),
           count(lit(1)).as("cnt"),
           sum(length(col("line"))).as("bytes"))
-      appendWrite(withPushOid(spark, withDate(partials)),
-        Seq("fingerprint", "timestamp_ns"), s"$root/metrics_15s")
-      Seq("samples", "metrics_15s") ++
-        (if (dictWritten) Seq("time_series") else Nil)
+      Seq(samples, appendWrite(root, "metrics_15s",
+        withPushOid(spark, withDate(partials)),
+        Seq("fingerprint", "timestamp_ns"))) ++ dict
     }
 
   private val appendLock = new Object
@@ -569,14 +605,16 @@ object Store {
     *      to the bad_data envelope at the route layer);
     *   3. the rows are rebuilt as a local frame, so each table write
     *      below re-reads them without re-decoding, in one task and
-    *      without an exchange ([[appendWrite]]).
+    *      without an exchange ([[appendWrite]]);
+    *   4. `write` returns each table's change, and the whole batch is ONE
+    *      commit: a reader sees all of its tables' rows or none. Its reads
+    *      of stored state (dictionary probes, closure repair) see the
+    *      head it commits against, even inside a pinned request.
     *
-    * `write` returns the tables it changed, and only their cached readers
-    * are invalidated: a dictionary a push left unchanged keeps its file
-    * listing for the next probe. Returns the number of rows appended.
+    * Returns the number of rows appended.
     */
   private def appendBatch(spark: SparkSession, dir: String, rows: DataFrame)(
-      write: (String, DataFrame) => Seq[String]): Long = {
+      write: (String, DataFrame) => Seq[TableChange]): Long = {
     val root = ensure(spark, dir)
     val collected = rows.collect()
     val tsIdx = rows.schema.fieldIndex("timestamp_ns")
@@ -588,7 +626,7 @@ object Store {
       writerLock(root).ensureHeld()
       val batch = spark.createDataFrame(
         java.util.Arrays.asList(collected: _*), rows.schema)
-      invalidate(spark, root, write(root, batch))
+      commit(root, unpinned(write(root, batch)))
     }
     collected.length.toLong
   }
@@ -602,10 +640,11 @@ object Store {
     * the probe is a semi-join against the batch's keys, still bounded by
     * the batch. The delta is written as one file, and only when it is
     * non-empty: a push of known series (the steady state) writes nothing
-    * here. Returns whether anything was written.
+    * here. Returns the table change, if anything was written.
     */
-  private def appendDictDelta(spark: SparkSession, path: String,
-      cands: DataFrame, keys: Seq[String]): Boolean = {
+  private def appendDictDelta(spark: SparkSession, root: String,
+      table: String, cands: DataFrame,
+      keys: Seq[String]): Option[TableChange] = {
     val idx = keys.map(cands.schema.fieldIndex)
     val fresh = new java.util.LinkedHashMap[Seq[Any], Row]()
     cands.collect().foreach(r => fresh.putIfAbsent(idx.map(r.get), r): Unit)
@@ -616,23 +655,22 @@ object Store {
       .collect { case r if !r.isNullAt(fpIdx) => r.getLong(fpIdx) }
       .toSeq.distinct
     if (fps.nonEmpty) {
-      val stored = readTable(spark, path).select(keys.map(col): _*)
+      val stored = readTable(spark, s"$root/$table").select(keys.map(col): _*)
       val probe =
         if (fps.length <= 100000) stored.filter(col("fingerprint").isin(fps: _*))
         else stored.join(cands.select(keys.map(col): _*), keys, "left_semi")
       probe.collect().foreach(r => fresh.remove(keys.indices.map(r.get)): Unit)
     }
-    if (!fresh.isEmpty)
+    Option.when(!fresh.isEmpty)(TableChange(table, staged(root, table)(
       spark.createDataFrame(new java.util.ArrayList(fresh.values), cands.schema)
-        .coalesce(1).write.mode("append").parquet(path)
-    !fresh.isEmpty
+        .coalesce(1).write.parquet(_))))
   }
 
   /** Per-root single-writer guard (see [[WriterLock]]): every mutating
     * path — appends, [[maintain]], [[expire]] — confirms this process
     * owns the root before touching it; a second live process gets a clean
     * IllegalStateException instead of racing the dictionary anti-join or
-    * the compaction swap.
+    * the commit log.
     */
   private val writerLocks = TrieMap[String, WriterLock]()
   private def writerLock(root: String): WriterLock =
@@ -641,65 +679,31 @@ object Store {
   /** One-file-per-leaf append write. A push batch is a local frame
     * ([[appendBatch]]); `coalesce(1)` writes it in ONE task, and the sort
     * by the partition columns first makes the dynamic-partition writer
-    * close each (oid, date) leaf's file before opening the next — one
-    * part-file per touched leaf per push, from one job with no exchange.
-    * (The 15s partials coalesce their input before aggregating: a
+    * close each leaf's file before opening the next — one part-file per
+    * touched leaf per push, from one job with no exchange. (The 15s
+    * partials coalesce their input before aggregating: a
     * single-partition child satisfies the aggregate's distribution, so it
     * needs no exchange either.) The sort keys keep row-group locality for
-    * the scan pruning.
+    * the scan pruning. Returns the table's change; the first write to a
+    * table also records its schema.
     */
-  private def appendWrite(df: DataFrame, sortCols: Seq[String],
-      path: String): Unit =
-    df.coalesce(1)
-      .sortWithinPartitions(
-        (Seq("oid", "date") ++ sortCols).map(col): _*)
-      .write.mode("append").partitionBy("oid", "date").parquet(path)
-
-  /** Evict the readers cache and refresh the catalog file index for the
-    * touched tables across EVERY session that ever read them — the
-    * frontend holds one isolated child session per tenant, and a push
-    * through one session must not leave another session serving a stale
-    * file listing indefinitely. The eviction is keyed by path alone;
-    * refreshByPath runs per cached session (catalog caches are
-    * per-session).
-    */
-  private def invalidate(spark: SparkSession, root: String,
-      tables: Seq[String]): Unit =
-    for (t <- tables) {
-      val path = s"$root/$t"
-      dirProbe.remove(path)
-      val sessions = readers.keysIterator
-        .collect { case (s, p) if p == path => s }.toSet + spark
-      readers.filterInPlace { case ((_, p), _) => p != path }
-      sessions.foreach(_.catalog.refreshByPath(path))
-    }
-
-  /** Reader-side recovery after losing a race with [[maintain]]'s
-    * write-new-then-swap: a query planned against the pre-swap file
-    * listing fails its scan once the originals are renamed away. The data
-    * is intact — drop every cached reader under the store root and
-    * refresh each session's catalog index, so the caller's retry re-lists
-    * the post-swap files. Costs one LIST per table on next use.
-    */
-  def refreshRoot(spark: SparkSession, dir: String): Unit = {
-    val root = ensure(spark, dir)
-    def under(p: String) = p == root || p.startsWith(root + "/")
-    val sessions = readers.keysIterator
-      .collect { case (s, p) if under(p) => s }.toSet + spark
-    readers.filterInPlace { case ((_, p), _) => !under(p) }
-    sessions.foreach(_.catalog.refreshByPath(root))
+  private def appendWrite(root: String, table: String, df: DataFrame,
+      sortCols: Seq[String]): TableChange = {
+    val adds = staged(root, table)(df.coalesce(1)
+      .sortWithinPartitions((DatePartitions ++ sortCols).map(col): _*)
+      .write.partitionBy(DatePartitions: _*).parquet(_))
+    TableChange(table, adds, created =
+      Option.when(!snapshot(root).tables.contains(table))(
+        (schemaOf(df, DatePartitions), DatePartitions)))
   }
 
   /** Drop every per-session cache entry for an evicted tenant session:
-    * [[readers]] and [[dictCounts]] key by (session, path) and would
-    * otherwise pin the evicted SparkSession — and its resolved file
-    * indexes — forever, defeating the frontend's tenant-LRU memory bound.
-    * Called by the frontend when the LRU evicts a tenant.
+    * [[dictCounts]] keys by (session, dir) and would otherwise pin the
+    * evicted SparkSession forever, defeating the frontend's tenant-LRU
+    * memory bound. Called by the frontend when the LRU evicts a tenant.
     */
-  def evictSession(session: SparkSession): Unit = {
-    readers.filterInPlace { case ((s, _), _) => s ne session }
+  def evictSession(session: SparkSession): Unit =
     dictCounts.filterInPlace { case ((s, _), _) => s ne session }
-  }
 
   /** Conform an append batch to the STORED table's columns: missing
     * columns null-fill with the stored type, extras drop. Parquet happily
@@ -733,15 +737,15 @@ object Store {
     */
   def appendSpans(spark: SparkSession, dir: String, spans: DataFrame): Long =
     appendBatch(spark, dir, spans) { (root, batch) =>
-      appendWrite(withPushOid(spark, withDate(conformTo(spark,
-          s"$root/spans", batch, Set("oid", "date")))),
-        Seq("trace_id", "span_id"), s"$root/spans")
+      val spansChange = appendWrite(root, "spans", withPushOid(spark,
+          withDate(conformTo(spark, s"$root/spans", batch, Set("oid", "date")))),
+        Seq("trace_id", "span_id"))
       val attrs = batch.select(col("trace_id"), col("span_id"),
           col("parent_id"), col("timestamp_ns"), col("duration_ns"),
           explode(col("attrs")).as(Seq("key", "val")))
-      appendWrite(withPushOid(spark, withDate(conformTo(spark,
-          s"$root/span_attrs", attrs, Set("oid", "date")))),
-        Seq("key", "val", "trace_id"), s"$root/span_attrs")
+      val attrsChange = appendWrite(root, "span_attrs", withPushOid(spark,
+          withDate(conformTo(spark, s"$root/span_attrs", attrs, Set("oid", "date")))),
+        Seq("key", "val", "trace_id"))
       // cross-batch closure: clients normally push whole traces per
       // request, but a trace split across two pushes must still answer
       // `>>`/`<<` — widen the closure input with the STORED spans of the
@@ -804,10 +808,10 @@ object Store {
         .select(col("trace_id"), col("span_id"), col("anc_id"))
       val fresh = anc.join(storedAnc,
         Seq("trace_id", "span_id", "anc_id"), "left_anti")
-      appendWrite(withPushOid(spark, withDate(conformTo(spark,
-          s"$root/span_ancestors", fresh, Set("oid", "date")))),
-        Seq("trace_id", "span_id"), s"$root/span_ancestors")
-      Seq("spans", "span_attrs", "span_ancestors")
+      Seq(spansChange, attrsChange, appendWrite(root, "span_ancestors",
+        withPushOid(spark, withDate(conformTo(spark, s"$root/span_ancestors",
+          fresh, Set("oid", "date")))),
+        Seq("trace_id", "span_id")))
     }
 
   /** Live metric ingest (remote-write / OTLP metrics / Datadog series /
@@ -822,9 +826,9 @@ object Store {
   def appendMetrics(spark: SparkSession, dir: String, rows: DataFrame): Long =
     appendBatch(spark, dir, rows.select(col("timestamp_ns"),
         col("labels"), col("value"), col("fingerprint"))) { (root, batch) =>
-      appendWrite(withPushOid(spark, withDate(batch)),
-        Seq("fingerprint", "timestamp_ns"), s"$root/prom_pushed")
-      val dictWritten = appendDictDelta(spark, s"$root/prom_series",
+      val pushed = appendWrite(root, "prom_pushed",
+        withPushOid(spark, withDate(batch)), Seq("fingerprint", "timestamp_ns"))
+      val dict = appendDictDelta(spark, root, "prom_series",
         withPushOid(spark, batch
           .select(element_at(col("labels"), "__name__").as("family"),
             col("fingerprint"), col("labels"))
@@ -851,11 +855,9 @@ object Store {
           sum(col("value")).as("sum"),
           count(lit(1)).as("cnt"))
         .filter(col("family").isNotNull)
-      appendWrite(withPushOid(spark, withDate(partials)),
-        Seq("family", "fingerprint", "timestamp_ns"),
-        s"$root/prom_pushed_15s")
-      Seq("prom_pushed", "prom_pushed_15s") ++
-        (if (dictWritten) Seq("prom_series") else Nil)
+      Seq(pushed, appendWrite(root, "prom_pushed_15s",
+        withPushOid(spark, withDate(partials)),
+        Seq("family", "fingerprint", "timestamp_ns"))) ++ dict
     }
 
   /** Live profile ingest (pprof `/ingest`, OTLP profiles): rows already in
@@ -864,10 +866,9 @@ object Store {
     */
   def appendProfiles(spark: SparkSession, dir: String, rows: DataFrame): Long =
     appendBatch(spark, dir, rows) { (root, batch) =>
-      appendWrite(withPushOid(spark, withDate(conformTo(spark,
-          s"$root/profiles", batch, Set("oid", "date")))),
-        Seq("service_name", "timestamp_ns"), s"$root/profiles")
-      Seq("profiles")
+      Seq(appendWrite(root, "profiles", withPushOid(spark, withDate(conformTo(
+          spark, s"$root/profiles", batch, Set("oid", "date")))),
+        Seq("service_name", "timestamp_ns")))
     }
 
   /** All pushed-family dictionary rows (fingerprint, labels, family) —
@@ -881,48 +882,13 @@ object Store {
         "events_bucket"))
       .drop("oid")
 
-  private def havePushed(root: String): Boolean =
-    haveDir(s"$root/prom_pushed")
-
-  // appends create bare part files (no _SUCCESS): existence = the
-  // directory exists at all. MEMOIZED per path — the probe runs on every
-  // PromQL compile (downsample/pushed-family routing) and costs a HEAD
-  // request per compile on object storage; [[invalidate]] drops the entry
-  // when an append creates or touches the path, so a cached "absent"
-  // flips as soon as this JVM's first metric push lands. PRESENT is
-  // cached forever (an existing table never stops routing), but ABSENT
-  // only for [[probeNegativeTtlMs]]: in a read-only replica the first
-  // push lands in the WRITER process, and a negative cached forever would
-  // keep pushed-family routing off until restart.
-  private val dirProbe = TrieMap[String, (Boolean, Long)]()
-
-  /** Re-probe bound for cached-absent directories (one `exists` HEAD per
-    * absent path per window). This JVM's appends still flip the cache
-    * immediately.
-    */
-  @volatile var probeNegativeTtlMs: Long =
-    java.lang.Long.getLong("graft.store.probeNegativeTtlMs", 15000L)
-
-  private[store] def haveDir(path: String): Boolean = {
-    val now = System.currentTimeMillis()
-    dirProbe.get(path) match {
-      case Some((true, _)) => true
-      case Some((false, at)) if now - at < probeNegativeTtlMs => false
-      case _ =>
-        val (fs, p) = fsFor(path)
-        val ok = fs.exists(p)
-        dirProbe.put(path, (ok, now))
-        ok
-    }
-  }
-
   /** Pushed-family fact scan: `prom_pushed` filtered to one `__name__`
     * over the window. None until something was pushed.
     */
   def promPushed(spark: SparkSession, dir: String, name: String,
       loNs: Long, hiNs: Long): Option[DataFrame] = {
     val root = ensure(spark, dir)
-    if (!havePushed(root)) None
+    if (!snapshot(root).tables.contains("prom_pushed")) None
     else Some(scanWindow(spark, s"$root/prom_pushed", loNs, hiNs)
       .filter(element_at(col("labels"), "__name__") === name))
   }
@@ -940,7 +906,7 @@ object Store {
   def promPushed15s(spark: SparkSession, dir: String, name: String,
       loNs: Long, hiNs: Long): Option[DataFrame] = {
     val root = ensure(spark, dir)
-    if (!haveDir(s"$root/prom_pushed_15s")) None
+    if (!snapshot(root).tables.contains("prom_pushed_15s")) None
     else Some(scanWindow(spark, s"$root/prom_pushed_15s", loNs, hiNs)
       .filter(col("family") === name)
       .groupBy(col("fingerprint"), col("timestamp_ns"))
@@ -953,324 +919,173 @@ object Store {
         sum(col("cnt")).as("cnt")))
   }
 
+  /** Test-only fault injection before "commit" (data files written) and
+    * "retire" (version committed, superseded files not yet deleted).
+    */
+  private[store] var faultHook: String => Unit = _ => ()
+
+  /** Commit `changes` as one version of `root`. The caller holds
+    * [[appendLock]] and the root's writer lock.
+    */
+  private def commit(root: String, changes: Seq[TableChange]): Snapshot = {
+    faultHook("commit")
+    logFor(root).commit(changes)
+  }
+
+  /** Commit `changes` and return the version with the files it removed,
+    * as root-relative paths; None when there is nothing to commit.
+    */
+  private def commitRemoving(root: String,
+      changes: Seq[TableChange]): Option[(Long, Seq[String])] =
+    Option.when(changes.nonEmpty)(commit(root, changes).version ->
+      changes.flatMap(c => c.removes.map(f => s"${c.table}/$f")))
+
+  /** Delete the files `version` removed once no in-process pin can still
+    * scan them. Never called under [[appendLock]]: a ruler tick holds its
+    * pin while it appends.
+    */
+  private def retire(root: String, version: Long, files: Seq[String]): Unit = {
+    logFor(root).awaitPinsFrom(version)
+    faultHook("retire")
+    val fs = fsFor(root)._1
+    files.foreach(f => fs.delete(new Path(s"$root/$f"), false): Unit)
+  }
+
+  /** The date of a committed file: its `date=` path segment, if any. */
+  private def dateOf(file: String): Option[String] =
+    file.split('/').find(_.startsWith("date=")).map(_.stripPrefix("date="))
+
+  private def leafOf(file: String): String = file.take(file.lastIndexOf('/') max 0)
+
   /** TTL retention (`ctrl/qryn/maintenance/rotate.go:48-66`, which issues
     * `ALTER TABLE ... DROP PARTITION` per expired day): drop every `date=`
     * partition strictly before the cutoff (ISO yyyy-MM-dd) across the
-    * date-partitioned tables. Partition-directory deletes — no data
-    * rewrite, O(expired days) filesystem ops, same cost shape as the
-    * reference's partition drops. Cached readers for the touched tables
-    * are invalidated so the next scan re-lists.
+    * date-partitioned tables. One commit drops the expired files from the
+    * log — no data rewrite, O(expired files) work, the same cost shape as
+    * the reference's partition drops — and the emptied partition
+    * directories are deleted once no pin can read them.
     */
-  def expire(spark: SparkSession, dir: String, cutoffDate: String): Unit = {
-    val root = ensure(spark, dir)
-    writerLock(root).ensureHeld()
-    expireRoot(spark, root, cutoffDate)
-  }
+  def expire(spark: SparkSession, dir: String, cutoffDate: String): Unit =
+    expireRoot(spark, ensure(spark, dir), cutoffDate)
 
   private[store] def expireRoot(spark: SparkSession, root: String,
-      cutoffDate: String): Unit =
-    for (t <- DatedTables) {
-      val path = s"$root/$t"
-      val (fs, tablePath) = fsFor(path)
-      def dirs(p: Path): Array[FileStatus] =
-        listStatus(fs, p).filter(_.isDirectory)
-      // the store layout is oid=/date= (tenant leads the partition key);
-      // date= at the table level covers flat single-tenant layouts
-      val top = dirs(tablePath)
-      val dateDirs = top.filter(_.getPath.getName.startsWith("date=")) ++
-        top.filter(_.getPath.getName.startsWith("oid="))
-          .flatMap(s => dirs(s.getPath))
-          .filter(_.getPath.getName.startsWith("date="))
+      cutoffDate: String): Unit = {
+    val dropped = appendLock.synchronized {
+      writerLock(root).ensureHeld()
       // ISO dates compare lexicographically
-      val expired = dateDirs.filter(
-        _.getPath.getName.stripPrefix("date=") < cutoffDate)
-      if (expired.nonEmpty) {
-        expired.foreach(s => fs.delete(s.getPath, true): Unit)
-        // cross-session invalidation, same contract as compactRoot: a
-        // tenant session must not keep serving dropped partitions
-        val sessions = readers.keysIterator
-          .collect { case (s, p) if p == path => s }.toSet + spark
-        readers.filterInPlace { case ((_, p), _) => p != path }
-        sessions.foreach(_.catalog.refreshByPath(path))
+      commitRemoving(root, logFor(root).head.tables.toSeq.flatMap { case (t, st) =>
+        val gone = st.files.keySet.filter(dateOf(_).exists(_ < cutoffDate))
+        Option.when(gone.nonEmpty)(TableChange(t, Map.empty, gone))
+      })
+    }
+    dropped.foreach { case (v, files) =>
+      retire(root, v, files)
+      // a push may have landed in an expired partition since the commit:
+      // only directories the head no longer lists are deleted
+      appendLock.synchronized {
+        val live = logFor(root).head.tables.toSeq.flatMap { case (t, st) =>
+          st.files.keysIterator.map(f => s"$t/${leafOf(f)}") }.toSet
+        val fs = fsFor(root)._1
+        files.map(leafOf).distinct.filterNot(live)
+          .foreach(d => fs.delete(new Path(s"$root/$d"), true): Unit)
       }
     }
+  }
 
   /** Background-merge analog: ClickHouse's MergeTree merges parts
     * continuously; a parquet store fed by streaming micro-batches
     * accumulates small files instead, and every downstream scan pays per
     * file (task scheduling + footer reads). Rewrite each partition
-    * directory of `table` holding more than `maxFiles` part files into
-    * ONE sorted file (write-new-then-swap, readers of the old version
-    * unaffected; per-partition work, nothing global). Returns the number
-    * of partitions compacted.
+    * directory of `table` holding more than `maxFiles` committed files
+    * into ONE sorted file, written into the same directory under a new
+    * name (per-partition work, nothing global). Returns the number of
+    * partitions rewritten and the change that swaps them in. Reads only
+    * the snapshot's files, never a listing.
     */
-  def compact(spark: SparkSession, dir: String, table: String,
-      sortCols: Seq[String], maxFiles: Int = 8): Int =
-    compactRoot(spark, ensure(spark, dir), table, sortCols, maxFiles)
-
-  /** Scratch-dir suffixes of [[compactRoot]]'s two-rename swap. A leaf
-    * rewrite is: write new data to `leaf.compact`, rename `leaf` →
-    * `leaf.old`, rename `leaf.compact` → `leaf`, delete `leaf.old` — so a
-    * crash at ANY point leaves at least one complete copy of the leaf for
-    * [[recoverScratch]] to restore (`.old` is only created after the new
-    * data is fully written; the live leaf is only absent between the two
-    * renames).
-    */
-  private val ScratchSuffixes = Seq(".compact", ".old")
-  private def isScratch(name: String): Boolean =
-    ScratchSuffixes.exists(name.endsWith)
-
-  /** Resolve the swap scratch state around one live path:
-    * live present ⇒ any `.compact`/`.old` siblings are leftovers of an
-    * interrupted pass (the new data may be incomplete) — delete them;
-    * live absent + `.compact` present ⇒ the crash hit between the two
-    * renames and the new data IS complete (it was fully written before
-    * the live leaf was moved aside) — promote it, then drop `.old`;
-    * live absent + only `.old` ⇒ restore the original. Returns true when
-    * anything changed.
-    */
-  private def recoverScratch(fs: FileSystem, live: Path): Boolean = {
-    val tmp = new Path(live.getParent, live.getName + ".compact")
-    val old = new Path(live.getParent, live.getName + ".old")
-    val haveTmp = fs.exists(tmp)
-    val haveOld = fs.exists(old)
-    if (!haveTmp && !haveOld) false
-    else {
-      if (fs.exists(live)) {
-        if (haveTmp) fs.delete(tmp, true): Unit
-        if (haveOld) fs.delete(old, true): Unit
-      } else if (haveTmp) {
-        if (!fs.rename(tmp, live))
-          throw new java.io.IOException(s"compact recovery failed: $tmp -> $live")
-        if (haveOld) fs.delete(old, true): Unit
-      } else {
-        if (!fs.rename(old, live))
-          throw new java.io.IOException(s"compact recovery failed: $old -> $live")
-      }
-      true
-    }
-  }
-
-  /** Startup/maintain-time recovery sweep over one table: resolve scratch
-    * dirs orphaned by a crash mid-[[compactRoot]], at the table level (the
-    * flat dictionary case renames the table dir itself) and in every
-    * partition directory below it. Returns true when anything changed.
-    */
-  private def recoverSweep(fs: FileSystem, tableDir: Path): Boolean = {
-    var changed = recoverScratch(fs, tableDir)
-    def walk(p: Path): Unit =
-      for (s <- listStatus(fs, p) if s.isDirectory) {
-        val name = s.getPath.getName
-        if (isScratch(name))
-          changed |= recoverScratch(fs, new Path(p,
-            ScratchSuffixes.foldLeft(name)(_ stripSuffix _)))
-        else walk(s.getPath)
-      }
-    walk(tableDir)
-    changed
-  }
-
-  /** Test-only fault injection: invoked between the two swap renames of
-    * [[compactRoot]] with the leaf path (the worst crash window — live
-    * leaf absent, both scratch copies on disk).
-    */
-  private[store] var compactFaultHook: String => Unit = _ => ()
-
-  private[store] def compactRoot(spark: SparkSession, root: String,
+  private def compactTable(spark: SparkSession, root: String, snap: Snapshot,
       table: String, sortCols: Seq[String], maxFiles: Int,
-      merge: Option[DataFrame => DataFrame] = None,
-      targetFiles: Int = 1): Int = {
-    val (fs, tableDir) = fsFor(s"$root/$table")
-    // a crashed previous pass left scratch dirs: restore before listing,
-    // so the leaf selection below sees whole leaves only
-    val recovered = fs.exists(tableDir.getParent) && recoverSweep(fs, tableDir)
-    // a crash mid-batch-write leaves a partial `_compacting` scratch dir;
-    // readers never see it (underscore prefix) but clean it up here so it
-    // cannot linger once the table drops back under the file bound
-    if (fs.exists(tableDir))
-      fs.delete(new Path(tableDir, "_compacting"), true): Unit
-    def partDirs(p: Path): Seq[Path] = {
-      val kids = listStatus(fs, p)
-      val sub = kids.filter(k => k.isDirectory &&
-        k.getPath.getName.contains("=") && !isScratch(k.getPath.getName))
-      if (sub.isEmpty) Seq(p) else sub.flatMap(s => partDirs(s.getPath)).toSeq
+      merge: Option[DataFrame => DataFrame],
+      targetFiles: Int): (Int, Option[TableChange]) =
+    snap.tables.get(table) match {
+      case None => (0, None)
+      case Some(st) =>
+        val parts = st.partitionBy
+        // an unpartitioned table is a series dictionary: it is DONE at
+        // targetFiles shards — with targetFiles > maxFiles a plain bound
+        // would re-rewrite an already-compacted dictionary on every pass
+        val bound = if (parts.isEmpty) math.max(maxFiles, targetFiles) else maxFiles
+        val over = st.files.keys.groupBy(leafOf).values.filter(_.size > bound).toSeq
+        if (over.isEmpty) (0, None)
+        else {
+          val path = s"$root/$table"
+          def scan(files: Iterable[String]): DataFrame =
+            relation(spark, path, st.copy(files = files.map(f => f -> st.files(f)).toMap))
+          val sortable = sortCols.filter(st.schema.fieldNames.contains)
+          val adds = staged(root, table) { stage =>
+            if (parts.isEmpty) {
+              val df0 = scan(over.flatten)
+              val df = merge.fold(df0)(m => m(df0))
+              (if (targetFiles <= 1) df.coalesce(1)
+               else df.repartition(targetFiles, sortable.take(1).map(col): _*))
+                .sortWithinPartitions(sortable.map(col): _*)
+                .write.parquet(stage)
+            } else {
+              // partial-merge tables (15s downsamples — small): one scan,
+              // merge keyed by (partition cols, bucket keys), then one
+              // exchange on the partition cols: one writer task per leaf.
+              // Plain tables (the big ones): NO shuffle — a union of
+              // per-leaf single-partition scans, each sorted within its
+              // own partition: one task per leaf reading and writing its
+              // own bytes, one Spark job for the whole table
+              val df = merge match {
+                case Some(m) => m(scan(over.flatten)).repartition(parts.map(col): _*)
+                case None => over.map(l => scan(l).coalesce(1)).reduce(_.unionByName(_))
+              }
+              df.sortWithinPartitions((parts ++ sortable).map(col): _*)
+                .write.partitionBy(parts: _*).parquet(stage)
+            }
+          }
+          (over.size, Some(TableChange(table, adds, over.flatten.toSet)))
+        }
     }
-    val leaves =
-      if (fs.exists(tableDir) && fs.getFileStatus(tableDir).isDirectory)
-        partDirs(tableDir)
-      else Nil
-    // leaf == tableDir is the FLAT (unpartitioned) dictionary-table case:
-    // same write-new-then-swap, but the table's own _SUCCESS marker must
-    // survive (it guards the build), and the rewrite keeps the dictionary
-    // sharded (targetFiles) instead of collapsing to one file
-    // the flat dictionary case is DONE at targetFiles shards — with
-    // targetFiles > maxFiles the old bound re-rewrote (and whole-dir
-    // re-swapped) an already-compacted dictionary on EVERY maintenance
-    // tick, pure rename churn that also kept re-opening the reader race
-    // window
-    def fileBound(leaf: Path): Int =
-      if (leaf == tableDir) math.max(maxFiles, targetFiles) else maxFiles
-    val toCompact = leaves.filter(leaf =>
-      listStatus(fs, leaf).count(f =>
-        f.isFile && f.getPath.getName.endsWith(".parquet")) > fileBound(leaf))
-    // crash-safe swap: the ORIGINAL survives as `.old` until the new
-    // data is live — a crash anywhere leaves a complete copy for
-    // [[recoverScratch]] (vs the old delete-then-rename, whose crash
-    // window lost the leaf outright)
-    def swapIn(leaf: Path, tmp: Path): Unit = {
-      val old = new Path(leaf.getParent, leaf.getName + ".old")
-      if (!fs.rename(leaf, old))
-        throw new java.io.IOException(s"compact swap failed: $leaf -> $old")
-      compactFaultHook(leaf.toString)
-      if (!fs.rename(tmp, leaf)) {
-        fs.rename(old, leaf): Unit // restore the original
-        throw new java.io.IOException(s"compact swap failed: $tmp -> $leaf")
+
+  /** Run `write` against a fresh staging directory under the root, then
+    * move every parquet file it produced into `table`'s directory at the
+    * same relative path (Spark's file names carry the write's job id, so
+    * they never collide with committed files). Returns the moved files
+    * and their sizes, for the caller to commit.
+    */
+  private def staged(root: String, table: String)(
+      write: String => Unit): Map[String, Long] = {
+    val stage = s"$root/_staging/${java.util.UUID.randomUUID()}"
+    val (fs, sp) = fsFor(stage)
+    try {
+      write(stage)
+      val files = listTable(stage)
+      for (f <- files.keys) {
+        val dest = new Path(s"$root/$table/$f")
+        fs.mkdirs(dest.getParent)
+        if (!fs.rename(new Path(sp, f), dest))
+          throw new java.io.IOException(s"staged move failed: $f -> $dest")
       }
-      fs.delete(old, true): Unit
-      // drop the nested _SUCCESS marker — partition dirs hold only parts
-      if (leaf != tableDir)
-        fs.delete(new Path(leaf, "_SUCCESS"), false): Unit
+      files
+    } finally fs.delete(sp, true): Unit
+  }
+
+  /** Delete what no version a reader can see lists: the staging area and
+    * every parquet file below a table directory that neither the head nor
+    * a pinned version lists — the data files of writes that failed before
+    * their commit, and superseded files a failed pass never deleted. The
+    * caller holds [[appendLock]], so no write is in flight.
+    */
+  private def sweep(root: String): Unit = {
+    val fs = fsFor(root)._1
+    fs.delete(new Path(s"$root/_staging"), true): Unit
+    for (t <- BuiltTables ++ Seq("prom_pushed", "prom_pushed_15s")) {
+      val live = logFor(root).referenced(t)
+      listTable(s"$root/$t").keysIterator.filterNot(live)
+        .foreach(f => fs.delete(new Path(s"$root/$t/$f"), false): Unit)
     }
-    // leaf == tableDir is the flat dictionary-table case: a single
-    // write-new-then-swap keeping the dictionary sharded (targetFiles)
-    def rewriteFlat(leaf: Path): Unit = {
-      val tmp = new Path(leaf.getParent, leaf.getName + ".compact")
-      val df0 = spark.read.parquet(leaf.toString)
-      val df = merge.fold(df0)(m => m(df0))
-      val sortable = sortCols.filter(df.columns.contains)
-      (if (targetFiles <= 1) df.coalesce(1)
-       else df.repartition(targetFiles, sortable.take(1).map(col): _*))
-        .sortWithinPartitions(sortable.map(col): _*)
-        .write.mode("overwrite").parquet(tmp.toString)
-      swapIn(leaf, tmp)
-    }
-    val (flat, allParts) = toCompact.partition(_ == tableDir)
-    // schema-drift guard for the one-job rewrite below: it reads every
-    // over-limit leaf under ONE explicit schema, so a leaf whose files
-    // carry a column absent from that schema would silently rewrite
-    // without it. Appends are conformed to the stored contract
-    // (appendAligned), so drift can't arise through supported paths —
-    // verify cheaply anyway from the parquet FOOTERS (driver-side reads,
-    // no Spark jobs) and route any drifted leaf through its own
-    // mergeSchema rewrite with its own column set.
-    def footerFields(leaf: Path): Set[String] = {
-      listStatus(fs, leaf).iterator
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .flatMap { s =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromStatus(s, fs.getConf))
-          try r.getFileMetaData.getSchema.getFields.asScala
-            .map(_.getName).toList
-          finally r.close()
-        }.toSet
-    }
-    val headFields: Set[String] =
-      allParts.headOption.map(footerFields).getOrElse(Set.empty)
-    val (parts, drifted) =
-      allParts.partition(l => (l eq allParts.head) ||
-        footerFields(l) == headFields)
-    drifted.foreach { leaf =>
-      val tmp = new Path(leaf.getParent, leaf.getName + ".compact")
-      val df0 = spark.read.option("mergeSchema", "true")
-        .parquet(leaf.toString)
-      val df = merge.fold(df0)(m => m(df0))
-      val sortable = sortCols.filter(df.columns.contains)
-      df.coalesce(1).sortWithinPartitions(sortable.map(col): _*)
-        .write.mode("overwrite").parquet(tmp.toString)
-      swapIn(leaf, tmp)
-    }
-    // partition leaves rewrite in ONE Spark job per table, not one tiny
-    // read+write job per leaf (which made a maintenance pass over a
-    // fragmented store job-scheduling-bound, not byte-bound): each leaf is
-    // tagged with a synthetic __leaf index, the union repartitions on it
-    // (one writer task per leaf ⇒ one sorted part file per leaf, the same
-    // output the per-leaf coalesce(1) produced), and the dynamic-partition
-    // write stages every new copy under a `_compacting` scratch dir
-    // (underscore prefix: invisible to parquet readers). Bytes moved =
-    // only the over-limit leaves — the recent appends — shuffled once,
-    // same cost shape as the appends that created them. The swap then
-    // reuses the per-leaf two-rename protocol unchanged, so the
-    // crash-safety story (and [[recoverScratch]]) is exactly the old one.
-    if (parts.nonEmpty) {
-      val scratch = new Path(tableDir, "_compacting")
-      fs.delete(scratch, true): Unit
-      // ONE scan relation over exactly the over-limit leaves (basePath
-      // keeps the partition columns), with an EXPLICIT schema: one bare
-      // spark.read.parquet per leaf would pay a footer-inference job
-      // each, and a per-leaf union would pay analysis/codegen linear in
-      // leaf count — both made a fragmented-store maintenance pass
-      // job-scheduling-bound. Partition columns read as STRINGS, so
-      // values round-trip bit-exactly into partitionBy below (the dirs
-      // the original string-typed append writes produce).
-      // leaves from listStatus are scheme-qualified; qualify the table dir
-      // the same way before computing relative paths, or the strip is a
-      // no-op and Path(scratch, rel) resolves back to the LIVE leaf
-      val qTable = fs.makeQualified(tableDir).toString
-      val relParts = parts.map(l =>
-        fs.makeQualified(l).toString.stripPrefix(qTable).stripPrefix("/"))
-      val dataSchema = spark.read.parquet(parts.head.toString).schema
-      val (renameFrom, write) = merge match {
-        case Some(m) =>
-          // partial-merge tables (15s downsamples — small): ONE basePath
-          // scan (partition cols read as strings so values round-trip
-          // bit-exactly into partitionBy), merge keyed by (partition
-          // cols, bucket keys) — leaves are disjoint, so this is exactly
-          // the old per-leaf merge — then one exchange on the partition
-          // cols: one writer task per leaf ⇒ one sorted file per leaf
-          val partKeys = relParts.head.split("/").toSeq
-            .filter(_.contains("=")).map(_.takeWhile(_ != '='))
-          val full = partKeys.foldLeft(dataSchema)((s, k) => s.add(k, "string"))
-          val scan = spark.read.option("basePath", tableDir.toString)
-            .schema(full).parquet(parts.map(_.toString): _*)
-          val df = m(scan)
-          val sortable = sortCols.filter(df.columns.contains)
-          (relParts,
-            () => df.repartition(partKeys.map(col): _*)
-              .sortWithinPartitions((partKeys ++ sortable).map(col): _*)
-              .write.mode("overwrite").partitionBy(partKeys: _*)
-              .parquet(scratch.toString))
-        case None =>
-          // plain tables (the big ones): NO shuffle — a union of per-leaf
-          // single-partition reads (explicit schema: no per-leaf footer
-          // jobs), each tagged with a __leaf index, sorted within its own
-          // partition and dynamic-partition written by __leaf: one task
-          // per leaf reading and writing its own bytes exactly like the
-          // old per-leaf coalesce(1) rewrite, but as ONE Spark job for
-          // the whole table instead of one job per leaf
-          val unioned = parts.zipWithIndex.map { case (leaf, i) =>
-            spark.read.schema(dataSchema).parquet(leaf.toString)
-              .coalesce(1).withColumn("__leaf", lit(i))
-          }.reduce(_.unionByName(_))
-          val sortable = sortCols.filter(dataSchema.fieldNames.contains)
-          (parts.indices.map(i => s"__leaf=$i"),
-            () => unioned
-              .sortWithinPartitions(("__leaf" +: sortable).map(col): _*)
-              .write.mode("overwrite").partitionBy("__leaf")
-              .parquet(scratch.toString))
-      }
-      write()
-      val staged = parts.zip(renameFrom).filter { case (leaf, rel) =>
-        fs.rename(new Path(scratch, rel),
-          new Path(leaf.getParent, leaf.getName + ".compact"))
-      }
-      fs.delete(scratch, true): Unit
-      staged.foreach { case (leaf, _) =>
-        swapIn(leaf, new Path(leaf.getParent, leaf.getName + ".compact")) }
-    }
-    flat.foreach(rewriteFlat)
-    val n = toCompact.size
-    if (n > 0 || recovered) {
-      // cross-session invalidation, same contract as [[invalidate]]: a
-      // tenant session must not keep serving the pre-compaction (or
-      // pre-recovery) file list
-      val path = s"$root/$table"
-      val sessions = readers.keysIterator
-        .collect { case (s, p) if p == path => s }.toSet + spark
-      readers.filterInPlace { case ((_, p), _) => p != path }
-      sessions.foreach(_.catalog.refreshByPath(path))
-    }
-    n
   }
 
   /** Bucket-merge for the 15s downsample PARTIAL tables — the merge
@@ -1305,19 +1120,25 @@ object Store {
 
   /** The scheduled housekeeping pass a live deployment runs (the
     * reference's ctrl maintenance timers — `rotate.go` + ClickHouse's own
-    * background merges): compact every append-MUTABLE table's
-    * over-fragmented partition directories, merging downsample partials
-    * by bucket and re-sharding the dictionary tables. Each partition is
-    * independent work bounded by its own size; nothing global, so at
-    * 100 TB this schedules per-partition jobs exactly like the
-    * reference's per-part merges. Returns partitions compacted. Safe to
-    * run concurrently with queries (write-new-then-swap) but serialized
-    * against appends via [[appendLock]].
+    * background merges): delete uncommitted files, then compact every
+    * append-MUTABLE table's over-fragmented partition directories,
+    * merging downsample partials by bucket and re-sharding the dictionary
+    * tables, and commit every table's swap as ONE version. Each partition
+    * is independent work bounded by its own size; nothing global. Safe to
+    * run concurrently with queries: the superseded files are deleted
+    * before this returns, but only once no pinned request can read them.
+    * Serialized against appends via [[appendLock]]. Returns partitions
+    * compacted.
     */
   def maintain(spark: SparkSession, dir: String, maxFiles: Int = 8): Int =
-    appendLock.synchronized {
-      val root = ensure(spark, dir)
+    maintainRoot(spark, ensure(spark, dir), maxFiles)
+
+  private[store] def maintainRoot(spark: SparkSession, root: String,
+      maxFiles: Int): Int = {
+    val (n, done) = appendLock.synchronized {
       writerLock(root).ensureHeld()
+      sweep(root)
+      val snap = logFor(root).head
       val pm: Option[DataFrame => DataFrame] =
         Some((df: DataFrame) => mergePartials(df))
       val plan: Seq[(String, Seq[String], Option[DataFrame => DataFrame], Int)] =
@@ -1333,23 +1154,28 @@ object Store {
             pm, 1),
           ("time_series", Seq("fingerprint"), None, dictShards(spark)),
           ("prom_series", Seq("fingerprint"), None, dictShards(spark)))
-      // one compaction job per table now (see compactRoot): overlap the
-      // tables on a small pool so the pass's wall-clock is the slowest
-      // table, not the sum — tables are disjoint paths, and concurrent
-      // Spark jobs from driver threads back-fill each other's tails
+      // one compaction job per table: overlap the tables on a small pool
+      // so the pass's wall-clock is the slowest table, not the sum —
+      // tables are disjoint paths, and concurrent Spark jobs from driver
+      // threads back-fill each other's tails
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(4, plan.size))
-      try plan.map { case (t, sort, m, tf) =>
-        pool.submit(new java.util.concurrent.Callable[Int] {
-          def call(): Int = compactRoot(spark, root, t, sort, maxFiles, m, tf)
+      val results = try plan.map { case (t, sort, m, tf) =>
+        pool.submit(new java.util.concurrent.Callable[(Int, Option[TableChange])] {
+          def call(): (Int, Option[TableChange]) =
+            compactTable(spark, root, snap, t, sort, maxFiles, m, tf)
         })
       }.map { f =>
         try f.get()
         catch { case e: java.util.concurrent.ExecutionException =>
           throw e.getCause }
-      }.sum
+      }
       finally pool.shutdown()
+      (results.map(_._1).sum, commitRemoving(root, results.flatMap(_._2)))
     }
+    done.foreach { case (v, files) => retire(root, v, files) }
+    n
+  }
 
   def promMetric(spark: SparkSession, dir: String, name: String,
       loNs: Long, hiNs: Long): Option[DataFrame] = {

@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.Path
 
 /** Single-writer guard for a store root: the append/maintain paths are
   * single-writer BY DESIGN — the dictionary anti-join dedup, the
-  * downsample partial-merge and the compaction swap all assume no
+  * downsample partial-merge and the commit log all assume no
   * concurrent mutator outside this JVM's [[Store]] append lock. The
   * reference has the same contract one layer down (one writer service owns
   * the inserts; ClickHouse serializes merges per part). This makes the

@@ -61,37 +61,43 @@ final class RulerScheduler(spark: SparkSession, dir: String,
   // of re-recording the previous process's last bucket
   private val lastEvalNs = TrieMap[(String, String, String), Long]()
   @volatile private var seededDone = false
-  @volatile private var seedFailLogged = false
-  private def seed(nowNsVal: Long): Unit = if (!seededDone) {
-    // a corrupt/unreadable marks table must not silently disable ALL rule
-    // evaluation (a lazy-val rethrow every tick would): record a visible
-    // `_sweep`-style health row and fall back to cold-start seeding — the
-    // idempotent writeback bounds any re-recorded buckets. A missing table
-    // is handled INSIDE loadMarks (empty map = genuine cold start), so a
-    // throw here is transient IO or corruption: evaluate this tick from
-    // cold-start defaults but leave seededDone=false, so one IO hiccup
-    // retries next tick instead of permanently cold-starting every
-    // watermark. putIfAbsent keeps a later successful seed from clobbering
-    // in-memory progress the interim ticks already made.
-    try {
-      Rules.loadMarks(spark, dir).foreach { case (k, v) =>
-        lastEvalNs.putIfAbsent(k, v): Unit
-      }
-      seededDone = true
-    } catch {
-      case e: Exception =>
-        val msg = Option(e.getMessage).getOrElse(e.toString)
-        Console.err.println(s"graft ruler: marks load failed: $msg")
-        if (!seedFailLogged) {
-          seedFailLogged = true
-          // marks cover both swept engines — one health row per kind
-          try Rules.saveHealth(spark, dir, Kinds.map(kind =>
-            Rules.HealthRow(kind, "_sweep", "_marks", "_marks", "err", msg,
-              nowNsVal / 1000000L, 0.0)))
-          catch { case _: Exception => () }
+  // a marks load that throws (transient IO or corruption: a missing table
+  // is an empty map) is retried after 1, 2, 4, … ticks, the gap capped at
+  // SeedRetryMaxTicks, and logged once per streak: n ticks cost O(log n)
+  // reads. Meanwhile ticks evaluate from cold-start defaults — the
+  // idempotent writeback bounds any re-recorded bucket — and putIfAbsent
+  // keeps a late seed from clobbering their in-memory progress
+  private var seedGap = 0
+  private var seedWait = 0
+  private var seedReads = 0
+  private val SeedRetryMaxTicks = 64
+  private def seed(nowNsVal: Long): Unit =
+    if (seedWait > 0) seedWait -= 1
+    else if (!seededDone) {
+      seedReads += 1
+      try {
+        Rules.loadMarks(spark, dir).foreach { case (k, v) =>
+          lastEvalNs.putIfAbsent(k, v): Unit
         }
+        seededDone = true
+      } catch {
+        case e: Exception =>
+          if (seedGap == 0) {
+            val msg = Option(e.getMessage).getOrElse(e.toString)
+            Console.err.println(s"graft ruler: marks load failed: $msg")
+            // a visible health row per swept engine, not a silent gap
+            try Rules.saveHealth(spark, dir, Kinds.map(kind =>
+              Rules.HealthRow(kind, "_sweep", "_marks", "_marks", "err", msg,
+                nowNsVal / 1000000L, 0.0)))
+            catch { case _: Exception => () }
+          }
+          seedGap = math.min(math.max(1, seedGap * 2), SeedRetryMaxTicks)
+          seedWait = seedGap - 1
+      }
     }
-  }
+
+  /** Spec hook: marks-table reads attempted so far. */
+  private[streaming] def marksReads: Int = seedReads
 
   /** Engines swept: the HTTP ruler surface stores under "loki"; the
     * library surface also uses "prom" ([[Rules.evalVector]] picks the
@@ -102,10 +108,11 @@ final class RulerScheduler(spark: SparkSession, dir: String,
   private def forSeconds(forDur: String): Long =
     if (forDur.isEmpty) 0L else Rules.parseIntervalS(forDur)
 
-  /** One scheduler pass over every stored group of both engines. Returns
-    * the number of samples appended (recorded vectors + ALERTS exports).
+  /** One scheduler pass over every stored group of both engines, reading
+    * one pinned store version ([[graft.store.Store.pinned]]). Returns the
+    * number of samples appended (recorded vectors + ALERTS exports).
     */
-  def tick(): Long = {
+  def tick(): Long = graft.store.Store.pinned {
     val now = nowNs()
     seed(now)
     var written = 0L

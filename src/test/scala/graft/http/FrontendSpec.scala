@@ -1292,6 +1292,9 @@ class FrontendSpec extends SparkSpec {
       """timer line (\d)""".r.findAllMatchIn(body).map(_.group(1)).toSeq.sorted
     }
     assert(lines() == Seq("1", "2", "3", "4"))
+    def metric(name: String): Double =
+      s"(?m)^$name (\\S+)$$".r.findFirstMatchIn(
+        fe.route("/metrics", Params()).body).get.group(1).toDouble
     val timer = fe.startMaintenance(intervalS = 1, maxFiles = 2)
     try {
       val deadline = System.nanoTime() + 60L * 1000000000L
@@ -1299,7 +1302,36 @@ class FrontendSpec extends SparkSpec {
         Thread.sleep(250)
       assert(leafFiles() <= 2, s"not compacted: ${leafFiles()} files")
       assert(lines() == Seq("1", "2", "3", "4")) // results unchanged
+      // keep querying across further timer ticks, as a live deployment
+      // does: every answer must equal the pre-timer one
+      val hammerEnd = System.nanoTime() + 3L * 1000000000L
+      var answers = 0
+      while (System.nanoTime() < hammerEnd) {
+        assert(lines() == Seq("1", "2", "3", "4"), s"after $answers answers")
+        answers += 1
+      }
     } finally { timer.shutdownNow(); () }
+    assert(metric("graft_maintenance_runs_total") >= 1)
+    assert(metric("graft_maintenance_failures_total") == 0)
+    assert(metric("graft_maintenance_last_duration_seconds") > 0)
+    // a pass that fails (a dir with no inputs cannot build its store)
+    // moves the failure counter and keeps the timer running
+    val empty = java.nio.file.Files.createTempDirectory("graft-mfail").toFile
+    empty.deleteOnExit()
+    val broken = new Frontend(spark, empty.getAbsolutePath)
+    def brokenMetric(name: String): Double =
+      s"(?m)^$name (\\S+)$$".r.findFirstMatchIn(
+        broken.route("/metrics", Params()).body).get.group(1).toDouble
+    val failing = broken.startMaintenance(intervalS = 1)
+    try {
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (brokenMetric("graft_maintenance_runs_total") < 2 &&
+          System.nanoTime() < deadline)
+        Thread.sleep(100)
+    } finally { failing.shutdownNow(); () }
+    assert(brokenMetric("graft_maintenance_runs_total") >= 2)
+    assert(brokenMetric("graft_maintenance_failures_total") ==
+      brokenMetric("graft_maintenance_runs_total"))
   }
 
   test("ruler timer: a rule group posted over HTTP evaluates on the " +

@@ -245,102 +245,134 @@ class StoreSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.tenant")
   }
 
+  private def rm(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+  }
+
+  /** Every parquet file below `path`, relative to it, with its size. */
+  private def filesUnder(path: String): Map[String, Long] = {
+    val (fs, p) = Store.fsFor(path)
+    if (!fs.exists(p)) Map.empty
+    else {
+      val it = fs.listFiles(p, true)
+      val base = fs.makeQualified(p).toString + "/"
+      val out = Map.newBuilder[String, Long]
+      while (it.hasNext) {
+        val s = it.next()
+        val f = s.getPath.toString
+        if (f.endsWith(".parquet")) out += f.stripPrefix(base) -> s.getLen
+      }
+      out.result()
+    }
+  }
+
+  /** The root's head version, read back from its log on disk. */
+  private def logHead(root: String): Snapshot = new ManifestLog(root).head
+
+  /** The committed files of every table of `root`, as root-relative paths. */
+  private def committed(root: String): Set[String] =
+    logHead(root).tables.toSeq.flatMap { case (t, st) =>
+      st.files.keys.map(f => s"$t/$f") }.toSet
+
+  /** Every parquet file on disk below `root`'s tables. */
+  private def onDisk(root: String): Set[String] =
+    logHead(root).tables.keys.toSeq.flatMap(t =>
+      filesUnder(s"$root/$t").keys.map(f => s"$t/$f")).toSet
+
+  private def values(root: String, table: String): Seq[Long] =
+    Store.pinned(Store.readTable(spark, s"$root/$table")
+      .select("v").collect().map(_.getLong(0)).toSeq.sorted)
+
+  /** Commit `df` to `table` of `root` through a log of its own: what
+    * another process's writer does, or a writer before this process opens
+    * the root. Files are written in place.
+    */
+  private def commitAs(log: ManifestLog, root: String, table: String,
+      df: org.apache.spark.sql.DataFrame, partCols: Seq[String]): Unit = {
+    val before = filesUnder(s"$root/$table")
+    df.write.mode("append").partitionBy(partCols: _*).parquet(s"$root/$table")
+    val schema = org.apache.spark.sql.types.StructType(
+      df.schema.filterNot(f => partCols.contains(f.name)) ++
+        partCols.map(df.schema(_)))
+    log.commit(Seq(TableChange(table, filesUnder(s"$root/$table") -- before.keys,
+      created = Option.when(!log.head.tables.contains(table))((schema, partCols)))))
+  }
+
   test("expire drops partitions before the cutoff, later queries unaffected") {
     // scratch root so the shared store is untouched
     val root = "/root/repo/target/test-expire"
     val s = spark
     import s.implicits._
-    Store.expireRoot(spark, root, "9999-12-31") // clean slate
-    Seq((1L, "2024-01-01"), (2L, "2024-01-02"), (3L, "2024-01-03"))
-      .toDF("v", "date")
-      .write.mode("overwrite").partitionBy("date")
-      .parquet(s"$root/samples")
-    Store.expireRoot(spark, root, "2024-01-03")
-    val left = spark.read.parquet(s"$root/samples")
-    assert(left.select("v").collect().map(_.getLong(0)).sorted.toSeq == Seq(3L))
-    assert(!new java.io.File(s"$root/samples/date=2024-01-01").exists())
-    assert(new java.io.File(s"$root/samples/date=2024-01-03").exists())
+    rm(new java.io.File(root)) // clean slate
+    val log = new ManifestLog(root)
+    commitAs(log, root, "samples",
+      Seq((1L, "2024-01-01"), (2L, "2024-01-02"), (3L, "2024-01-03"))
+        .toDF("v", "date"), Seq("date"))
     // the REAL store layout nests date= under oid= (tenant-first
     // partition key) — expire must reach one level down
-    Seq((1L, "0", "2024-01-01"), (2L, "1", "2024-01-02"),
-      (3L, "0", "2024-01-03"))
-      .toDF("v", "oid", "date")
-      .write.mode("overwrite").partitionBy("oid", "date")
-      .parquet(s"$root/spans")
+    commitAs(log, root, "spans",
+      Seq((1L, "0", "2024-01-01"), (2L, "1", "2024-01-02"),
+        (3L, "0", "2024-01-03")).toDF("v", "oid", "date"), Seq("oid", "date"))
     Store.expireRoot(spark, root, "2024-01-03")
-    assert(spark.read.parquet(s"$root/spans")
-      .select("v").collect().map(_.getLong(0)).toSeq == Seq(3L))
+    assert(values(root, "samples") == Seq(3L))
+    assert(!new java.io.File(s"$root/samples/date=2024-01-01").exists())
+    assert(new java.io.File(s"$root/samples/date=2024-01-03").exists())
+    assert(values(root, "spans") == Seq(3L))
     assert(!new java.io.File(s"$root/spans/oid=0/date=2024-01-01").exists())
     assert(!new java.io.File(s"$root/spans/oid=1/date=2024-01-02").exists())
     assert(new java.io.File(s"$root/spans/oid=0/date=2024-01-03").exists())
+    assert(onDisk(root) == committed(root))
   }
+
+  /** Five micro-batch appends into one partition of a scratch root:
+    * five committed part files in `date=2024-01-01`.
+    */
+  private def fiveAppends(root: String): Unit = {
+    val s = spark
+    import s.implicits._
+    rm(new java.io.File(root))
+    val log = new ManifestLog(root)
+    for (i <- 1 to 5)
+      commitAs(log, root, "samples",
+        Seq((i.toLong, "2024-01-01")).toDF("v", "date"), Seq("date"))
+  }
+
+  private def leafFiles(root: String): Int =
+    new java.io.File(s"$root/samples/date=2024-01-01")
+      .listFiles().count(f => f.getName.endsWith(".parquet"))
 
   test("compact merges small-file partitions without changing results") {
-    val root = "/root/repo/target/test-compact"
-    val s = spark
-    import s.implicits._
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(new java.io.File(root))
-    // 5 micro-batch appends → ≥5 part files in the one partition
-    for (i <- 1 to 5)
-      Seq((i.toLong, s"2024-01-0$i", "2024-01-01")).toDF("v", "tag", "date")
-        .write.mode("append").partitionBy("date").parquet(s"$root/samples")
-    def files() = new java.io.File(s"$root/samples/date=2024-01-01")
-      .listFiles().count(f => f.getName.endsWith(".parquet"))
-    assert(files() >= 5)
-    val before = spark.read.parquet(s"$root/samples")
-      .orderBy("v").collect().map(_.getLong(0)).toSeq
-    val n = Store.compactRoot(spark, root, "samples", Seq("v"), maxFiles = 2)
+    val root = new java.io.File("target", "test-compact").getAbsolutePath
+    fiveAppends(root)
+    assert(leafFiles(root) == 5)
+    val before = values(root, "samples")
+    val n = Store.maintainRoot(spark, root, maxFiles = 2)
     assert(n == 1)
-    assert(files() == 1)
-    val after = spark.read.parquet(s"$root/samples")
-      .orderBy("v").collect().map(_.getLong(0)).toSeq
-    assert(after == before)
+    assert(leafFiles(root) == 1)
+    assert(logHead(root).tables("samples").files.size == 1)
+    assert(values(root, "samples") == before)
   }
 
-  test("compaction swap is crash-safe: a fault between the two renames " +
-      "leaves both copies on disk, and the next maintain pass recovers " +
-      "the table byte-identically") {
+  test("compaction is crash-safe: a fault after the commit but before the " +
+      "superseded files are deleted leaves the store answering as after, " +
+      "and the next maintain pass deletes them") {
     val root = "/root/repo/target/test-crash"
-    val s = spark
-    import s.implicits._
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(new java.io.File(root))
-    for (i <- 1 to 5)
-      Seq((i.toLong, "2024-01-01")).toDF("v", "date")
-        .write.mode("append").partitionBy("date").parquet(s"$root/samples")
-    val before = spark.read.parquet(s"$root/samples")
-      .orderBy("v").collect().map(_.getLong(0)).toSeq
-    val leaf = new java.io.File(s"$root/samples/date=2024-01-01")
-    // crash in the WORST window: live leaf renamed away, new data not yet
-    // promoted — both `.old` (original) and `.compact` (new) on disk
-    Store.compactFaultHook = _ => throw new RuntimeException("injected crash")
-    try intercept[RuntimeException] {
-      Store.compactRoot(spark, root, "samples", Seq("v"), maxFiles = 2)
-    } finally Store.compactFaultHook = _ => ()
-    assert(!leaf.exists(), "live leaf should be absent in the crash window")
-    assert(new java.io.File(leaf.getPath + ".old").exists())
-    assert(new java.io.File(leaf.getPath + ".compact").exists())
-    // the next maintenance pass recovers BEFORE selecting leaves: the
-    // complete new copy is promoted, scratch dirs are gone, contents match
-    val n = Store.compactRoot(spark, root, "samples", Seq("v"), maxFiles = 2)
-    assert(leaf.exists() && !new java.io.File(leaf.getPath + ".old").exists()
-      && !new java.io.File(leaf.getPath + ".compact").exists(), s"n=$n")
-    val after = spark.read.parquet(s"$root/samples")
-      .orderBy("v").collect().map(_.getLong(0)).toSeq
-    assert(after == before)
-    // an orphaned `.compact` NEXT TO a live leaf (crash before any
-    // rename) is garbage: the sweep deletes it and keeps the live data
-    val stray = new java.io.File(leaf.getPath + ".compact")
-    Seq((99L, "x")).toDF("v", "junk").write.parquet(stray.getPath)
-    Store.compactRoot(spark, root, "samples", Seq("v"), maxFiles = 2)
-    assert(leaf.exists() && !stray.exists())
-    assert(spark.read.parquet(s"$root/samples")
-      .orderBy("v").collect().map(_.getLong(0)).toSeq == before)
+    fiveAppends(root)
+    val before = values(root, "samples")
+    val v0 = logHead(root).version
+    Store.faultHook = step =>
+      if (step == "retire") throw new RuntimeException("injected crash")
+    try intercept[RuntimeException](Store.maintainRoot(spark, root, maxFiles = 2))
+    finally Store.faultHook = _ => ()
+    // the swap is committed: one file in the log, six on disk
+    assert(logHead(root).version == v0 + 1)
+    assert(logHead(root).tables("samples").files.size == 1)
+    assert(leafFiles(root) == 6)
+    assert(values(root, "samples") == before)
+    // the next maintenance pass sweeps the superseded copies
+    assert(Store.maintainRoot(spark, root, maxFiles = 2) == 0)
+    assert(onDisk(root) == committed(root) && leafFiles(root) == 1)
+    assert(values(root, "samples") == before)
   }
 
   test("maintenance walks run through the Hadoop FileSystem API: a " +
@@ -349,22 +381,18 @@ class StoreSpec extends SparkSpec {
     val local = "/root/repo/target/test-fsuri"
     val s = spark
     import s.implicits._
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
     rm(new java.io.File(local))
+    val log = new ManifestLog(root)
     for (i <- 1 to 4)
-      Seq((i.toLong, "2024-01-01"), (i.toLong + 10, "2023-12-31"))
-        .toDF("v", "date")
-        .write.mode("append").partitionBy("date").parquet(s"$root/samples")
-    assert(Store.compactRoot(spark, root, "samples", Seq("v"), maxFiles = 2) == 2)
+      commitAs(log, root, "samples",
+        Seq((i.toLong, "2024-01-01"), (i.toLong + 10, "2023-12-31"))
+          .toDF("v", "date"), Seq("date"))
+    assert(Store.maintainRoot(spark, root, maxFiles = 2) == 2)
     assert(new java.io.File(s"$local/samples/date=2024-01-01")
       .listFiles().count(_.getName.endsWith(".parquet")) == 1)
     Store.expireRoot(spark, root, "2024-01-01")
     assert(!new java.io.File(s"$local/samples/date=2023-12-31").exists())
-    assert(spark.read.parquet(s"$root/samples")
-      .select("v").collect().map(_.getLong(0)).sorted.toSeq ==
-      Seq(1L, 2L, 3L, 4L))
+    assert(values(root, "samples") == Seq(1L, 2L, 3L, 4L))
   }
 
   test("writer lock: a second live writer is refused; crashed holders " +
@@ -467,36 +495,60 @@ class StoreSpec extends SparkSpec {
     idle.release()
   }
 
-  test("negative dir probes expire: a family first pushed by ANOTHER " +
-      "process becomes visible to a read-only replica without a restart") {
-    val base = s"/root/repo/target/test-probe/${System.nanoTime()}"
-    val p = s"$base/prom_pushed"
-    assert(!Store.haveDir(p)) // probed absent, cached
-    new java.io.File(p).mkdirs() // the WRITER process creates it
-    assert(!Store.haveDir(p)) // inside the TTL: still served from cache
-    val old = Store.probeNegativeTtlMs
-    Store.probeNegativeTtlMs = 0
-    try {
-      assert(Store.haveDir(p)) // TTL elapsed: re-probed, now present
-      Store.probeNegativeTtlMs = old
-      assert(Store.haveDir(p)) // present is cached forever
-    } finally Store.probeNegativeTtlMs = old
-  }
-
-  test("reader cache expires for non-writer processes: files appended by " +
-      "ANOTHER process appear after the refresh bound") {
+  /** A store root this process reads but never writes: another process's
+    * log commits version 0, so [[Store.ensure]] builds nothing and takes
+    * no writer lock.
+    */
+  private def foreignStore(name: String): (String, String, ManifestLog) = {
     val s = spark
     import s.implicits._
-    val p = s"/root/repo/target/test-readers/${System.nanoTime()}/t"
-    Seq(1L, 2L).toDF("v").write.parquet(p)
-    assert(Store.readTable(spark, p).count() == 2)
-    // the "writer process" appends behind our back
-    Seq(3L).toDF("v").write.mode("append").parquet(p)
-    assert(Store.readTable(spark, p).count() == 2) // cached file index
-    val old = Store.replicaRefreshMs
-    Store.replicaRefreshMs = 0
-    try assert(Store.readTable(spark, p).count() == 3) // re-resolved
-    finally Store.replicaRefreshMs = old
+    val root = new java.io.File("target", name).getAbsolutePath
+    rm(new java.io.File(root))
+    val other = new ManifestLog(root)
+    commitAs(other, root, "samples",
+      Seq((1L, "0", "2024-01-01"), (2L, "1", "2024-01-01"))
+        .toDF("v", "oid", "date"), Seq("oid", "date"))
+    val dir = s"$root-input"
+    Store.overrideRoot(dir, root)
+    assert(Store.ensure(spark, dir) == root)
+    (dir, root, other)
+  }
+
+  test("a family first pushed by ANOTHER process routes for a non-writer " +
+      "on its next request, with no probe cache") {
+    val s = spark
+    import s.implicits._
+    val (dir, root, other) = foreignStore("test-foreign-family")
+    def pushed(): Option[Long] = Store.pinned(
+      Store.promPushed(spark, dir, "foreign_total", 0L, Long.MaxValue)
+        .map(_.count()))
+    assert(pushed().isEmpty) // the head lists no prom_pushed
+    val ts = 1704103200000000000L
+    commitAs(other, root, "prom_pushed",
+      Seq((ts, Map("__name__" -> "foreign_total"), 1.0, 7L, "0",
+        java.sql.Date.valueOf("2024-01-01")))
+        .toDF("timestamp_ns", "labels", "value", "fingerprint", "oid", "date"),
+      Seq("oid", "date"))
+    assert(pushed().contains(1L)) // the next request sees the new version
+  }
+
+  test("a non-writer process sees another process's commit on its next " +
+      "request, with no TTL") {
+    val s = spark
+    import s.implicits._
+    val (_, root, other) = foreignStore("test-foreign-reads")
+    assert(values(root, "samples") == Seq(1L, 2L))
+    Store.pinned {
+      assert(values(root, "samples") == Seq(1L, 2L))
+      // the "writer process" appends behind our back, mid-request
+      commitAs(other, root, "samples",
+        Seq((3L, "0", "2024-01-02")).toDF("v", "oid", "date"), Seq("oid", "date"))
+      // the request keeps reading the version it pinned
+      assert(values(root, "samples") == Seq(1L, 2L))
+    }
+    assert(values(root, "samples") == Seq(1L, 2L, 3L)) // the next request
+    // unpinned reads keep the head the last request caught up to
+    assert(Store.readTable(spark, s"$root/samples").count() == 3)
   }
 
   test("downsample partial merge is exact and idempotent: split partials " +
@@ -793,20 +845,8 @@ class StoreSpec extends SparkSpec {
     "prom_pushed", "prom_series", "prom_pushed_15s")
 
   /** Every parquet file of one store table, as paths below the table. */
-  private def tableFiles(table: String): Set[String] = {
-    val (fs, p) = Store.fsFor(s"${Store.rootFor(appendDir)}/$table")
-    if (!fs.exists(p)) Set.empty
-    else {
-      val it = fs.listFiles(p, true)
-      val base = fs.makeQualified(p).toString + "/"
-      val out = Set.newBuilder[String]
-      while (it.hasNext) {
-        val f = it.next().getPath.toString
-        if (f.endsWith(".parquet")) out += f.stripPrefix(base)
-      }
-      out.result()
-    }
-  }
+  private def tableFiles(table: String): Set[String] =
+    filesUnder(s"${Store.rootFor(appendDir)}/$table").keySet
 
   private def allFiles(): Map[String, Set[String]] =
     appendTables.map(t => t -> tableFiles(t)).toMap
@@ -954,5 +994,55 @@ class StoreSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
     assert(jobs.get > 0 && jobs.get <= 5, s"${jobs.get} jobs")
     assert(shuffleBytes.get == 0L, s"${shuffleBytes.get} shuffle bytes")
+  }
+
+  /** Rows of one pushed batch's series in the three tables a Loki push
+    * writes: (samples, time_series, metrics_15s).
+    */
+  private def pushedRows(body: String): (Long, Long, Long) = {
+    val fps = lokiRows(body).select("fingerprint").distinct()
+      .collect().map(_.getLong(0)).toSeq
+    def mine(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("fingerprint").isin(fps: _*)).count()
+    Store.pinned((
+      mine(Store.samples(spark, appendDir, 0L, Long.MaxValue)),
+      mine(Store.timeSeries(spark, appendDir)),
+      mine(Store.metrics15s(spark, appendDir, 0L, Long.MaxValue))))
+  }
+
+  test("a Loki push is one commit: a pin taken before it sees none of the " +
+      "samples/time_series/metrics_15s rows, and a pin taken after sees " +
+      "all of them") {
+    val root = Store.rootFor(appendDir)
+    val body = lokiBody("contract_commit", Seq("h0", "h1"), Seq(day1, day2))
+    val v0 = logHead(root).version
+    Store.pinned {
+      assert(pushedRows(body) == ((0L, 0L, 0L)))
+      assert(Store.appendLogs(spark, appendDir, lokiRows(body)) == 4)
+      assert(pushedRows(body) == ((0L, 0L, 0L)))
+    }
+    assert(logHead(root).version == v0 + 1)
+    assert(pushedRows(body) == ((4L, 2L, 4L)))
+  }
+
+  test("a fault after the data files are written but before the commit: " +
+      "the store answers as before, and the next maintain deletes the " +
+      "orphans") {
+    val root = Store.rootFor(appendDir)
+    val body = lokiBody("contract_fault", Seq("h0", "h1"), Seq(day1, day2))
+    val v0 = logHead(root).version
+    Store.faultHook = step =>
+      if (step == "commit") throw new RuntimeException("injected crash")
+    try intercept[RuntimeException](
+      Store.appendLogs(spark, appendDir, lokiRows(body)))
+    finally Store.faultHook = _ => ()
+    assert(logHead(root).version == v0)
+    assert(pushedRows(body) == ((0L, 0L, 0L)))
+    assert((onDisk(root) -- committed(root)).nonEmpty, "no orphan written")
+    Store.maintain(spark, appendDir)
+    assert(onDisk(root) == committed(root))
+    assert(pushedRows(body) == ((0L, 0L, 0L)))
+    assert(Store.appendLogs(spark, appendDir, lokiRows(body)) == 4)
+    assert(pushedRows(body) == ((4L, 2L, 4L)))
   }
 }

@@ -104,6 +104,24 @@ class RulerSchedulerSpec extends SparkSpec {
     assert(sweepAfter.getOrElse("loki", "missing") == "ok", sweepAfter)
   }
 
+  test("an unreadable marks table is re-read on a doubling tick interval " +
+      "and logged once per failure streak") {
+    val dir = freshStore()
+    // a plain FILE at the marks path makes every marks load fail
+    val marks = new java.io.File(Rules.rulesPath(dir) + "_marks")
+    marks.getParentFile.mkdirs()
+    java.nio.file.Files.write(marks.toPath, "not parquet".getBytes("UTF-8"))
+    val sched = new RulerScheduler(spark, dir,
+      () => (StartS + 86400L) * 1000000000L)
+    val err = new java.io.ByteArrayOutputStream()
+    Console.withErr(err) { for (_ <- 1 to 100) sched.tick(): Unit }
+    // reads at ticks 1, 2, 4, …, 64: log2(100) + 1 of them
+    assert(sched.marksReads == 7, s"${sched.marksReads} reads over 100 ticks")
+    val logged = err.toString("UTF-8").linesIterator
+      .count(_.contains("marks load failed"))
+    assert(logged == 1, err.toString("UTF-8"))
+  }
+
   test("scheduler ticks: each due tick writes exactly its grid points " +
       "back through the live append path; off-interval ticks are no-ops; " +
       "alerts export firing states; health records the evaluation") {
