@@ -93,7 +93,7 @@ object DevEndurance {
         if (dirs.isEmpty) Seq(f) else dirs.toSeq.flatMap(walk)
       }
       val tables = Seq("samples", "metrics_15s", "time_series",
-        "prom_pushed", "prom_pushed_15s", "prom_series")
+        "prom_samples", "prom_samples_15s", "prom_series")
       val perLeaf = tables.flatMap(t => walk(new java.io.File(s"$root/$t")))
         .map(l => Option(l.listFiles()).getOrElse(Array.empty[java.io.File])
           .count(_.getName.endsWith(".parquet")))

@@ -314,7 +314,7 @@ object HttpGates extends GateSet {
     // --- live-append maintenance loop: push metrics in 4 batches + ONE
     // trace set split across 2 batches -> Store.maintain (compaction +
     // downsample-partial merge) -> (a) PromQL on the pushed family routes
-    // through the prom_pushed_15s downsample (plan canary), (b) every
+    // through the prom_samples_15s downsample (plan canary), (b) every
     // append-table leaf is back under the file bound, (c) `>>` over the
     // split-pushed traces matches the whole-trace answer the oracle
     // derives — the operations story behind the reference's ctrl
@@ -368,7 +368,7 @@ object HttpGates extends GateSet {
         // path to actually run under this gate
         graft.store.Store.maintain(spark, tmp, maxFiles = 2)
         val over = leavesOverLimit(graft.store.Store.ensure(spark, tmp),
-          Seq("prom_pushed", "prom_pushed_15s", "spans", "span_attrs",
+          Seq("prom_samples", "prom_samples_15s", "spans", "span_attrs",
             "span_ancestors", "samples", "profiles"), 2)
 
         // (4) the downsample routing rule fires on LIVE data: plan canary
@@ -387,7 +387,7 @@ object HttpGates extends GateSet {
               case _ => Seq.empty[String]
             }
         }.flatten
-        if (!scanPaths.exists(_.contains("prom_pushed_15s")))
+        if (!scanPaths.exists(_.contains("prom_samples_15s")))
           throw new IllegalStateException(
             "downsample route did not fire on the pushed family; scanned: " +
               scanPaths.mkString(", "))

@@ -387,53 +387,53 @@ object Dedup {
     // of join/aggregate/checkpoint jobs (the same driver-shortcut-with-
     // distributed-fallback shape as the store's push-batch ancestor
     // closure). Labels are identical: min doc_id per component over the
-    // subgraph induced on `nodes`. Conf spark.graft.cc.driverMax bounds
-    // the collect (tuples of 2 longs; 2M ≈ 32 MB); 0 forces the
-    // distributed path — the spec's equivalence hook.
+    // subgraph induced on `nodes`. CcDriverMax bounds the collect (tuples
+    // of 2 longs; 2M ≈ 32 MB).
     val spark = nodes.sparkSession
-    val cap = spark.conf.getOption("spark.graft.cc.driverMax")
-      .map(_.toLong).getOrElse(2000000L)
-    if (cap > 0) {
-      // clamp before toInt: a cap set above Int.MaxValue must mean "use
-      // the driver path whenever limit() can express it", not a negative
-      // limit that throws at runtime
-      val capInt = math.min(cap, Int.MaxValue - 1L).toInt
-      val es = edges0.select(col("i"), col("j")).limit(capInt + 1).collect()
-      if (es.length <= cap) {
-        val ns = nodes.select(col("doc_id")).limit(capInt + 1).collect()
-        if (ns.length <= cap) {
-          val nodeSet = new java.util.HashSet[Long](ns.length * 2)
-          ns.foreach(r => nodeSet.add(r.getLong(0)): Unit)
-          val parent = new java.util.HashMap[Long, Long](ns.length * 2)
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-            var c = x // path compression
-            while (parent.getOrDefault(c, c) != c) {
-              val nxt = parent.get(c); parent.put(c, r); c = nxt
-            }
-            r
-          }
-          // union by MIN root: labels are doc_ids, so the surviving root
-          // of every merge is the component minimum — exactly the
-          // distributed min-label fixpoint. Edges with an endpoint
-          // outside `nodes` do not propagate (the distributed loop only
-          // labels/joins through `nodes` rows — induced-subgraph parity).
-          for (row <- es) {
-            val a = row.getLong(0); val b = row.getLong(1)
-            if (nodeSet.contains(a) && nodeSet.contains(b)) {
-              val ra = find(a); val rb = find(b)
-              if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-            }
-          }
-          val s = spark
-          import s.implicits._
-          return spark.createDataset(
-              ns.map(r => { val d = r.getLong(0); (d, find(d)) }).toSeq)
-            .toDF("doc_id", "cluster_id")
+    val es = edges0.select(col("i"), col("j")).limit(CcDriverMax + 1).collect()
+    lazy val ns = nodes.select(col("doc_id")).limit(CcDriverMax + 1).collect()
+    if (es.length > CcDriverMax || ns.length > CcDriverMax)
+      componentsDistributed(nodes, edges0, maxIters)
+    else {
+      val nodeSet = new java.util.HashSet[Long](ns.length * 2)
+      ns.foreach(r => nodeSet.add(r.getLong(0)): Unit)
+      val parent = new java.util.HashMap[Long, Long](ns.length * 2)
+      def find(x: Long): Long = {
+        var r = x
+        while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
+        var c = x // path compression
+        while (parent.getOrDefault(c, c) != c) {
+          val nxt = parent.get(c); parent.put(c, r); c = nxt
+        }
+        r
+      }
+      // union by MIN root: labels are doc_ids, so the surviving root
+      // of every merge is the component minimum — exactly the
+      // distributed min-label fixpoint. Edges with an endpoint
+      // outside `nodes` do not propagate (the distributed loop only
+      // labels/joins through `nodes` rows — induced-subgraph parity).
+      for (row <- es) {
+        val a = row.getLong(0); val b = row.getLong(1)
+        if (nodeSet.contains(a) && nodeSet.contains(b)) {
+          val ra = find(a); val rb = find(b)
+          if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
         }
       }
+      val s = spark
+      import s.implicits._
+      spark.createDataset(
+          ns.map(r => { val d = r.getLong(0); (d, find(d)) }).toSeq)
+        .toDF("doc_id", "cluster_id")
     }
+  }
+
+  private val CcDriverMax = 2000000
+
+  /** The distributed min-label rounds [[connectedComponents]] falls back
+    * to above [[CcDriverMax]] edges or nodes.
+    */
+  private[llm] def componentsDistributed(nodes: DataFrame, edges0: DataFrame,
+      maxIters: Int): DataFrame = {
     val edges = Materialize(
       edges0.union(edges0.select(col("j"), col("i"))).distinct())
     var labels = Materialize(

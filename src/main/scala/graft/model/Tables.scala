@@ -258,20 +258,30 @@ object Tables {
     * read instead of raw samples — 15s buckets cut the scan ~15× for typical
     * 1-sample/s series.
     */
-  def metrics15s(spark: SparkSession, dir: String): DataFrame = {
+  def metrics15s(spark: SparkSession, dir: String): DataFrame =
+    partials15s(metricSamples(spark, dir), Seq(col("fingerprint")),
+      sum(length(col("line"))).as("bytes"))
+
+  /** The 15s downsample PARTIALS of raw sample rows — the one aggregate
+    * behind both downsample tables (`metrics_15s`, `prom_samples_15s`), at
+    * build and on every push: per (`keys`, 15s bucket) the last value
+    * (argmax by timestamp) and its timestamp, min, max, sum and count,
+    * then `extra`. Partials of disjoint row sets merge exactly
+    * (`Store.mergePartials`), which is what lets each push append its own.
+    */
+  def partials15s(rows: DataFrame, keys: Seq[Column], extra: Column*): DataFrame = {
     val bucketNs = 15L * 1000 * 1000 * 1000
-    metricSamples(spark, dir)
-      .groupBy(col("fingerprint"),
+    val aggs = Seq(
+      max_by(col("value"), col("timestamp_ns")).as("last"),
+      max(col("timestamp_ns")).as("last_ts"),
+      min(col("value")).as("min"),
+      max(col("value")).as("max"),
+      sum(col("value")).as("sum"),
+      count(lit(1)).as("cnt")) ++ extra
+    rows.groupBy(keys :+
         (col("timestamp_ns") - pmod(col("timestamp_ns"), lit(bucketNs)))
-          .as("timestamp_ns"))
-      .agg(
-        max_by(col("value"), col("timestamp_ns")).as("last"),
-        max(col("timestamp_ns")).as("last_ts"),
-        min(col("value")).as("min"),
-        max(col("value")).as("max"),
-        sum(col("value")).as("sum"),
-        count(lit(1)).as("cnt"),
-        sum(length(col("line"))).as("bytes"))
+          .as("timestamp_ns"): _*)
+      .agg(aggs.head, aggs.tail: _*)
   }
 }
 

@@ -89,7 +89,8 @@ object Guards {
     */
   def seriesCount(spark: SparkSession, dir: String, sel: Selector): Long =
     sel.matchers
-      .foldLeft(graft.store.Store.promSeries(spark, dir, sel.name))(
+      .foldLeft(graft.store.Store.promSeries(spark, dir)
+        .filter(col("family") === sel.name))(
         (df, m) => df.filter(matcherCond(m)))
       .agg(approx_count_distinct(col("fingerprint")).as("n"))
       .head().getLong(0)

@@ -7,46 +7,35 @@ import org.apache.spark.sql.functions._
   * `reader/service/metadata.go:25-80`): `/api/v1/metadata` lists each
   * metric family with its type plus the live series count — the reference
   * scans the `time_series` dictionary for `__name__` + stored metadata;
-  * here each family's `prom_series` dictionary rows (tenant-scoped, like
-  * every store read) count distinct fingerprints.
+  * here one pass over the `prom_series` dictionary (tenant-scoped, like
+  * every store read) counts each family's distinct fingerprints.
   */
 object PromQLApi {
 
-  private val Families = Seq(
-    ("events_bucket", "histogram"),
-    ("events_total", "counter"),
-    ("events_value", "gauge"))
+  /** Types of the built families. Pushed families carry no scrape
+    * metadata, and Prometheus reports such metrics as "unknown".
+    */
+  private val Types = Map(
+    "events_bucket" -> "histogram",
+    "events_total" -> "counter",
+    "events_value" -> "gauge")
 
-  def metadata(spark: SparkSession, dir: String): DataFrame = {
-    val built = Families.map { case (name, typ) =>
-      graft.store.Store.promSeries(spark, dir, name)
-        .agg(countDistinct(col("fingerprint")).as("series"))
-        .select(lit(name).as("metric_name"), lit(typ).as("type"),
-          col("series"))
-    }.reduce(_ unionByName _)
-    // HTTP-pushed families carry no scrape metadata — Prometheus reports
-    // such metrics with type "unknown"
-    val pushed = graft.store.Store.promSeriesPushed(spark, dir)
+  def metadata(spark: SparkSession, dir: String): DataFrame =
+    graft.store.Store.promSeries(spark, dir)
       .groupBy(col("family").as("metric_name"))
       .agg(countDistinct(col("fingerprint")).as("series"))
-      .select(col("metric_name"), lit("unknown").as("type"), col("series"))
-    built.unionByName(pushed)
-  }
+      .select(col("metric_name"),
+        coalesce(element_at(typedLit(Types), col("metric_name")),
+          lit("unknown")).as("type"),
+        col("series"))
 
-  /** All family dictionaries with `__name__` folded into the label map —
+  /** Every family's dictionary rows, `__name__` inside the label map —
     * the Prometheus label surface treats the metric name as label zero
     * (`reader/service/metadata.go` serves labels off the same
     * time_series-style dictionary).
     */
   private def allSeries(spark: SparkSession, dir: String): DataFrame =
-    Families.map { case (name, _) =>
-      graft.store.Store.promSeries(spark, dir, name)
-        .select(graft.model.MapOps.update(col("labels"),
-          map(lit("__name__"), lit(name))).as("labels"))
-    }.reduce(_ unionByName _)
-      // pushed-family dictionary rows already carry __name__ in the map
-      .unionByName(graft.store.Store.promSeriesPushed(spark, dir)
-        .select(col("labels")))
+    graft.store.Store.promSeries(spark, dir).select(col("labels"))
 
   /** `/api/v1/labels` — distinct label names across every family
     * dictionary (dictionary-sized scan, never the sample tables).

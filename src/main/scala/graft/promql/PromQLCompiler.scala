@@ -1,9 +1,9 @@
 package graft.promql
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{DoubleType, LongType, MapType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{MapType, StringType}
 
 import graft.model.Tables
 import PromQLAst._
@@ -181,27 +181,15 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
   private def matcherCond(m: Matcher): Column = Matchers.cond(m)
 
   /** Scan the metric family for a selector, matchers applied, over
-    * [loNs, hiNs). The name picks the materialized family table
-    * (date-partitioned, fingerprint-sorted) statically, so only the
-    * queried family is in the plan and no query re-derives the counter
-    * cumsum window (the reference's ingest-time views, log.sql:96).
+    * [loNs, hiNs): the one metric fact table filtered on the family name
+    * (date-partitioned, family-then-fingerprint sorted), so no query
+    * re-derives the counter cumsum window (the reference's ingest-time
+    * views, log.sql:96).
     */
-  private def scan(sel: Selector, loNs: Long, hiNs: Long): DataFrame = {
-    // a name that was never built nor pushed selects no series: Prometheus
-    // answers such a query with an empty result, not an error, so a panel
-    // over a family that has not arrived yet shows no data
-    def noSamples = spark.createDataFrame(
-      java.util.Collections.emptyList[Row](),
-      StructType(Seq(StructField("timestamp_ns", LongType),
-        StructField("labels", MapType(StringType, StringType)),
-        StructField("value", DoubleType),
-        StructField("fingerprint", LongType))))
-    var df = graft.store.Store.promMetric(spark, dir, sel.name, loNs, hiNs)
-      .map(_.drop("date"))
-      .getOrElse(noSamples)
-    for (m <- sel.matchers) df = df.filter(matcherCond(m))
-    df
-  }
+  private def scan(sel: Selector, loNs: Long, hiNs: Long): DataFrame =
+    sel.matchers.foldLeft(
+      graft.store.Store.promMetric(spark, dir, sel.name, loNs, hiNs))(
+      (df, m) => df.filter(matcherCond(m)))
 
   /** Instant vector: at each eval point t, the most recent sample within
     * (t−lookback, t]. Bounded explode: each sample covers at most
@@ -588,41 +576,23 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
 
   private def downsampleEligible(fn: String, sel: Selector): Boolean = {
     val q = 15000000000L
-    // built families: only the gauge table has a downsample; counter and
-    // bucket stay raw. Any OTHER name is a pushed family — its 15s
-    // partials live in prom_pushed_15s ([[downsampleScan]] resolves,
-    // falling back to raw when nothing was ever pushed).
-    val familyOk = sel.name == "events_value" ||
-      !Set("events_total", "events_bucket")(sel.name)
-    DownsampleFns(fn) && familyOk &&
+    DownsampleFns(fn) &&
       sel.rangeNs.exists(_ % q == 0) && stepNs % q == 0 &&
       sel.offsetNs % q == 0 && gridStart % q == 0 // pinned @ grids may be unaligned
-  }
-
-  /** The 15s-partials scan for an eligible selector: the built gauge
-    * downsample, or the pushed-family downsample maintained by the live
-    * append path (`Store.appendMetrics`). None ⇒ no downsample exists for
-    * this name (nothing ever pushed) — caller falls back to raw.
-    */
-  private def downsampleScan(sel: Selector): Option[DataFrame] = {
-    val lo = gridStart - sel.rangeNs.get - sel.offsetNs
-    val hi = gridEnd + 1 - sel.offsetNs
-    if (sel.name == "events_value")
-      Some(graft.store.Store.promGauge15s(spark, dir, lo, hi).drop("date"))
-    else graft.store.Store.promPushed15s(spark, dir, sel.name, lo, hi)
   }
 
   /** Downsample route (`prom_queryable.go:150-160` raw-vs-downsample fork,
     * `TranspileLabelMatchersDownsample`): window the 15s partials instead
     * of raw samples. 15s buckets nest inside the aligned windows, so
-    * count=Σcnt, min/max fold, last=argmax(last_ts) are exact.
+    * count=Σcnt, min/max fold, last=argmax(last_ts) are exact. Returns the
+    * exploded bucket frame and the fold of `fn` over its partials.
     */
-  private def overTimeDownsampled(fn: String, sel: Selector,
-      scan15s: DataFrame): DataFrame = {
+  private def downsampledFrame(fn: String, sel: Selector): (DataFrame, Column) = {
     val rangeNs = sel.rangeNs.get
     val off = sel.offsetNs
-    var df = scan15s
-    for (m <- sel.matchers) df = df.filter(matcherCond(m))
+    val df = sel.matchers.foldLeft(graft.store.Store.promMetric15s(spark,
+        dir, sel.name, gridStart - rangeNs - off, gridEnd + 1 - off))(
+      (d, m) => d.filter(matcherCond(m)))
     val tsEff = col("timestamp_ns") + lit(off)
     // bucket [b, b+15s) is fully inside window (t-range, t] iff
     // t ∈ [b+15s, b+range] (timestamps never sit exactly on bucket or
@@ -634,18 +604,13 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
     val exploded = df.withColumn("t_ns",
       explode(when(firstT <= lastT, sequence(firstT, lastT, lit(stepNs)))
         .otherwise(array())))
-    val agg: Column = fn match {
+    exploded -> (fn match {
       case "count_over_time"   => sum(col("cnt")).cast("double")
       case "min_over_time"     => min(col("min"))
       case "max_over_time"     => max(col("max"))
       case "last_over_time"    => max_by(col("last"), col("last_ts"))
       case "present_over_time" => first(lit(1.0))
-    }
-    dropName(exploded
-      .groupBy(col("fingerprint"), col("t_ns"))
-      .agg(first(col("labels")).as("labels"), agg.as("value"))
-      .select(col("fingerprint"), col("labels"),
-        expr("t_ns div 1000000000").as("ts"), col("value")))
+    })
   }
 
   /** Plain windowed aggregation over the eval grid (`over_time.go:30-127`);
@@ -653,22 +618,16 @@ class PromQLCompiler(spark: SparkSession, dir: String, params: PromParams) {
     * function and alignment allow), or a SUBQUERY's inner eval grid.
     */
   private def overTime(fn: String, arg: PExpr, agg: Column): DataFrame = {
-    arg match {
+    val (frame, fold) = arg match {
       case sel: Selector if downsampleEligible(fn, sel) =>
-        downsampleScan(sel) match {
-          case Some(scan15s) => return overTimeDownsampled(fn, sel, scan15s)
-          case None => // no downsample for this name — fall through to raw
-        }
-      case _ =>
-    }
-    val frame = arg match {
-      case sel: Selector => rangeFrame(sel)
-      case sq: Subquery  => subqueryFrame(sq)
+        downsampledFrame(fn, sel)
+      case sel: Selector => (rangeFrame(sel), agg)
+      case sq: Subquery  => (subqueryFrame(sq), agg)
       case other => throw new IllegalArgumentException(s"range arg $other")
     }
     dropName(frame
       .groupBy(col("fingerprint"), col("t_ns"))
-      .agg(first(col("labels")).as("labels"), agg.as("value"))
+      .agg(first(col("labels")).as("labels"), fold.as("value"))
       .select(col("fingerprint"), col("labels"),
         expr("t_ns div 1000000000").as("ts"), col("value")))
   }

@@ -26,10 +26,17 @@ import graft.model.{Materialize, Tables}
   *   metrics_15s  — 15s pre-aggregated downsample with PLAIN partial
   *                  columns (cnt/sum/min/max/last/bytes), the rewrite
   *                  target for eligible range aggregations
-  *   prom_*       — the PromQL metric families (gauge/counter/bucket)
-  *                  materialized once instead of re-running the cumsum
-  *                  window per query (ingest-time MV in the reference,
-  *                  log.sql:96-107)
+  *   prom_samples — every PromQL metric sample, built or pushed, in one
+  *                  fact table keyed by `family` (= `__name__`) and sorted
+  *                  by (family, fingerprint, timestamp_ns): the build's
+  *                  families (gauge/counter/bucket) are its first push, so
+  *                  no query re-runs the cumsum window (`samples_v3`,
+  *                  log.sql:25-32)
+  *   prom_samples_15s — the one 15s downsample of every family: each
+  *                  write appends the partials of its own rows (the
+  *                  reference's `metrics_15s_mv`, log.sql:96-107)
+  *   prom_series  — the metric series dictionary (family, fingerprint →
+  *                  labels), the `time_series` analog for PromQL
   *
   * Appends (one HTTP push, or one ruler tick's writeback) share one
   * contract ([[appendBatch]]): the batch is decoded once, by collecting
@@ -81,7 +88,7 @@ object Store {
   // changes: a root's log would otherwise keep serving the old one
   private[store] def rootFor(dir: String): String =
     rootOverrides.getOrElse(dir,
-      storeRoot + "/v8/" + dir.replaceAll("[^a-zA-Z0-9.]+", "_"))
+      storeRoot + "/v9/" + dir.replaceAll("[^a-zA-Z0-9.]+", "_"))
 
   /** Tenant (`oid`) column — every reference table leads its partition/
     * order key with the organization id (`traces.sql:7`,
@@ -231,20 +238,40 @@ object Store {
     })
 
   private val BuiltTables = Seq("samples", "time_series", "metrics_15s",
-    "spans", "span_attrs", "span_ancestors", "profiles", "prom_gauge",
-    "prom_counter", "prom_bucket", "prom_gauge_15s", "prom_series")
+    "spans", "span_attrs", "span_ancestors", "profiles", "prom_samples",
+    "prom_samples_15s", "prom_series")
+
+  /** Sort key of both metric fact tables: a family's rows are contiguous,
+    * so row-group statistics skip the other families of a leaf.
+    */
+  private val MetricSort = Seq("family", "fingerprint", "timestamp_ns")
+
+  /** Metric sample rows (timestamp_ns, labels, value, fingerprint) with
+    * their `family` column, the `__name__` label.
+    */
+  private def withFamily(rows: DataFrame): DataFrame =
+    rows.withColumn("family", element_at(col("labels"), "__name__"))
+
+  /** The 15s downsample partials of metric rows carrying `family`. */
+  private def metricPartials(rows: DataFrame): DataFrame =
+    Tables.partials15s(rows, Seq(col("family"), col("fingerprint")),
+      first(col("labels")).as("labels"))
 
   private val buildLock = new Object
 
   /** The one-time build: write every table, then commit them all as
-    * version 0, under the single-writer lock like every mutating path. A
-    * build that dies before its commit leaves no version; the next ensure
-    * rebuilds over it.
+    * version 0, under the single-writer lock like every mutating path. The
+    * inputs are resolved before the lock is taken, so a dir without them
+    * fails with no lock file and no heartbeat. A build that dies before
+    * its commit leaves no version; the next ensure rebuilds over it.
     */
   private def build(spark: SparkSession, dir: String, root: String): Unit = {
-    writerLock(root).ensureHeld()
     val logs = Tables.logs(spark, dir)
-    val bucketNs = 15L * 1000 * 1000 * 1000
+    // the built metric families are the store's first metric push: the
+    // same fact table, partials and dictionary rows as appendMetrics
+    val metrics = withFamily(Tables.gaugeSamples(spark, dir)
+      .unionByName(Tables.counterSamples(spark, dir))
+      .unionByName(Tables.bucketSamples(spark, dir)))
     // the reference materializes tempo_traces / tempo_traces_attrs_gin /
     // profiles as date-partitioned tables (traces.sql:7-32, profiles.sql:5-17)
     val partitioned: Seq[(String, DataFrame, Seq[String])] = Seq(
@@ -259,24 +286,8 @@ object Store {
         Seq("trace_id", "span_id")),
       ("profiles", graft.prof.Profiles.derive(spark, dir),
         Seq("service_name", "timestamp_ns")),
-      ("prom_gauge", Tables.gaugeSamples(spark, dir),
-        Seq("fingerprint", "timestamp_ns")),
-      ("prom_counter", Tables.counterSamples(spark, dir),
-        Seq("fingerprint", "timestamp_ns")),
-      ("prom_bucket", Tables.bucketSamples(spark, dir),
-        Seq("fingerprint", "timestamp_ns")),
-      ("prom_gauge_15s", Tables.gaugeSamples(spark, dir)
-        .groupBy(col("fingerprint"),
-          (col("timestamp_ns") - pmod(col("timestamp_ns"), lit(bucketNs)))
-            .as("timestamp_ns"))
-        .agg(first(col("labels")).as("labels"),
-          max_by(col("value"), col("timestamp_ns")).as("last"),
-          max(col("timestamp_ns")).as("last_ts"),
-          min(col("value")).as("min"),
-          max(col("value")).as("max"),
-          sum(col("value")).as("sum"),
-          count(lit(1)).as("cnt")),
-        Seq("fingerprint", "timestamp_ns")))
+      ("prom_samples", metrics, MetricSort),
+      ("prom_samples_15s", metricPartials(metrics), MetricSort))
     // the series DICTIONARIES are flat and fingerprint-hash sharded: a
     // single-file dictionary is a one-task straggler at 1e8 series.
     // prom_series is the per-family `time_series` analog that admission
@@ -284,14 +295,9 @@ object Store {
     val dicts: Seq[(String, DataFrame)] = Seq(
       ("time_series", logs.select(col("fingerprint"), col("labels"))
         .dropDuplicates("fingerprint")),
-      ("prom_series", Seq(
-          "events_value"  -> Tables.gaugeSamples(spark, dir),
-          "events_total"  -> Tables.counterSamples(spark, dir),
-          "events_bucket" -> Tables.bucketSamples(spark, dir))
-        .map { case (n, f) =>
-          f.select(lit(n).as("family"), col("fingerprint"), col("labels"))
-            .dropDuplicates("family", "fingerprint")
-        }.reduce(_.unionByName(_))))
+      ("prom_series", metrics.select(col("family"), col("fingerprint"),
+        col("labels")).dropDuplicates("family", "fingerprint")))
+    writerLock(root).ensureHeld()
     val written =
       partitioned.map { case (t, df, sort) =>
         t -> (writePartitioned(df, s"$root/$t", sort), DatePartitions)
@@ -313,14 +319,13 @@ object Store {
     tenantFilter(spark,
       readTable(spark, s"${ensure(spark, dir)}/time_series")).drop("oid")
 
-  /** Metric-family series dictionary rows for one family:
-    * (fingerprint, labels). Series-ever-seen, not window-scoped — the
-    * cheap upper bound admission checks want.
+  /** The metric series dictionary, every family: (family, fingerprint,
+    * labels), `__name__` inside the labels. Series-ever-seen, not
+    * window-scoped — the cheap upper bound admission checks want.
     */
-  def promSeries(spark: SparkSession, dir: String, family: String): DataFrame =
+  def promSeries(spark: SparkSession, dir: String): DataFrame =
     tenantFilter(spark,
-      readTable(spark, s"${ensure(spark, dir)}/prom_series"))
-      .filter(col("family") === family).drop("oid", "family")
+      readTable(spark, s"${ensure(spark, dir)}/prom_series")).drop("oid")
 
   /** Touch every store table once (footer and data reads) so a
     * fresh session's first real query doesn't pay the cold-reader cost —
@@ -435,14 +440,6 @@ object Store {
   def metrics15s(spark: SparkSession, dir: String, loNs: Long, hiNs: Long): DataFrame =
     scanWindow(spark, s"${ensure(spark, dir)}/metrics_15s", loNs, hiNs)
 
-  /** 15s pre-aggregated gauge downsample (the `metrics_15s` analog for the
-    * PromQL families; the reference's raw-vs-downsample fork is
-    * `prom_queryable.go:150-160`).
-    */
-  def promGauge15s(spark: SparkSession, dir: String,
-      loNs: Long, hiNs: Long): DataFrame =
-    scanWindow(spark, s"${ensure(spark, dir)}/prom_gauge_15s", loNs, hiNs)
-
   /** Bounded ancestor closure (trace_id, span_id, anc_id, timestamp_ns):
     * one row per (span, proper ancestor), built once at ingest by iterative
     * doubling — ⌈log₂ depth⌉ self-joins, depth capped at 64. TraceQL's
@@ -451,7 +448,7 @@ object Store {
     * bounded by 64× the span table, ~5× for typical trace shapes; the same
     * space-for-join trade as the attrs GIN.
     */
-  private def ancestorClosure(spansDf: DataFrame): DataFrame = {
+  private[store] def ancestorClosure(spansDf: DataFrame): DataFrame = {
     val base = spansDf
       .filter(col("parent_id").isNotNull)
       .select(col("trace_id"), col("span_id"),
@@ -481,10 +478,12 @@ object Store {
     clos
   }
 
+  private val ClosureDriverMax = 500000
+
   /** Driver-side ancestor closure for one PUSH batch's edge set — a push
     * is one bounded HTTP request (the reference's writer computes its GIN
-    * rows in-process per batch the same way), so for batches under
-    * `spark.graft.closure.driverMax` edges the ⌈log₂ depth⌉ rounds of
+    * rows in-process per batch the same way), so for batches of at most
+    * [[ClosureDriverMax]] edges the ⌈log₂ depth⌉ rounds of
     * Spark jobs in [[ancestorClosure]] collapse to one in-memory walk:
     * (trace_id, span_id) → parent map, emit every proper ancestor up to
     * depth 64. Input rows: (trace_id, span_id, parent_id | null, ts).
@@ -571,19 +570,8 @@ object Store {
       val dict = appendDictDelta(spark, root, "time_series",
         withPushOid(spark, batch.select(col("fingerprint"), col("labels"))),
         Seq("oid", "fingerprint"))
-      val bucketNs = 15L * 1000 * 1000 * 1000
-      val partials = batch.coalesce(1)
-        .groupBy(col("fingerprint"),
-          (col("timestamp_ns") - pmod(col("timestamp_ns"), lit(bucketNs)))
-            .as("timestamp_ns"))
-        .agg(
-          max_by(col("value"), col("timestamp_ns")).as("last"),
-          max(col("timestamp_ns")).as("last_ts"),
-          min(col("value")).as("min"),
-          max(col("value")).as("max"),
-          sum(col("value")).as("sum"),
-          count(lit(1)).as("cnt"),
-          sum(length(col("line"))).as("bytes"))
+      val partials = Tables.partials15s(batch.coalesce(1),
+        Seq(col("fingerprint")), sum(length(col("line"))).as("bytes"))
       Seq(samples, appendWrite(root, "metrics_15s",
         withPushOid(spark, withDate(partials)),
         Seq("fingerprint", "timestamp_ns"))) ++ dict
@@ -782,27 +770,17 @@ object Store {
       // in-memory walk instead of ⌈log₂ depth⌉ rounds of join/dedup/count
       // jobs — the dominant latency of a trace push); anything over the
       // cap falls back to the distributed doubling, which stays
-      // shuffle-bounded. Conf spark.graft.closure.driverMax (edges; 0
-      // forces the distributed path — the spec's equivalence hook).
-      val driverMax = spark.conf
-        .getOption("spark.graft.closure.driverMax")
-        .map(_.toLong).getOrElse(500000L)
-      val collected: Option[Array[(Long, Long, Option[Long], Long)]] =
-        if (driverMax <= 0) None
-        else {
-          val rows = closureInput.limit(driverMax.toInt + 1).collect()
-          if (rows.length > driverMax) None
-          else Some(rows.map(r => (r.getLong(0), r.getLong(1),
-            if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getLong(3))))
-        }
-      val anc = collected match {
-        case Some(edges) =>
+      // shuffle-bounded
+      val rows = closureInput.limit(ClosureDriverMax + 1).collect()
+      val anc =
+        if (rows.length <= ClosureDriverMax) {
+          val edges = rows.map(r => (r.getLong(0), r.getLong(1),
+            if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getLong(3)))
           val s = spark
           import s.implicits._
           spark.createDataset(closureInMemory(edges))
             .toDF("trace_id", "span_id", "anc_id", "timestamp_ns")
-        case None => ancestorClosure(closureInput)
-      }
+        } else ancestorClosure(closureInput)
       val storedAnc = scopeToBatch(tenantFilter(spark,
           readTable(spark, s"$root/span_ancestors")))
         .select(col("trace_id"), col("span_id"), col("anc_id"))
@@ -816,48 +794,34 @@ object Store {
 
   /** Live metric ingest (remote-write / OTLP metrics / Datadog series /
     * Influx fields): decoded samples — (timestamp_ns, labels, value,
-    * fingerprint), `__name__` inside the label map — land in the
-    * `prom_pushed` fact table (same oid/date layout + fingerprint sort as
-    * the built families) and NEW (family, fingerprint) pairs join the
-    * `prom_series` dictionary, so the labels/series/metadata APIs and the
-    * PromQL compiler (via [[promMetric]]'s pushed-family fallback) see
-    * them without any table rewrite. Returns sample rows appended.
+    * fingerprint), `__name__` inside the label map — land in the one
+    * metric store the build wrote, exactly as the built families did:
+    *
+    *   - `prom_samples` gains the rows, keyed by `family` = `__name__`, so
+    *     a pushed sample of a built family is read by the same scan;
+    *   - `prom_series` gains only NEW (family, fingerprint) pairs, so the
+    *     labels/series/metadata APIs see them;
+    *   - `prom_samples_15s` gains the batch's own 15s PARTIALS: independent
+    *     batches append disjoint partial rows for one bucket, readers
+    *     ([[promMetric15s]]) and [[maintain]] merge them associatively, so
+    *     the PromQL downsample route fires on live data too.
+    *
+    * Same protocol as every append ([[appendBatch]]). Returns sample rows
+    * appended.
     */
   def appendMetrics(spark: SparkSession, dir: String, rows: DataFrame): Long =
-    appendBatch(spark, dir, rows.select(col("timestamp_ns"),
-        col("labels"), col("value"), col("fingerprint"))) { (root, batch) =>
-      val pushed = appendWrite(root, "prom_pushed",
-        withPushOid(spark, withDate(batch)), Seq("fingerprint", "timestamp_ns"))
+    appendBatch(spark, dir, withFamily(rows.select(col("timestamp_ns"),
+        col("labels"), col("value"), col("fingerprint")))) { (root, batch) =>
+      val samples = appendWrite(root, "prom_samples",
+        withPushOid(spark, withDate(batch)), MetricSort)
       val dict = appendDictDelta(spark, root, "prom_series",
         withPushOid(spark, batch
-          .select(element_at(col("labels"), "__name__").as("family"),
-            col("fingerprint"), col("labels"))
+          .select(col("family"), col("fingerprint"), col("labels"))
           .filter(col("family").isNotNull)),
         Seq("oid", "family", "fingerprint"))
-      // the batch's own 15s downsample PARTIALS (the `metrics_15s` MV
-      // analog for pushed families, log.sql:96-107): independent batches
-      // append disjoint partial rows for the same bucket, the readers
-      // ([[promPushed15s]]) merge them associatively, and [[maintain]]
-      // merges them physically — so the PromQL downsample routing rule
-      // fires on LIVE data, not only the batch-built store
-      val bucketNs = 15L * 1000 * 1000 * 1000
-      val partials = batch.coalesce(1)
-        .groupBy(
-          element_at(col("labels"), "__name__").as("family"),
-          col("fingerprint"),
-          (col("timestamp_ns") - pmod(col("timestamp_ns"), lit(bucketNs)))
-            .as("timestamp_ns"))
-        .agg(first(col("labels")).as("labels"),
-          max_by(col("value"), col("timestamp_ns")).as("last"),
-          max(col("timestamp_ns")).as("last_ts"),
-          min(col("value")).as("min"),
-          max(col("value")).as("max"),
-          sum(col("value")).as("sum"),
-          count(lit(1)).as("cnt"))
-        .filter(col("family").isNotNull)
-      Seq(pushed, appendWrite(root, "prom_pushed_15s",
-        withPushOid(spark, withDate(partials)),
-        Seq("family", "fingerprint", "timestamp_ns"))) ++ dict
+      Seq(samples, appendWrite(root, "prom_samples_15s",
+        withPushOid(spark, withDate(metricPartials(batch.coalesce(1)))),
+        MetricSort)) ++ dict
     }
 
   /** Live profile ingest (pprof `/ingest`, OTLP profiles): rows already in
@@ -871,53 +835,29 @@ object Store {
         Seq("service_name", "timestamp_ns")))
     }
 
-  /** All pushed-family dictionary rows (fingerprint, labels, family) —
-    * the [[promSeries]] surface for families that arrived over HTTP
-    * rather than the build. Empty frame when nothing was ever pushed.
+  /** One metric family's raw samples over [loNs, hiNs): (timestamp_ns,
+    * labels, value, fingerprint). A name never built nor pushed selects
+    * no rows — Prometheus answers such a query with an empty result.
     */
-  def promSeriesPushed(spark: SparkSession, dir: String): DataFrame =
-    tenantFilter(spark,
-      readTable(spark, s"${ensure(spark, dir)}/prom_series"))
-      .filter(!col("family").isin("events_value", "events_total",
-        "events_bucket"))
-      .drop("oid")
+  def promMetric(spark: SparkSession, dir: String, name: String,
+      loNs: Long, hiNs: Long): DataFrame =
+    scanWindow(spark, s"${ensure(spark, dir)}/prom_samples", loNs, hiNs)
+      .filter(col("family") === name).drop("family", "date")
 
-  /** Pushed-family fact scan: `prom_pushed` filtered to one `__name__`
-    * over the window. None until something was pushed.
+  /** One metric family's 15s downsample over [loNs, hiNs), merged per
+    * bucket ON READ: independent writes append disjoint PARTIAL rows for
+    * one bucket, and [[mergePartials]] is associative, so the read is
+    * exact in any compaction state — the AggregatingMergeTree-on-SELECT
+    * semantics of the reference's downsample MV (its raw-vs-downsample
+    * fork is `prom_queryable.go:150-160`). [[maintain]] applies the SAME
+    * merge physically, so steady-state scans see ~1 row per bucket.
     */
-  def promPushed(spark: SparkSession, dir: String, name: String,
-      loNs: Long, hiNs: Long): Option[DataFrame] = {
-    val root = ensure(spark, dir)
-    if (!snapshot(root).tables.contains("prom_pushed")) None
-    else Some(scanWindow(spark, s"$root/prom_pushed", loNs, hiNs)
-      .filter(element_at(col("labels"), "__name__") === name))
-  }
-
-  /** Pushed-family 15s downsample, merged per bucket ON READ: independent
-    * push batches append disjoint PARTIAL rows for the same bucket
-    * ([[appendMetrics]]), and the merge functions (Σcnt/Σsum, min/max
-    * fold, argmax-by-last_ts) are associative, so the read is exact in
-    * any compaction state — the AggregatingMergeTree-on-SELECT semantics
-    * of the reference's downsample MV. [[maintain]] applies the SAME
-    * merge physically, so steady-state scans see ~1 row per bucket and
-    * this groupBy degenerates to a near-no-op over presorted buckets.
-    * None until a metric push ever happened.
-    */
-  def promPushed15s(spark: SparkSession, dir: String, name: String,
-      loNs: Long, hiNs: Long): Option[DataFrame] = {
-    val root = ensure(spark, dir)
-    if (!snapshot(root).tables.contains("prom_pushed_15s")) None
-    else Some(scanWindow(spark, s"$root/prom_pushed_15s", loNs, hiNs)
-      .filter(col("family") === name)
-      .groupBy(col("fingerprint"), col("timestamp_ns"))
-      .agg(first(col("labels")).as("labels"),
-        max_by(col("last"), col("last_ts")).as("last"),
-        max(col("last_ts")).as("last_ts"),
-        min(col("min")).as("min"),
-        max(col("max")).as("max"),
-        sum(col("sum")).as("sum"),
-        sum(col("cnt")).as("cnt")))
-  }
+  def promMetric15s(spark: SparkSession, dir: String, name: String,
+      loNs: Long, hiNs: Long): DataFrame =
+    mergePartials(
+      scanWindow(spark, s"${ensure(spark, dir)}/prom_samples_15s", loNs, hiNs)
+        .filter(col("family") === name).drop("date"))
+      .drop("family")
 
   /** Test-only fault injection before "commit" (data files written) and
     * "retire" (version committed, superseded files not yet deleted).
@@ -1081,7 +1021,7 @@ object Store {
   private def sweep(root: String): Unit = {
     val fs = fsFor(root)._1
     fs.delete(new Path(s"$root/_staging"), true): Unit
-    for (t <- BuiltTables ++ Seq("prom_pushed", "prom_pushed_15s")) {
+    for (t <- BuiltTables) {
       val live = logFor(root).referenced(t)
       listTable(s"$root/$t").keysIterator.filterNot(live)
         .foreach(f => fs.delete(new Path(s"$root/$t/$f"), false): Unit)
@@ -1099,8 +1039,8 @@ object Store {
   private[store] def mergePartials(df: DataFrame): DataFrame = {
     // oid/date are the batch-compaction partition tags: leaves are
     // disjoint in them, so including them keeps the merge per-leaf
-    // inside the one-job-per-table rewrite (read paths never carry them
-    // into this merge — scanWindow drops oid and never selects date)
+    // inside the one-job-per-table rewrite (read paths drop both before
+    // they merge)
     val keys = Seq("oid", "date", "family", "fingerprint", "timestamp_ns")
       .filter(df.columns.contains)
     val mergeFns: Map[String, Column] = Map(
@@ -1149,9 +1089,8 @@ object Store {
           ("span_attrs", Seq("key", "val", "trace_id"), None, 1),
           ("span_ancestors", Seq("trace_id", "span_id"), None, 1),
           ("profiles", Seq("service_name", "timestamp_ns"), None, 1),
-          ("prom_pushed", Seq("fingerprint", "timestamp_ns"), None, 1),
-          ("prom_pushed_15s", Seq("family", "fingerprint", "timestamp_ns"),
-            pm, 1),
+          ("prom_samples", MetricSort, None, 1),
+          ("prom_samples_15s", MetricSort, pm, 1),
           ("time_series", Seq("fingerprint"), None, dictShards(spark)),
           ("prom_series", Seq("fingerprint"), None, dictShards(spark)))
       // one compaction job per table: overlap the tables on a small pool
@@ -1177,17 +1116,4 @@ object Store {
     n
   }
 
-  def promMetric(spark: SparkSession, dir: String, name: String,
-      loNs: Long, hiNs: Long): Option[DataFrame] = {
-    val table = name match {
-      case "events_value"  => Some("prom_gauge")
-      case "events_total"  => Some("prom_counter")
-      case "events_bucket" => Some("prom_bucket")
-      case _               => None
-    }
-    table.map(t => scanWindow(spark, s"${ensure(spark, dir)}/$t", loNs, hiNs))
-      // names outside the built families may have arrived over HTTP —
-      // the pushed fact table is their home (appendMetrics)
-      .orElse(promPushed(spark, dir, name, loNs, hiNs))
-  }
 }

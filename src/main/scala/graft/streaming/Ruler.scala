@@ -56,19 +56,15 @@ object Ruler {
     * [[graft.store.Store.appendMetrics]], the same append path
     * remote-write lands in — so the recorded family is immediately
     * PromQL-queryable over HTTP (labels/series/metadata included) and
-    * gains 15s downsample partials like any pushed family. Label
-    * precedence per the reference: sample labels < rule static labels <
-    * `__name__` = the record name. Returns samples pushed.
+    * gains 15s downsample partials like any pushed family. Labels per
+    * [[Rules.recordLabels]]. Returns samples pushed.
     */
   def writeback(spark: SparkSession, dir: String, record: String,
       ruleLabels: Map[String, String], query: String,
       params: EvalParams): Long = {
-    val overlay = (ruleLabels + ("__name__" -> record)).toSeq
-      .flatMap { case (k, v) => Seq(lit(k), lit(v)) }
     val vector = new LogQLCompiler(spark, dir, params)
       .compileMetric(LogQLParser.parseOrThrow(query))
-      .select(
-        graft.model.MapOps.update(col("labels"), map(overlay: _*)).as("labels"),
+      .select(Rules.recordLabels(ruleLabels, record).as("labels"),
         (col("ts") * 1000000000L).as("timestamp_ns"),
         col("value"))
       .withColumn("fingerprint",

@@ -216,23 +216,17 @@ final class RulerScheduler(spark: SparkSession, dir: String,
 
   /** Evaluate one recording rule on its OWN engine ([[Rules.evalVector]]
     * per kind) and write the vector back through the live metrics append
-    * path — the [[Ruler.writeback]] semantics (`writeback.go:13-41` label
-    * precedence: sample < rule labels < `__name__`), engine-dispatched.
+    * path — the [[Ruler.writeback]] semantics (labels per
+    * [[Rules.recordLabels]]), engine-dispatched.
     */
   private def recordWriteback(kind: String, r: Rules.Rule, intervalS: Long,
       startNs: Long, lastPointNs: Long): Long = {
     val stepS = math.max(1L, intervalS)
-    val overrides = r.labels + ("__name__" -> r.record)
-    val keys = overrides.keys.toSeq
-    val overrideMap = map(
-      overrides.flatMap { case (k, v) => Seq(lit(k), lit(v)) }.toSeq: _*)
-    val merged = map_concat(
-      map_filter(col("labels"), (k, _) => !k.isin(keys: _*)), overrideMap)
     val out = Rules.evalVector(spark, dir, kind, r.expr,
         EvalParams(startNs, lastPointNs + stepS * NsPerS, stepS))
       .filter(col("ts") * NsPerS >= startNs &&
         col("ts") * NsPerS <= lastPointNs) // clamp to the tick's points
-      .select(merged.as("labels"),
+      .select(Rules.recordLabels(r.labels, r.record).as("labels"),
         (col("ts") * NsPerS).as("timestamp_ns"), col("value"))
       .withColumn("fingerprint",
         graft.model.Tables.fingerprintOf(col("labels")))
@@ -252,19 +246,15 @@ final class RulerScheduler(spark: SparkSession, dir: String,
     */
   private def appendNew(name: String, rows: org.apache.spark.sql.DataFrame,
       startNs: Long, lastPointNs: Long): Long = {
-    val fresh =
-      graft.store.Store.promPushed(spark, dir, name, startNs,
-          lastPointNs + 1) match {
-        // no broadcast hint: in the normal path the existing side is a
-        // few grid points (auto-broadcast), but a lost-marks catch-up
-        // over a long window against a fingerprint-rich family can make
-        // it large — let the planner pick the join strategy there
-        case Some(existing) => rows.join(
-          existing.select("fingerprint", "timestamp_ns").distinct(),
-          Seq("fingerprint", "timestamp_ns"), "left_anti")
-        case None => rows
-      }
-    graft.store.Store.appendMetrics(spark, dir, fresh)
+    // no broadcast hint: in the normal path the existing side is a few
+    // grid points (auto-broadcast), but a lost-marks catch-up over a long
+    // window against a fingerprint-rich family can make it large — let
+    // the planner pick the join strategy there
+    val existing = graft.store.Store.promMetric(spark, dir, name, startNs,
+      lastPointNs + 1)
+    graft.store.Store.appendMetrics(spark, dir, rows.join(
+      existing.select("fingerprint", "timestamp_ns").distinct(),
+      Seq("fingerprint", "timestamp_ns"), "left_anti"))
   }
 
   /** Evaluate one alerting rule's state machine and push the NEW grid

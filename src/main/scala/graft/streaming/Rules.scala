@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.logql.{EvalParams, LogQLCompiler, LogQLParser}
@@ -483,10 +483,18 @@ object Rules {
         .select(col("labels"), col("ts"), col("value"))
   }
 
+  /** The labels of a recorded sample (`writeback.go:13-41`): the sample's
+    * own `labels` < the rule's static labels < `__name__` = the record
+    * name. Every recording-rule writer applies this one overlay.
+    */
+  def recordLabels(ruleLabels: Map[String, String], record: String): Column =
+    graft.model.MapOps.update(col("labels"),
+      map((ruleLabels + ("__name__" -> record)).toSeq
+        .flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*))
+
   /** Evaluate every RECORDING rule of a group over the grid and append the
-    * results to the recorded-samples store. Label precedence per
-    * `writeback.go:13-41`: sample labels < rule static labels <
-    * `__name__` = record name. Returns samples written.
+    * results to the recorded-samples store, labelled by [[recordLabels]].
+    * Returns samples written.
     */
   def recordGroup(spark: SparkSession, dir: String, kind: String,
       namespace: String, groupName: String, params: EvalParams): Long = {
@@ -500,15 +508,8 @@ object Rules {
       // siblings (`manager.go`: per-rule health, evaluation continues)
       val (health, err) =
         try {
-          val overrides = r.labels + ("__name__" -> r.record)
-          val keys = overrides.keys.toSeq
-          val overrideMap = map(
-            overrides.flatMap { case (k, v) => Seq(lit(k), lit(v)) }.toSeq: _*)
-          val merged = map_concat(
-            map_filter(col("labels"), (k, _) => !k.isin(keys: _*)),
-            overrideMap)
           val out = evalVector(spark, dir, kind, r.expr, params)
-            .select(merged.as("labels"),
+            .select(recordLabels(r.labels, r.record).as("labels"),
               (col("ts") * 1000000000L).as("timestamp_ns"),
               col("value"))
             .withColumn("fingerprint",

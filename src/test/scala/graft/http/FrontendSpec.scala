@@ -622,6 +622,64 @@ class FrontendSpec extends SparkSpec {
     } finally srv.stop(0)
   }
 
+  // Fails when a push of a BUILT family's name is stored apart from the
+  // built samples: the series dictionary would list the pushed series while
+  // every query of that name read only the built rows.
+  test("remote-write samples of a built family are read by instant, 15s " +
+      "downsample and series routes alike") {
+    // a COPY of the fixture dir: the push mutates its store
+    val tmp = java.nio.file.Files.createTempDirectory("graft-built-push").toFile
+    tmp.deleteOnExit()
+    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
+      java.nio.file.Files.copy(f.toPath,
+        new java.io.File(tmp, f.getName).toPath)
+    val srv = new Frontend(spark, tmp.getAbsolutePath).start(0)
+    try {
+      val b = s"http://127.0.0.1:${srv.getAddress.getPort}"
+      def get2(pq: String): String = {
+        val r = client.send(HttpRequest.newBuilder(URI.create(b + pq)).GET()
+          .build(), HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 200, r.body())
+        r.body()
+      }
+      // an hour after the built data ends: two samples in two 15s buckets,
+      // both inside the [1m] window ending at the 15s-aligned time `t`
+      val t = EndS + 3645
+      val labels = Map("__name__" -> "events_value", "event_type" -> "click",
+        "level" -> "info")
+      val rw = graft.ingest.PromRemoteWrite.encodeWriteRequest(Seq(
+        (labels, Seq(((EndS + 3601) * 1000L, 42.0), ((EndS + 3631) * 1000L, 43.0)))))
+      val push = client.send(HttpRequest.newBuilder(
+          URI.create(b + "/api/v1/prom/remote/write"))
+        .POST(HttpRequest.BodyPublishers.ofByteArray(rw)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(push.statusCode() == 204, push.body())
+
+      val sel = """events_value{event_type="click",level="info"}"""
+      val series = """{"__name__":"events_value","event_type":"click","level":"info"}"""
+      val inst = get2("/api/v1/query?query=" + enc(sel) + s"&time=$t")
+      assert(inst == """{"status":"success","data":{"resultType":"vector",""" +
+        s""""result":[{"metric":$series,"value":[$t,"43"]}]}}""", inst)
+
+      val countQ = s"count_over_time($sel[1m])"
+      val scans = new graft.promql.PromQLCompiler(spark, tmp.getAbsolutePath,
+          graft.promql.PromParams(t * 1000000000L, t * 1000000000L, 15L))
+        .compile(countQ).queryExecution.sparkPlan.collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+            f.relation.location.rootPaths.mkString(",")
+        }
+      assert(scans.exists(_.endsWith("/prom_samples_15s")), scans)
+      val count = get2("/api/v1/query?query=" + enc(countQ) + s"&time=$t")
+      assert(count == """{"status":"success","data":{"resultType":"vector",""" +
+        s""""result":[{"metric":{"event_type":"click","level":"info"},""" +
+        s""""value":[$t,"2"]}]}}""", count)
+
+      // the dictionary names the one series both answers came from
+      val listed = get2("/api/v1/series?match%5B%5D=" + enc(sel))
+      assert(listed == s"""{"status":"success","data":[$series]}""", listed)
+    } finally srv.stop(0)
+  }
+
   test("rules CRUD over HTTP: YAML group lifecycle, Prometheus-format " +
       "listing with health, and alert rules posted through it evaluate") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-rules").toFile
@@ -1356,7 +1414,7 @@ class FrontendSpec extends SparkSpec {
     try {
       val deadline = System.nanoTime() + 60L * 1000000000L
       def recorded() = graft.store.Store.promMetric(spark, dir,
-        "timer:clicks:count", 0, Long.MaxValue).map(_.count()).getOrElse(0L)
+        "timer:clicks:count", 0, Long.MaxValue).count()
       while (recorded() == 0 && System.nanoTime() < deadline)
         Thread.sleep(250)
       assert(recorded() == 1L, s"recorded=${recorded()}")

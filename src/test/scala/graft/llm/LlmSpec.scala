@@ -273,9 +273,8 @@ class LlmSpec extends SparkSpec {
     def run() = Dedup.connectedComponents(nodes, edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaDriver = run()
-    spark.conf.set("spark.graft.cc.driverMax", "0")
-    val viaCluster = try run()
-      finally spark.conf.unset("spark.graft.cc.driverMax")
+    val viaCluster = Dedup.componentsDistributed(nodes, edges, 25).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaDriver == viaCluster)
     assert(viaDriver == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
       5L -> 5L, 6L -> 5L, 7L -> 5L, 8L -> 8L, 9L -> 9L))

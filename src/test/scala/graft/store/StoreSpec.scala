@@ -46,23 +46,51 @@ class StoreSpec extends SparkSpec {
     assert(!paths.exists(_.contains("metrics_15s")), paths.mkString("; "))
   }
 
-  test("PromQL exact over_time fns route to the 15s gauge downsample") {
-    val prom = new graft.promql.PromQLCompiler(spark, sf,
-      graft.promql.PromParams(StartNs, EndNs, StepS))
-    def paths(q: String) = prom.compile(q).queryExecution.sparkPlan.collect {
+  private def promql = new graft.promql.PromQLCompiler(spark, sf,
+    graft.promql.PromParams(StartNs, EndNs, StepS))
+
+  private def promScanPaths(q: String): Seq[String] =
+    promql.compile(q).queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
         f.relation.location.rootPaths.mkString(",")
     }
-    assert(paths("""last_over_time(events_value[6h])""")
-      .exists(_.contains("prom_gauge_15s")))
-    assert(paths("""count_over_time(events_value{event_type="click"}[12h])""")
-      .exists(_.contains("prom_gauge_15s")))
+
+  test("PromQL exact over_time fns route to the 15s gauge downsample") {
+    assert(promScanPaths("""last_over_time(events_value[6h])""")
+      .exists(_.contains("prom_samples_15s")))
+    assert(promScanPaths("""count_over_time(events_value{event_type="click"}[12h])""")
+      .exists(_.contains("prom_samples_15s")))
     // FP-order-sensitive aggs stay on raw samples
-    assert(!paths("""avg_over_time(events_value[12h])""")
-      .exists(_.contains("prom_gauge_15s")))
+    assert(!promScanPaths("""avg_over_time(events_value[12h])""")
+      .exists(_.contains("prom_samples_15s")))
     // unaligned range stays raw
-    assert(!paths("""last_over_time(events_value[6h7s])""")
-      .exists(_.contains("prom_gauge_15s")))
+    assert(!promScanPaths("""last_over_time(events_value[6h7s])""")
+      .exists(_.contains("prom_samples_15s")))
+  }
+
+  // Fails when a built family other than the gauge has no 15s partials, or
+  // when its partials disagree with its raw samples: the expected counts
+  // are taken from the raw fact table, one window (t−12h, t] per grid point.
+  test("count_over_time on the counter family routes to prom_samples_15s " +
+      "and equals the raw-path answer") {
+    val q = "count_over_time(events_total[12h])"
+    assert(promScanPaths(q).exists(_.contains("prom_samples_15s")),
+      promScanPaths(q).mkString("; "))
+    val got = promql.compile(q)
+      .select(element_at(col("labels"), "event_type"), col("ts"), col("value"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    val rangeNs = 12 * 3600 * 1000000000L
+    val raw = Store.promMetric(spark, sf, "events_total", StartNs - rangeNs,
+        EndNs + 1)
+      .select(element_at(col("labels"), "event_type"), col("timestamp_ns"))
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    val want = (StartNs to EndNs by StepS * 1000000000L).flatMap { t =>
+      raw.filter { case (_, ts) => ts > t - rangeNs && ts <= t }
+        .groupBy(_._1).map { case (e, xs) =>
+          (e, t / 1000000000L, xs.length.toDouble) }
+    }.toSet
+    assert(want.nonEmpty && got == want,
+      s"${(got -- want).take(3)} vs ${(want -- got).take(3)}")
   }
 
   test("TraceQL attr scan routes to the materialized span store, date-pruned") {
@@ -237,7 +265,8 @@ class StoreSpec extends SparkSpec {
     try {
       val scoped = counts()
       for (f <- families) {
-        val dict = Store.promSeries(spark, sf, f).count()
+        val dict = Store.promSeries(spark, sf)
+          .filter(col("family") === f).count()
         assert(dict > 0 && scoped(f) == dict,
           s"$f: metadata ${scoped(f)} vs tenant dictionary $dict")
       }
@@ -519,17 +548,20 @@ class StoreSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val (dir, root, other) = foreignStore("test-foreign-family")
-    def pushed(): Option[Long] = Store.pinned(
-      Store.promPushed(spark, dir, "foreign_total", 0L, Long.MaxValue)
-        .map(_.count()))
-    assert(pushed().isEmpty) // the head lists no prom_pushed
     val ts = 1704103200000000000L
-    commitAs(other, root, "prom_pushed",
-      Seq((ts, Map("__name__" -> "foreign_total"), 1.0, 7L, "0",
+    def sample(family: String) =
+      Seq((ts, Map("__name__" -> family), 1.0, 7L, family, "0",
         java.sql.Date.valueOf("2024-01-01")))
-        .toDF("timestamp_ns", "labels", "value", "fingerprint", "oid", "date"),
+        .toDF("timestamp_ns", "labels", "value", "fingerprint", "family",
+          "oid", "date")
+    commitAs(other, root, "prom_samples", sample("built_total"),
       Seq("oid", "date"))
-    assert(pushed().contains(1L)) // the next request sees the new version
+    def pushed(): Long = Store.pinned(
+      Store.promMetric(spark, dir, "foreign_total", 0L, Long.MaxValue).count())
+    assert(pushed() == 0L) // the head holds no foreign_total sample
+    commitAs(other, root, "prom_samples", sample("foreign_total"),
+      Seq("oid", "date"))
+    assert(pushed() == 1L) // the next request sees the new version
   }
 
   test("a non-writer process sees another process's commit on its next " +
@@ -627,6 +659,24 @@ class StoreSpec extends SparkSpec {
     assert(n == spark.read.parquet(s"$sf/events.parquet").count())
   }
 
+  // Fails when the build takes the root's writer lock before it resolves
+  // its inputs: the lock file and its heartbeat thread would outlive the
+  // failed build of a root that never exists.
+  test("ensure on a dir without inputs throws, and leaves no writer lock " +
+      "file and no heartbeat thread") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-no-inputs").toFile
+    dir.deleteOnExit()
+    val root = Store.rootFor(dir.getPath)
+    intercept[org.apache.spark.sql.AnalysisException](
+      Store.ensure(spark, dir.getPath))
+    val (fs, lock) = Store.fsFor(s"$root/_writer.lock")
+    assert(!fs.exists(lock))
+    import scala.jdk.CollectionConverters._
+    val beats = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName == s"graft-writer-lock-$root")
+    assert(beats.isEmpty, beats.map(_.getName))
+  }
+
   test("store reads are identical across session timezones") {
     // date partitions are epoch-day derived (Store.withDate), so a store
     // written under one session timezone and read under another must
@@ -706,10 +756,11 @@ class StoreSpec extends SparkSpec {
     assert(Store.appendMetrics(spark, dir, mBatch) == 2)
     val fact = Store.promMetric(spark, dir, "http_requests_total",
       ts - 1, ts + 20000000000L)
-    assert(fact.isDefined && fact.get.count() == 2)
-    // built families are unaffected by the fallback
-    assert(Store.promMetric(spark, dir, "events_value", ts - 1, ts + 1).isDefined)
-    assert(Store.promMetric(spark, dir, "no_such_metric", 0, 1).exists(_.count() == 0))
+    assert(fact.count() == 2)
+    // the one fact table keeps families apart
+    assert(Store.promMetric(spark, dir, "events_value", ts - 1,
+      ts + 20000000000L).count() == 0)
+    assert(Store.promMetric(spark, dir, "no_such_metric", 0, 1).count() == 0)
     val fams = graft.promql.PromQLApi.labelValues(spark, dir, "__name__")
       .collect().map(_.getString(0)).toSet
     assert(fams.contains("http_requests_total"), fams)
@@ -718,7 +769,7 @@ class StoreSpec extends SparkSpec {
     assert(meta.length == 1 && meta(0).getString(1) == "unknown")
     // dictionary append is idempotent: same series pushed again, 1 row
     assert(Store.appendMetrics(spark, dir, mBatch) == 2)
-    assert(Store.promSeriesPushed(spark, dir)
+    assert(Store.promSeries(spark, dir)
       .filter(col("family") === "http_requests_total").count() == 1)
     // PromQL compiler evaluates the pushed family end-to-end
     import graft.promql.{PromParams, PromQLCompiler}
@@ -785,13 +836,15 @@ class StoreSpec extends SparkSpec {
     push(910001L, Seq(3L -> Some(2L), 4L -> Some(3L)))
     push(910001L, Seq(1L -> None, 2L -> Some(1L)))
     assert(closure(910001L) == expected)
-    // distributed fallback (cap 0) on an identical trace shape
-    spark.conf.set("spark.graft.closure.driverMax", "0")
-    try {
-      push(910002L, Seq(3L -> Some(2L), 4L -> Some(3L)))
-      push(910002L, Seq(1L -> None, 2L -> Some(1L)))
-    } finally spark.conf.unset("spark.graft.closure.driverMax")
-    assert(closure(910002L) == expected)
+    // the distributed doubling (the fallback above the driver cap) on the
+    // edge set the second push closes over: both pushes' spans
+    def distributed(trace: Long, rows: Seq[(Long, Option[Long])]) =
+      Store.ancestorClosure(rows.map { case (id, p) => (trace, id, p, ts + id) }
+          .toDF("trace_id", "span_id", "parent_id", "timestamp_ns"))
+        .filter(col("trace_id") === trace)
+        .select("span_id", "anc_id").as[(Long, Long)].collect().toSeq
+    assert(distributed(910002L, Seq(3L -> Some(2L), 4L -> Some(3L),
+      1L -> None, 2L -> Some(1L))).toSet == expected)
 
     // CYCLIC parent pointers (self-parent, a→b→a — hostile or buggy
     // clients): both paths emit each closure row exactly ONCE instead of
@@ -806,10 +859,8 @@ class StoreSpec extends SparkSpec {
     val gotDriver = closureRows(910003L)
     assert(gotDriver.size == cyc.size && gotDriver.toSet == cyc,
       gotDriver.sorted.mkString("; "))
-    spark.conf.set("spark.graft.closure.driverMax", "0")
-    try push(910004L, Seq(5L -> Some(5L), 6L -> Some(7L), 7L -> Some(6L)))
-    finally spark.conf.unset("spark.graft.closure.driverMax")
-    val gotDist = closureRows(910004L)
+    val gotDist = distributed(910004L,
+      Seq(5L -> Some(5L), 6L -> Some(7L), 7L -> Some(6L)))
     assert(gotDist.size == cyc.size && gotDist.toSet == cyc,
       gotDist.sorted.mkString("; "))
   }
@@ -842,7 +893,7 @@ class StoreSpec extends SparkSpec {
   }
 
   private val appendTables = Seq("samples", "time_series", "metrics_15s",
-    "prom_pushed", "prom_series", "prom_pushed_15s")
+    "prom_samples", "prom_series", "prom_samples_15s")
 
   /** Every parquet file of one store table, as paths below the table. */
   private def tableFiles(table: String): Set[String] =
@@ -918,7 +969,7 @@ class StoreSpec extends SparkSpec {
     assert(Store.appendMetrics(spark, appendDir, m) == 2)
     val b2 = allFiles()
     assert(b2("prom_series") == b1("prom_series"))
-    for (t <- Seq("prom_pushed", "prom_pushed_15s"))
+    for (t <- Seq("prom_samples", "prom_samples_15s"))
       assert((b2(t) -- b1(t)).map(leafOf) == leavesOf(m), t)
   }
 

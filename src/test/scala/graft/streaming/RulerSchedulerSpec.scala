@@ -55,7 +55,7 @@ class RulerSchedulerSpec extends SparkSpec {
 
     // net effect: exactly one sample at the grid point
     val rec = graft.store.Store.promMetric(spark, dir, "job:clicks:wm",
-      0, Long.MaxValue).get.collect()
+      0, Long.MaxValue).collect()
     assert(rec.length == 1, rec.mkString("; "))
 
     // the next interval still evaluates exactly once (the anti-join and
@@ -63,7 +63,7 @@ class RulerSchedulerSpec extends SparkSpec {
     now += 60L * 1000000000L
     assert(sched3.tick() == 1)
     assert(graft.store.Store.promMetric(spark, dir, "job:clicks:wm",
-      0, Long.MaxValue).get.count() == 2)
+      0, Long.MaxValue).count() == 2)
 
     // downtime catch-up: a scheduler relaunched THREE intervals later
     // back-fills the gap from its persisted watermark — all three missed
@@ -72,7 +72,7 @@ class RulerSchedulerSpec extends SparkSpec {
     val sched4 = new RulerScheduler(spark, dir, () => now)
     assert(sched4.tick() == 3, "catch-up must evaluate every missed bucket")
     val all = graft.store.Store.promMetric(spark, dir, "job:clicks:wm",
-      0, Long.MaxValue).get.collect()
+      0, Long.MaxValue).collect()
     assert(all.length == 5, all.mkString("; "))
     assert(all.map(_.getAs[Long]("timestamp_ns")).toSet.size == 5,
       "duplicate grid points after catch-up")
@@ -156,7 +156,7 @@ class RulerSchedulerSpec extends SparkSpec {
     // the recorded family is live-queryable with the writeback label
     // precedence (sample < rule labels < __name__)
     val rec = graft.store.Store.promMetric(spark, dir, "job:clicks:count",
-      0, Long.MaxValue).get.collect()
+      0, Long.MaxValue).collect()
     assert(rec.length == 2, rec.mkString("; "))
     assert(rec.forall(_.getAs[Map[String, String]]("labels")
       .get("team").contains("obs")))
@@ -166,7 +166,7 @@ class RulerSchedulerSpec extends SparkSpec {
     // the alert held for ≥ forS across the lookback: state is firing,
     // exported as Prometheus-style ALERTS samples
     val alerts = graft.store.Store.promMetric(spark, dir, "ALERTS",
-      0, Long.MaxValue).get.collect()
+      0, Long.MaxValue).collect()
     assert(alerts.length == 2, alerts.mkString("; "))
     val al = alerts.map(_.getAs[Map[String, String]]("labels"))
     assert(al.forall(_.get("alertname").contains("ClicksPresent")))
@@ -193,7 +193,7 @@ class RulerSchedulerSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(h2("broken:rule") == "err" && h2("ok:rule") == "ok", h2)
     val v7 = graft.store.Store.promMetric(spark, dir, "ok:rule",
-      0, Long.MaxValue).get.collect()
+      0, Long.MaxValue).collect()
     assert(v7.length == 1 && v7(0).getAs[Double]("value") == 7.0)
   }
 }
