@@ -328,7 +328,7 @@ class Frontend(private[http] val spark: SparkSession, dir: String,
   })
 
   private[http] def orgOk(org: Option[String]): Boolean =
-    org.forall(validOrg)
+    org.forall(Frontend.validOrg)
 
   /** Pre-upgrade validation for the WebSocket tail: a missing or
     * unparseable `query` must fail as a plain HTTP 400 BEFORE the 101
@@ -1154,14 +1154,6 @@ class Frontend(private[http] val spark: SparkSession, dir: String,
       }
     }
 
-  /** The DSN registry rejects garbage org ids before they reach storage;
-    * here the guard is structural: bounded length, printable-ASCII, no
-    * path separators (the oid lands in a partition directory name).
-    */
-  private def validOrg(org: String): Boolean =
-    org.nonEmpty && org.length <= 128 &&
-      org.forall(c => c > ' ' && c < 127 && c != '/' && c != '\\')
-
   private def forTenant(org: String): Frontend =
     tenantFrontends.synchronized {
       val cached = tenantFrontends.get(org)
@@ -1196,7 +1188,7 @@ class Frontend(private[http] val spark: SparkSession, dir: String,
 
   def routeRaw(path: String, p: Params, method: String,
       bytes: Array[Byte], org: Option[String] = None): HttpResult = org match {
-    case Some(o) if !validOrg(o) => badRequest("invalid X-Scope-OrgID")
+    case Some(o) if !Frontend.validOrg(o) => badRequest("invalid X-Scope-OrgID")
     case Some(o) => forTenant(o).routeRaw(path, p, method, bytes)
     case None => routeRaw0(path, p, method, bytes)
   }
@@ -1436,6 +1428,18 @@ class Frontend(private[http] val spark: SparkSession, dir: String,
   def startRuler(pollS: Long = 15)
       : java.util.concurrent.ScheduledExecutorService =
     new graft.streaming.RulerScheduler(spark, dir, nowNs).start(pollS)
+}
+
+object Frontend {
+
+  /** The DSN registry rejects garbage org ids before they reach storage;
+    * here the guard is structural: bounded length, printable-ASCII, no
+    * path separators (the oid lands in a partition directory name, which
+    * the store's writer escapes).
+    */
+  private[graft] def validOrg(org: String): Boolean =
+    org.nonEmpty && org.length <= 128 &&
+      org.forall(c => c > ' ' && c < 127 && c != '/' && c != '\\')
 }
 
 final case class HttpResult(status: Int, body: String,

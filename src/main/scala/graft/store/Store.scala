@@ -4,11 +4,18 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+  Cast, GenericInternalRow, InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType,
+  StructType}
 
 import graft.model.{Materialize, Tables}
 
@@ -40,10 +47,11 @@ import graft.model.{Materialize, Tables}
   *
   * Appends (one HTTP push, or one ruler tick's writeback) share one
   * contract ([[appendBatch]]): the batch is decoded once, by collecting
-  * it; each table delta is written from that local copy in one Spark job
-  * with no exchange; a table gains one file per touched (oid, date) leaf;
-  * and a dictionary table gains a file only when the batch carries series
-  * it does not hold yet, so a push of known series writes no dictionary
+  * it; each table delta is derived from that local copy and written on
+  * the driver ([[writeLeaves]]), with no write job, committer or staging
+  * directory; a table gains one file per touched (oid, date) leaf; and a
+  * dictionary table gains a file only when the batch carries series it
+  * does not hold yet, so a push of known series writes no dictionary
   * file at all.
   *
   * One commit protocol ([[ManifestLog]]): a store root is the set of files
@@ -62,7 +70,7 @@ import graft.model.{Materialize, Tables}
   */
 object Store {
 
-  private val built = TrieMap[String, String]()
+  private[store] val built = TrieMap[String, String]()
 
   /** Store location: `SPARK_GRAFT_STORE_ROOT` env or the
     * `spark.graft.store.root` system property, defaulting to the repo's
@@ -268,10 +276,11 @@ object Store {
   private def build(spark: SparkSession, dir: String, root: String): Unit = {
     val logs = Tables.logs(spark, dir)
     // the built metric families are the store's first metric push: the
-    // same fact table, partials and dictionary rows as appendMetrics
-    val metrics = withFamily(Tables.gaugeSamples(spark, dir)
+    // same fact table, partials and dictionary rows as appendMetrics.
+    // Materialized once: three tables are written from it
+    val metrics = Materialize(withFamily(Tables.gaugeSamples(spark, dir)
       .unionByName(Tables.counterSamples(spark, dir))
-      .unionByName(Tables.bucketSamples(spark, dir)))
+      .unionByName(Tables.bucketSamples(spark, dir))))
     // the reference materializes tempo_traces / tempo_traces_attrs_gin /
     // profiles as date-partitioned tables (traces.sql:7-32, profiles.sql:5-17)
     val partitioned: Seq[(String, DataFrame, Seq[String])] = Seq(
@@ -354,7 +363,7 @@ object Store {
     if (n <= thr) broadcast(filtered) else filtered
   }
 
-  private val logs = TrieMap[String, ManifestLog]()
+  private[store] val logs = TrieMap[String, ManifestLog]()
   private def logFor(root: String): ManifestLog =
     logs.getOrElseUpdate(root, new ManifestLog(root))
 
@@ -591,9 +600,9 @@ object Store {
     *      the push instead; the whole batch is rejected the same way,
     *      before anything is written (the IllegalArgumentException maps
     *      to the bad_data envelope at the route layer);
-    *   3. the rows are rebuilt as a local frame, so each table write
-    *      below re-reads them without re-decoding, in one task and
-    *      without an exchange ([[appendWrite]]);
+    *   3. the rows are rebuilt as a local frame, so each table delta
+    *      below is derived from them without re-decoding, and written by
+    *      the driver ([[appendWrite]]);
     *   4. `write` returns each table's change, and the whole batch is ONE
     *      commit: a reader sees all of its tables' rows or none. Its reads
     *      of stored state (dictionary probes, closure repair) see the
@@ -649,9 +658,8 @@ object Store {
         else stored.join(cands.select(keys.map(col): _*), keys, "left_semi")
       probe.collect().foreach(r => fresh.remove(keys.indices.map(r.get)): Unit)
     }
-    Option.when(!fresh.isEmpty)(TableChange(table, staged(root, table)(
-      spark.createDataFrame(new java.util.ArrayList(fresh.values), cands.schema)
-        .coalesce(1).write.parquet(_))))
+    Option.when(!fresh.isEmpty)(TableChange(table, writeLeaves(spark, root,
+      table, cands.schema, fresh.values.asScala.toSeq, Nil, Nil)))
   }
 
   /** Per-root single-writer guard (see [[WriterLock]]): every mutating
@@ -660,29 +668,69 @@ object Store {
     * IllegalStateException instead of racing the dictionary anti-join or
     * the commit log.
     */
-  private val writerLocks = TrieMap[String, WriterLock]()
+  private[store] val writerLocks = TrieMap[String, WriterLock]()
   private def writerLock(root: String): WriterLock =
     writerLocks.getOrElseUpdate(root, new WriterLock(root))
 
-  /** One-file-per-leaf append write. A push batch is a local frame
-    * ([[appendBatch]]); `coalesce(1)` writes it in ONE task, and the sort
-    * by the partition columns first makes the dynamic-partition writer
-    * close each leaf's file before opening the next — one part-file per
-    * touched leaf per push, from one job with no exchange. (The 15s
-    * partials coalesce their input before aggregating: a
-    * single-partition child satisfies the aggregate's distribution, so it
-    * needs no exchange either.) The sort keys keep row-group locality for
-    * the scan pruning. Returns the table's change; the first write to a
-    * table also records its schema.
+  /** One-file-per-leaf append write of `df`, a frame derived from a
+    * push's local batch ([[appendBatch]]): collected, then written by
+    * [[writeLeaves]]. A projection of the batch folds into a local
+    * relation and runs no job; an aggregate (the 15s partials) or a join
+    * against the stored tables (the closure repair) runs one. Returns the
+    * table's change; the first write to a table also records its schema.
     */
   private def appendWrite(root: String, table: String, df: DataFrame,
-      sortCols: Seq[String]): TableChange = {
-    val adds = staged(root, table)(df.coalesce(1)
-      .sortWithinPartitions((DatePartitions ++ sortCols).map(col): _*)
-      .write.partitionBy(DatePartitions: _*).parquet(_))
-    TableChange(table, adds, created =
-      Option.when(!snapshot(root).tables.contains(table))(
+      sortCols: Seq[String]): TableChange =
+    TableChange(table, writeLeaves(df.sparkSession, root, table, df.schema,
+        df.collect().toSeq, DatePartitions, sortCols),
+      created = Option.when(!snapshot(root).tables.contains(table))(
         (schemaOf(df, DatePartitions), DatePartitions)))
+
+  /** The one append writer: `rows` (of `schema`, partition columns
+    * included) are sorted on the driver by `partCols ++ sortCols` and
+    * written as one file per touched leaf, straight into
+    * `$root/$table/<leaf>/`, by Spark's own Parquet writer, so the footer,
+    * codec and row metadata are those of a task-written file. Leaf names
+    * come from Spark's partition-path escaping. There is no write job,
+    * committer or staging directory: the manifest is the commit point, so
+    * a file no version lists is never read, and [[sweep]] deletes it.
+    * Returns the written files (relative to the table) and their sizes.
+    */
+  private def writeLeaves(spark: SparkSession, root: String, table: String,
+      schema: StructType, rows: Seq[Row], partCols: Seq[String],
+      sortCols: Seq[String]): Map[String, Long] = {
+    def bound(c: String) = {
+      val i = schema.fieldIndex(c)
+      BoundReference(i, schema(i).dataType, nullable = true)
+    }
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+    val sorted = rows.map(r => toInternal(r).asInstanceOf[InternalRow])
+      .sorted(new InterpretedOrdering(
+        (partCols ++ sortCols).map(c => SortOrder(bound(c), Ascending))))
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val partValues = partCols.map(c => c -> Cast(bound(c), StringType, tz))
+    def leafOf(r: InternalRow): String =
+      partValues.map { case (c, v) => ExternalCatalogUtils
+        .getPartitionPathString(c, Option(v.eval(r)).map(_.toString).orNull) + "/"
+      }.mkString
+    val dataIdx = schema.fields.indices.filterNot(i =>
+      partCols.contains(schema(i).name))
+    val dataSchema = StructType(dataIdx.map(schema(_)))
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, dataSchema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val ext = factory.getFileExtension(ctx)
+    val fs = fsFor(root)._1
+    sorted.groupBy(leafOf).map { case (leaf, leafRows) =>
+      val file = s"${leaf}part-${java.util.UUID.randomUUID()}.c000$ext"
+      val path = s"$root/$table/$file"
+      val out = factory.newInstance(path, dataSchema, ctx)
+      try leafRows.foreach(r => out.write(
+        new GenericInternalRow(dataIdx.map(i => r.get(i, schema(i).dataType)).toArray)))
+      finally out.close()
+      file -> fs.getFileStatus(new Path(path)).getLen
+    }
   }
 
   /** Drop every per-session cache entry for an evicted tenant session:
@@ -989,11 +1037,12 @@ object Store {
         }
     }
 
-  /** Run `write` against a fresh staging directory under the root, then
-    * move every parquet file it produced into `table`'s directory at the
-    * same relative path (Spark's file names carry the write's job id, so
-    * they never collide with committed files). Returns the moved files
-    * and their sizes, for the caller to commit.
+  /** Run a compaction's Spark `write` against a fresh staging directory
+    * under the root, then move every parquet file it produced into
+    * `table`'s directory at the same relative path (Spark's file names
+    * carry the write's job id, so they never collide with committed
+    * files). Returns the moved files and their sizes, for the caller to
+    * commit.
     */
   private def staged(root: String, table: String)(
       write: String => Unit): Map[String, Long] = {

@@ -13,7 +13,7 @@ import graft.SparkSpec
   * spec pins the WIRE format (envelopes, value-as-string, ns-string
   * stream timestamps, error envelope + status codes).
   */
-class FrontendSpec extends SparkSpec {
+class FrontendSpec extends SparkSpec with graft.store.TempStores {
 
   private lazy val server = {
     val s = new Frontend(spark, sf).start(0)
@@ -208,12 +208,8 @@ class FrontendSpec extends SparkSpec {
       "(samples, dictionary, downsample partials), idempotent dictionary") {
     // a COPY of the fixture dir: the push mutates its store, and the
     // shared sf0.001 store's contents are load-bearing for other suites
-    val tmp = java.nio.file.Files.createTempDirectory("graft-push").toFile
-    tmp.deleteOnExit()
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    val srv = new Frontend(spark, tmp.getAbsolutePath).start(0)
+    val tmp = tempDataDir("graft-push")
+    val srv = new Frontend(spark, tmp).start(0)
     try {
       val b = s"http://127.0.0.1:${srv.getAddress.getPort}"
       def get2(pq: String): (Int, String) = {
@@ -276,12 +272,7 @@ class FrontendSpec extends SparkSpec {
   test("ingest POST routes: push-then-query fixture replay per wire " +
       "format (OTLP logs/traces/metrics, remote-write, Influx, Datadog " +
       "logs+series, Zipkin, Elastic bulk+doc, Cloudflare, pprof)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ingest").toFile
-    tmp.deleteOnExit()
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    val dir = tmp.getAbsolutePath
+    val dir = tempDataDir("graft-ingest")
     val tsNs = (StartS + 5000L) * 1000000000L // inside the 2024-01 window
     val srv = new Frontend(spark, dir, nowNs = () => tsNs).start(0)
     try {
@@ -495,12 +486,8 @@ class FrontendSpec extends SparkSpec {
 
   test("live tail long-poll: push via the push API, observe the new " +
       "entries through the tail frame with an advancing cursor") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-tail").toFile
-    tmp.deleteOnExit()
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    val srv = new Frontend(spark, tmp.getAbsolutePath,
+    val tmp = tempDataDir("graft-tail")
+    val srv = new Frontend(spark, tmp,
       nowNs = () => EndS * 1000000000L).start(0)
     try {
       val b = s"http://127.0.0.1:${srv.getAddress.getPort}"
@@ -590,12 +577,8 @@ class FrontendSpec extends SparkSpec {
 
   test("loki instant metric query evaluates the one window ending at time") {
     // a COPY of the fixture dir: the pushes mutate its store
-    val tmp = java.nio.file.Files.createTempDirectory("graft-instant").toFile
-    tmp.deleteOnExit()
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    val srv = new Frontend(spark, tmp.getAbsolutePath).start(0)
+    val tmp = tempDataDir("graft-instant")
+    val srv = new Frontend(spark, tmp).start(0)
     try {
       val b = s"http://127.0.0.1:${srv.getAddress.getPort}"
       def push(host: String, tS: Long): Int =
@@ -628,12 +611,8 @@ class FrontendSpec extends SparkSpec {
   test("remote-write samples of a built family are read by instant, 15s " +
       "downsample and series routes alike") {
     // a COPY of the fixture dir: the push mutates its store
-    val tmp = java.nio.file.Files.createTempDirectory("graft-built-push").toFile
-    tmp.deleteOnExit()
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    val srv = new Frontend(spark, tmp.getAbsolutePath).start(0)
+    val tmp = tempDataDir("graft-built-push")
+    val srv = new Frontend(spark, tmp).start(0)
     try {
       val b = s"http://127.0.0.1:${srv.getAddress.getPort}"
       def get2(pq: String): String = {
@@ -662,7 +641,7 @@ class FrontendSpec extends SparkSpec {
         s""""result":[{"metric":$series,"value":[$t,"43"]}]}}""", inst)
 
       val countQ = s"count_over_time($sel[1m])"
-      val scans = new graft.promql.PromQLCompiler(spark, tmp.getAbsolutePath,
+      val scans = new graft.promql.PromQLCompiler(spark, tmp,
           graft.promql.PromParams(t * 1000000000L, t * 1000000000L, 15L))
         .compile(countQ).queryExecution.sparkPlan.collect {
           case f: org.apache.spark.sql.execution.FileSourceScanExec =>
@@ -682,12 +661,7 @@ class FrontendSpec extends SparkSpec {
 
   test("rules CRUD over HTTP: YAML group lifecycle, Prometheus-format " +
       "listing with health, and alert rules posted through it evaluate") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-rules").toFile
-    tmp.deleteOnExit()
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    val dir = tmp.getAbsolutePath
+    val dir = tempDataDir("graft-rules")
     val srv = new Frontend(spark, dir).start(0)
     try {
       val b = s"http://127.0.0.1:${srv.getAddress.getPort}"
@@ -925,12 +899,8 @@ class FrontendSpec extends SparkSpec {
   test("tenant-scoped WRITES: a push under X-Scope-OrgID lands in that " +
       "org's partitions (visible to it, hidden from others), other " +
       "sessions' cached readers see the append, rules CRUD is per-tenant") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-tpush").toFile
-    tmp.deleteOnExit()
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    val srv = new Frontend(spark, tmp.getAbsolutePath).start(0)
+    val tmp = tempDataDir("graft-tpush")
+    val srv = new Frontend(spark, tmp).start(0)
     try {
       val b = s"http://127.0.0.1:${srv.getAddress.getPort}"
       def send(method: String, pq: String, body: String,
@@ -983,12 +953,7 @@ class FrontendSpec extends SparkSpec {
       "registers lands in the same decoders (remote-write spellings, " +
       "OTLP profiles, Datadog v2 series, /tempo/api/push, Elastic " +
       "_create + PUT _doc, health probes)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-alias").toFile
-    tmp.deleteOnExit()
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    val dir = tmp.getAbsolutePath
+    val dir = tempDataDir("graft-alias")
     val tsNs = (StartS + 5000L) * 1000000000L
     val srv = new Frontend(spark, dir, nowNs = () => tsNs).start(0)
     try {
@@ -1097,12 +1062,8 @@ class FrontendSpec extends SparkSpec {
 
   test("long-poll tail pages through a burst losslessly: oldest `limit` " +
       "served per poll, nothing skipped, cursor re-polls collect every entry") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-drop").toFile
-    tmp.deleteOnExit()
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    val srv = new Frontend(spark, tmp.getAbsolutePath,
+    val tmp = tempDataDir("graft-drop")
+    val srv = new Frontend(spark, tmp,
       nowNs = () => EndS * 1000000000L).start(0)
     try {
       val b = s"http://127.0.0.1:${srv.getAddress.getPort}"
@@ -1145,12 +1106,8 @@ class FrontendSpec extends SparkSpec {
 
   test("websocket tail keeps upstream's newest-first per-tick truncation, " +
       "accounting the skipped older entries as dropped_entries") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-wsdrop").toFile
-    tmp.deleteOnExit()
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    val srv = new Frontend(spark, tmp.getAbsolutePath,
+    val tmp = tempDataDir("graft-wsdrop")
+    val srv = new Frontend(spark, tmp,
       nowNs = () => EndS * 1000000000L).start(0, tailTickMs = 150)
     try {
       val port = srv.getAddress.getPort
@@ -1215,12 +1172,8 @@ class FrontendSpec extends SparkSpec {
 
   test("websocket tail: RFC 6455 upgrade on the shared port, one Loki " +
       "tail frame per tick with an advancing cursor, ping/pong, clean close") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ws").toFile
-    tmp.deleteOnExit()
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    val srv = new Frontend(spark, tmp.getAbsolutePath,
+    val tmp = tempDataDir("graft-ws")
+    val srv = new Frontend(spark, tmp,
       nowNs = () => EndS * 1000000000L).start(0, tailTickMs = 150)
     try {
       val port = srv.getAddress.getPort
@@ -1318,19 +1271,15 @@ class FrontendSpec extends SparkSpec {
 
   test("maintenance timer compacts accumulated push files in the " +
       "background without changing query results") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mtimer").toFile
-    tmp.deleteOnExit()
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    val fe = new Frontend(spark, tmp.getAbsolutePath)
+    val tmp = tempDataDir("graft-mtimer")
+    val fe = new Frontend(spark, tmp)
     // 4 pushes into one (oid, date) leaf = 4 part-files (one per push)
     for (i <- 1 to 4)
       assert(fe.route("/loki/api/v1/push", Params(), "POST",
         s"""{"streams":[{"stream":{"event_type":"mtimer"},
            |"values":[["${StartS + i}000000000","timer line $i"]]}]}"""
           .stripMargin.replace("\n", "")).status == 204)
-    val root = graft.store.Store.ensure(spark, tmp.getAbsolutePath)
+    val root = graft.store.Store.ensure(spark, tmp)
     def leafFiles(): Int = {
       def walk(f: java.io.File): Seq[java.io.File] = {
         val kids = Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
@@ -1374,9 +1323,7 @@ class FrontendSpec extends SparkSpec {
     assert(metric("graft_maintenance_last_duration_seconds") > 0)
     // a pass that fails (a dir with no inputs cannot build its store)
     // moves the failure counter and keeps the timer running
-    val empty = java.nio.file.Files.createTempDirectory("graft-mfail").toFile
-    empty.deleteOnExit()
-    val broken = new Frontend(spark, empty.getAbsolutePath)
+    val broken = new Frontend(spark, tempDataDir("graft-mfail", None))
     def brokenMetric(name: String): Double =
       s"(?m)^$name (\\S+)$$".r.findFirstMatchIn(
         broken.route("/metrics", Params()).body).get.group(1).toDouble
@@ -1394,12 +1341,7 @@ class FrontendSpec extends SparkSpec {
 
   test("ruler timer: a rule group posted over HTTP evaluates on the " +
       "background loop and its recorded family becomes queryable") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-rtimer").toFile
-    tmp.deleteOnExit()
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    val dir = tmp.getAbsolutePath
+    val dir = tempDataDir("graft-rtimer")
     // frozen clock: the first poll's tick is due, every later poll's
     // bucket is unchanged — exactly ONE evaluation, deterministically
     val fe = new Frontend(spark, dir, nowNs = () => EndS * 1000000000L)

@@ -17,17 +17,20 @@ object MTimerRaceRepro {
     */
   private def once(spark: org.apache.spark.sql.SparkSession,
       hammerS: Int): Option[String] = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mtimer-repro").toFile
-    val fe = new Frontend(spark, tmp.getAbsolutePath)
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
+    val dir = graft.store.TempStores.create("graft-mtimer-repro", Some(sf))
+    try onceIn(spark, dir, hammerS)
+    finally graft.store.TempStores.drop(dir)
+  }
+
+  private def onceIn(spark: org.apache.spark.sql.SparkSession, dir: String,
+      hammerS: Int): Option[String] = {
+    val fe = new Frontend(spark, dir)
     for (i <- 1 to 4)
       assert(fe.route("/loki/api/v1/push", Params(), "POST",
         s"""{"streams":[{"stream":{"event_type":"mtimer"},
            |"values":[["${StartS + i}000000000","timer line $i"]]}]}"""
           .stripMargin.replace("\n", "")).status == 204)
-    val root = graft.store.Store.ensure(spark, tmp.getAbsolutePath)
+    val root = graft.store.Store.ensure(spark, dir)
     def leafFiles(): Int = {
       def walk(f: java.io.File): Seq[java.io.File] = {
         val kids = Option(f.listFiles()).getOrElse(Array.empty[java.io.File])

@@ -10,19 +10,12 @@ import graft.gates.EvalWindow._
   * back into the queryable store, alerting rules export ALERTS samples,
   * and `/api/v1/rules` health reflects the last evaluation.
   */
-class RulerSchedulerSpec extends SparkSpec {
+class RulerSchedulerSpec extends SparkSpec with graft.store.TempStores {
 
   /** Fresh store copy — the writeback appends mutate the dir's store, and
     * the shared sf0.001 store's contents are load-bearing elsewhere.
     */
-  private def freshStore(): String = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ruler").toFile
-    tmp.deleteOnExit()
-    for (f <- new java.io.File(sf).listFiles(); if f.getName.endsWith(".parquet"))
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmp, f.getName).toPath)
-    tmp.getAbsolutePath
-  }
+  private def freshStore(): String = tempDataDir("graft-ruler")
 
   test("restart idempotency: a second scheduler instance re-seeds from " +
       "the persisted watermark and never re-records a bucket; even with " +
