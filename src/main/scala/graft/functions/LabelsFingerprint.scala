@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Jackson-compatible escaping, xxhash64 (seed 42) the UTF-8 bytes —
   * bit-identical to the composed
   * `xxhash64(to_json(map_from_entries(array_sort(map_entries(m)))))`
-  * (kept as `Tables.fingerprintOfSpec`, differential-tested).
+  * (FingerprintSpec keeps that form as its differential-test oracle).
   *
   * Why native: `to_json` is a CodegenFallback — it severs the whole-stage
   * codegen span of every projection it appears in, and the fingerprint is

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1224,6 +1225,9 @@ class Frontend(private[http] val spark: SparkSession, dir: String,
          |# HELP graft_maintenance_last_duration_seconds Duration of the last maintenance pass.
          |# TYPE graft_maintenance_last_duration_seconds gauge
          |graft_maintenance_last_duration_seconds ${maintenanceLastNs.get() / 1e9}
+         |# HELP graft_spark_codegen_compiles_total Janino compiles of generated code, process-wide.
+         |# TYPE graft_spark_codegen_compiles_total counter
+         |graft_spark_codegen_compiles_total ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount}
          |""".stripMargin
     HttpResult(200, body, "text/plain; version=0.0.4")
   }

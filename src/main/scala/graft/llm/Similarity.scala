@@ -807,22 +807,6 @@ object Similarity {
           asDouble(col("embedding")), Dims, outDim)))
       .select(col("vec_id"), col("pos").as("j"), round(col("col"), 6).as("y"))
 
-  /** Executable spec of [[randomProject]]: the composed higher-order-
-    * function form (transform over out dims, aggregate(zip_with) dot) —
-    * kept as the differential-test twin of the codegen'd expression.
-    */
-  private[graft] def randomProjectSpec(emb: DataFrame, outDim: Int): DataFrame = {
-    val scale = 1.0 / math.sqrt(outDim.toDouble)
-    val rows = (0 until outDim).map { j =>
-      val w = typedLit((0 until Dims).map(i => graft.functions.VecProject.sign(j, i)))
-      struct(lit(j).as("j"),
-        round(aggregate(zip_with(asDouble(col("embedding")), w, (v, s) => v * s),
-          lit(0.0), (acc, v) => acc + v) * scale, 6).as("y"))
-    }
-    emb.select(col("vec_id"), explode(array(rows: _*)).as("r"))
-      .select(col("vec_id"), col("r.j").as("j"), col("r.y").as("y"))
-  }
-
   /** DuckDB twin of [[randomProject]] (scale interpolated from the same
     * Scala constant so no engine-side sqrt is involved).
     */

@@ -87,14 +87,6 @@ object Tables {
     * use Spark's codegen'd xxhash64 over the canonical JSON of the sorted
     * entry list. Never exposed in query outputs (oracle-independent).
     */
-  /** Composed spec form of [[fingerprintOf]] — differential-tested; the
-    * hot paths run the native one-pass expression (to_json is a
-    * CodegenFallback that severs whole-stage codegen around every
-    * per-row fingerprint).
-    */
-  private[graft] def fingerprintOfSpec(labels: Column): Column =
-    xxhash64(to_json(map_from_entries(array_sort(map_entries(labels)))))
-
   def fingerprintOf(labels: Column): Column =
     graft.functions.LabelsFingerprintFn.of(labels)
 

@@ -143,7 +143,7 @@ object ManifestLog {
   * `rootPaths` is the table directory.
   */
 private[store] final class ManifestFileIndex(spark: SparkSession,
-    table: Path, state: TableState)
+    table: Path, val state: TableState)
     extends PartitioningAwareFileIndex(spark, Map.empty, Some(state.schema)) {
 
   override val rootPaths: Seq[Path] = Seq(table)
@@ -166,4 +166,23 @@ private[store] final class ManifestFileIndex(spark: SparkSession,
   override def partitionSpec(): PartitionSpec = spec
 
   override def refresh(): Unit = ()
+
+  /** Bytes of the committed files in the leaves a scan of tenant `oid`
+    * (None: every tenant) over the epoch days `days` (inclusive; None:
+    * every day) can select, read off the partition values of [[spec]].
+    * A table not partitioned by `oid` or `date` selects every leaf on
+    * that column.
+    */
+  def selectedBytes(oid: Option[String], days: Option[(Int, Int)]): Long = {
+    val cols = spec.partitionColumns.fieldNames
+    val (o, d) = (cols.indexOf("oid"), cols.indexOf("date"))
+    if (cols.isEmpty) statuses.map(_.getLen).sum
+    else spec.partitions.iterator
+      .filter(p => o < 0 || oid.forall(t =>
+        !p.values.isNullAt(o) && p.values.getUTF8String(o).toString == t))
+      .filter(p => d < 0 || days.forall { case (lo, hi) =>
+        !p.values.isNullAt(d) && p.values.getInt(d) >= lo && p.values.getInt(d) <= hi })
+      .map(p => leafDirToChildrenFiles.get(p.path).fold(0L)(_.map(_.getLen).sum))
+      .sum
+  }
 }

@@ -61,6 +61,18 @@ import graft.model.{Materialize, Tables}
   * listing. A request pins one version ([[pinned]]); superseded files are
   * deleted once no pin reads them, uncommitted ones by [[maintain]].
   *
+  * Query-side partitioning ([[sized]]): every query-facing scan (the
+  * windowed fact scans and the two series dictionaries) sums the recorded
+  * bytes of the pinned version's files in the leaves its tenant and its
+  * date window can select. At or below 24 MiB it returns its frame
+  * `.coalesce(1)`: a single-partition child satisfies every distribution,
+  * so the aggregates, sorts, windows and joins above it plan no shuffle
+  * and run as one stage of one task per scan. The constant is ClickHouse's
+  * `merge_tree_min_bytes_for_concurrent_read`, below which MergeTree reads
+  * a range in one stream; F1 Query likewise runs small queries centrally.
+  * A larger selection keeps Spark's file splits and exchanges. Appends,
+  * the build, compaction and expiry plan as before.
+  *
   * Built once per testdata dir under target/graft-store and reused across
   * JVMs through the log. At 100 TB this build is the ingest pipeline
   * (§2.A Structured Streaming foreachBatch). These tables are the one read
@@ -325,16 +337,14 @@ object Store {
 
   /** Series dictionary (fingerprint → labels); small, broadcast at joins. */
   def timeSeries(spark: SparkSession, dir: String): DataFrame =
-    tenantFilter(spark,
-      readTable(spark, s"${ensure(spark, dir)}/time_series")).drop("oid")
+    queryScan(spark, s"${ensure(spark, dir)}/time_series", None)
 
   /** The metric series dictionary, every family: (family, fingerprint,
     * labels), `__name__` inside the labels. Series-ever-seen, not
     * window-scoped — the cheap upper bound admission checks want.
     */
   def promSeries(spark: SparkSession, dir: String): DataFrame =
-    tenantFilter(spark,
-      readTable(spark, s"${ensure(spark, dir)}/prom_series")).drop("oid")
+    queryScan(spark, s"${ensure(spark, dir)}/prom_series", None)
 
   /** Touch every store table once (footer and data reads) so a
     * fresh session's first real query doesn't pay the cold-reader cost —
@@ -409,26 +419,62 @@ object Store {
       })
     }
 
-  /** A scan of `state`'s files (all of a table's committed files, or a
+  /** A scan of `index`'s files (all of a table's committed files, or a
     * subset) under its recorded schema: a [[ManifestFileIndex]] behind a
     * plain `HadoopFsRelation`, so planning runs no Spark job.
     */
-  private def relation(spark: SparkSession, path: String,
-      state: TableState): DataFrame = {
-    val (fs, p) = fsFor(path)
-    val index = new ManifestFileIndex(spark, fs.makeQualified(p), state)
+  private[store] def relation(spark: SparkSession,
+      index: ManifestFileIndex): DataFrame = {
+    val state = index.state
     spark.baseRelationToDataFrame(HadoopFsRelation(index,
       index.partitionSchema,
       StructType(state.schema.filterNot(f => state.partitionBy.contains(f.name))),
       None, new ParquetFileFormat, Map.empty)(spark))
   }
 
-  private[store] def readTable(spark: SparkSession, path: String): DataFrame = {
+  private def indexOf(spark: SparkSession, path: String,
+      state: TableState): ManifestFileIndex = {
+    val (fs, p) = fsFor(path)
+    new ManifestFileIndex(spark, fs.makeQualified(p), state)
+  }
+
+  /** The index of `path`'s committed files in the pinned version. */
+  private def indexOf(spark: SparkSession, path: String): ManifestFileIndex = {
     val i = path.lastIndexOf('/')
     val snap = snapshot(path.take(i))
-    relation(spark, path, snap.tables.getOrElse(path.drop(i + 1),
+    indexOf(spark, path, snap.tables.getOrElse(path.drop(i + 1),
       throw new IllegalStateException(
         s"store table $path is not in version ${snap.version}")))
+  }
+
+  private[store] def readTable(spark: SparkSession, path: String): DataFrame =
+    relation(spark, indexOf(spark, path))
+
+  /** ClickHouse's `merge_tree_min_bytes_for_concurrent_read` (24 MiB):
+    * MergeTree reads a smaller range in one stream.
+    */
+  private val SingleTaskMaxBytes = 24L << 20
+
+  /** `df`, a scan of `index` for tenant `oid` over epoch days `days`, on
+    * one partition when the committed files it can select sum to at most
+    * [[SingleTaskMaxBytes]]; otherwise `df` unchanged.
+    */
+  private[store] def sized(df: DataFrame, index: ManifestFileIndex,
+      oid: Option[String], days: Option[(Int, Int)]): DataFrame =
+    if (index.selectedBytes(oid, days) <= SingleTaskMaxBytes) df.coalesce(1)
+    else df
+
+  /** A query-facing scan of `path`: `select` narrows the table's rows,
+    * the session's tenant filter applies, and the frame is [[sized]] by
+    * the leaves of that tenant and of `days` (what `select` prunes to).
+    */
+  private def queryScan(spark: SparkSession, path: String,
+      days: Option[(Int, Int)],
+      select: DataFrame => DataFrame = identity): DataFrame = {
+    val index = indexOf(spark, path)
+    sized(tenantFilter(spark, select(relation(spark, index)))
+      .drop("oid"), // tenant applied; downstream schemas stay oid-free
+      index, spark.conf.getOption("spark.graft.tenant"), days)
   }
 
   /** Fact scan over [loNs, hiNs): ts predicate + derived date predicate so
@@ -436,12 +482,13 @@ object Store {
     * date directories).
     */
   private def scanWindow(spark: SparkSession, path: String,
-      loNs: Long, hiNs: Long): DataFrame =
-    tenantFilter(spark, readTable(spark, path)
+      loNs: Long, hiNs: Long): DataFrame = {
+    val (lo, hi) = ((loNs / 86400000000000L).toInt, (hiNs / 86400000000000L).toInt)
+    queryScan(spark, path, Some((lo, hi)), _
       .filter(col("timestamp_ns") >= loNs && col("timestamp_ns") < hiNs)
-      .filter(col("date") >= date_from_unix_date(lit((loNs / 86400000000000L).toInt)) &&
-        col("date") <= date_from_unix_date(lit((hiNs / 86400000000000L).toInt))))
-      .drop("oid") // tenant applied; downstream schemas stay oid-free
+      .filter(col("date") >= date_from_unix_date(lit(lo)) &&
+        col("date") <= date_from_unix_date(lit(hi))))
+  }
 
   def samples(spark: SparkSession, dir: String, loNs: Long, hiNs: Long): DataFrame =
     scanWindow(spark, s"${ensure(spark, dir)}/samples", loNs, hiNs)
@@ -1007,7 +1054,8 @@ object Store {
         else {
           val path = s"$root/$table"
           def scan(files: Iterable[String]): DataFrame =
-            relation(spark, path, st.copy(files = files.map(f => f -> st.files(f)).toMap))
+            relation(spark, indexOf(spark, path,
+              st.copy(files = files.map(f => f -> st.files(f)).toMap)))
           val sortable = sortCols.filter(st.schema.fieldNames.contains)
           val adds = staged(root, table) { stage =>
             if (parts.isEmpty) {

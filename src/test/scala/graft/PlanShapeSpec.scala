@@ -3,10 +3,14 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{RangeFrame, SpecifiedWindowFrame}
 import org.apache.spark.sql.catalyst.plans.logical.Window
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.functions.col
 
 import graft.gates.EvalWindow._
 import graft.logql.{EvalParams, LogQLCompiler}
 import graft.promql.{PromParams, PromQLCompiler}
+import graft.traceql.{TraceQLCompiler, TraceQLParser}
 
 /** Plan-shape guard for range functions: every LogQL range aggregation and
   * every PromQL range function (and the instant-vector lookback) compiles
@@ -59,5 +63,34 @@ class PlanShapeSpec extends SparkSpec {
         """holt_winters(events_value{event_type="click"}[12h], 0.5, 0.3)""",
         """max_over_time(rate(events_total[1h])[12h:15m])"""))
       assertExplodeOnly(eng.compile(q), q)
+  }
+
+  /** Shuffle exchanges of `df`'s physical plan as AQE first plans it,
+    * before any stage runs.
+    */
+  private def shuffles(df: DataFrame): Seq[String] = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    plan.collect { case s: ShuffleExchangeLike => s.toString }
+  }
+
+  test("a panel over a small store selection plans no shuffle: LogQL " +
+      "metric, PromQL range and TraceQL search") {
+    val logql = new LogQLCompiler(spark, sf, EvalParams(StartNs, EndNs, 3600L))
+      .compile("""sum by (level) (count_over_time({level=~"info|error"}[1h]))""")
+    val promql = new PromQLCompiler(spark, sf, PromParams(StartNs, EndNs, 3600L))
+      .compile("""histogram_quantile(0.9, sum by (le) (rate(events_bucket[1h])))""")
+    // the /api/search route's frame
+    val traceql = new TraceQLCompiler(spark, sf, StartNs, EndNs)
+      .traceMeta(TraceQLParser.parseOrThrow(
+        """{ .service_name="svc1" && duration > 20ms }""").expr)
+      .orderBy(col("start_ns").desc, col("trace_id")).limit(20)
+    for ((name, df) <- Seq("logql" -> logql, "promql" -> promql,
+        "traceql" -> traceql)) {
+      val s = shuffles(df)
+      assert(s.isEmpty, s"$name: shuffle in the initial plan: ${s.mkString("; ")}")
+    }
   }
 }

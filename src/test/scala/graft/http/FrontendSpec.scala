@@ -1060,6 +1060,25 @@ class FrontendSpec extends SparkSpec with graft.store.TempStores {
       get(s"/loki/api/v1/labels?start=$StartS&end=$EndS"))
   }
 
+  test("/metrics exports Spark's codegen compile count as a counter that " +
+      "does not decrease across a query") {
+    val count = """(?m)^graft_spark_codegen_compiles_total (\d+)$""".r
+    def scrape(): Long = {
+      val (c, body) = get("/metrics")
+      assert(c == 200)
+      assert(body.contains("# TYPE graft_spark_codegen_compiles_total counter"),
+        body.take(300))
+      count.findFirstMatchIn(body).get.group(1).toLong
+    }
+    val before = scrape()
+    val (qc, _) = get("/loki/api/v1/query_range?query=" +
+      enc("""sum by (level) (count_over_time({level="info"}[1h]))""") +
+      s"&start=$StartS&end=$EndS&step=3600")
+    assert(qc == 200)
+    val after = scrape()
+    assert(after >= before, s"$before -> $after")
+  }
+
   test("long-poll tail pages through a burst losslessly: oldest `limit` " +
       "served per poll, nothing skipped, cursor re-polls collect every entry") {
     val tmp = tempDataDir("graft-drop")

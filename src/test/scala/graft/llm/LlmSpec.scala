@@ -1,5 +1,6 @@
 package graft.llm
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.model.Tables
@@ -8,6 +9,24 @@ class LlmSpec extends SparkSpec {
 
   private def docs = Tables.documents(spark, sf)
   private def emb = Tables.embeddings(spark, sf)
+
+  /** Executable spec of [[Similarity.randomProject]]: the composed
+    * higher-order-function form (transform over out dims,
+    * aggregate(zip_with) dot), the differential-test twin of the
+    * codegen'd expression.
+    */
+  private def randomProjectSpec(emb: DataFrame, outDim: Int): DataFrame = {
+    val scale = 1.0 / math.sqrt(outDim.toDouble)
+    val rows = (0 until outDim).map { j =>
+      val w = typedLit((0 until Similarity.Dims)
+        .map(i => graft.functions.VecProject.sign(j, i)))
+      struct(lit(j).as("j"),
+        round(aggregate(zip_with(col("embedding").cast("array<double>"), w,
+          (v, s) => v * s), lit(0.0), (acc, v) => acc + v) * scale, 6).as("y"))
+    }
+    emb.select(col("vec_id"), explode(array(rows: _*)).as("r"))
+      .select(col("vec_id"), col("r.j").as("j"), col("r.y").as("y"))
+  }
 
   test("product quantization: codebook rows reconstruct exactly; errors bounded") {
     val out = Similarity.productQuantize(emb)
@@ -1016,7 +1035,7 @@ class LlmSpec extends SparkSpec {
 
   test("random projection: codegen'd expression matches the HOF spec form") {
     val native = Similarity.randomProject(emb, 16)
-    val spec = Similarity.randomProjectSpec(emb, 16)
+    val spec = randomProjectSpec(emb, 16)
     assert(native.count() == emb.count() * 16)
     assert(native.except(spec).count() == 0)
     assert(spec.except(native).count() == 0)

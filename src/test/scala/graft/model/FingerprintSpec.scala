@@ -1,5 +1,6 @@
 package graft.model
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -11,11 +12,15 @@ import graft.SparkSpec
   */
 class FingerprintSpec extends SparkSpec {
 
+  /** The composed form the native expression must equal. */
+  private def fingerprintOfSpec(labels: Column): Column =
+    xxhash64(to_json(map_from_entries(array_sort(map_entries(labels)))))
+
   test("native fingerprint equals the composed spec on real label maps") {
     val both = Tables.logs(spark, sf)
       .select(col("labels"))
       .select(Tables.fingerprintOf(col("labels")).as("n"),
-        Tables.fingerprintOfSpec(col("labels")).as("s"))
+        fingerprintOfSpec(col("labels")).as("s"))
       .filter(col("n") =!= col("s"))
     assert(both.count() == 0)
   }
@@ -33,7 +38,7 @@ class FingerprintSpec extends SparkSpec {
       Map.empty[String, String])
     val df = cases.toDF("labels")
     val diff = df.select(Tables.fingerprintOf(col("labels")).as("n"),
-        Tables.fingerprintOfSpec(col("labels")).as("s"))
+        fingerprintOfSpec(col("labels")).as("s"))
       .filter(col("n") =!= col("s"))
     assert(diff.count() == 0)
     // null map values (OTLP metric labels can carry them)
@@ -41,7 +46,7 @@ class FingerprintSpec extends SparkSpec {
       map_concat(col("labels"), map(lit("nullv"), lit(null).cast("string")))
         .as("labels"))
     val diff2 = withNull.select(Tables.fingerprintOf(col("labels")).as("n"),
-        Tables.fingerprintOfSpec(col("labels")).as("s"))
+        fingerprintOfSpec(col("labels")).as("s"))
       .filter(col("n") =!= col("s"))
     assert(diff2.count() == 0)
   }

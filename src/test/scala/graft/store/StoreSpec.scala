@@ -139,9 +139,62 @@ class StoreSpec extends SparkSpec with TempStores {
     try {
       assert(hasBroadcast(q)) // guard's hint broadcasts the small dict
       spark.conf.set("spark.graft.broadcast.maxDictRows", "0")
-      try assert(!hasBroadcast(q)) // huge dict: no hint → shuffle join
+      try assert(!hasBroadcast(q)) // huge dict: no hint → sort-merge join
       finally spark.conf.unset("spark.graft.broadcast.maxDictRows")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  // Fails when a query scan's single-partition decision counts leaves the
+  // scan cannot select (another tenant's, or days outside its window), or
+  // coalesces a selection above ClickHouse's 24 MiB concurrent-read
+  // minimum.
+  test("a query scan is one partition only when its tenant's in-window " +
+      "files sum to at most 24 MiB") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    import org.apache.spark.sql.types._
+    val mib = 1L << 20
+    val state = TableState(
+      StructType(Seq(StructField("value", LongType),
+        StructField("oid", StringType), StructField("date", DateType))),
+      Seq("oid", "date"),
+      Map("oid=0/date=2024-01-01/part-a.parquet" -> 6 * mib,
+        "oid=0/date=2024-01-01/part-b.parquet" -> 4 * mib,
+        "oid=0/date=2024-01-02/part-a.parquet" -> 20 * mib,
+        "oid=1/date=2024-01-01/part-a.parquet" -> 30 * mib))
+    val index = new ManifestFileIndex(spark,
+      new Path("file:/nonexistent/graft/synthetic"), state)
+    val (d1, d2) = (19723, 19724) // 2024-01-01, 2024-01-02
+    val df = Store.relation(spark, index)
+    def single(oid: Option[String], days: Option[(Int, Int)]): Boolean =
+      Store.sized(df, index, oid, days).queryExecution.optimizedPlan
+        .collectFirst { case r: Repartition => r.numPartitions == 1 && !r.shuffle }
+        .getOrElse(false)
+    val cases = Seq(
+      // (tenant, days, selected bytes, one partition)
+      (Some("0"), Some((d1, d1)), 10 * mib, true),  // below, in window
+      (Some("0"), Some((d2, d2)), 20 * mib, true),
+      (Some("0"), Some((d1, d2)), 30 * mib, false), // above
+      (Some("0"), None, 30 * mib, false),           // a dictionary-style scan
+      (Some("1"), Some((d2, d2)), 0L, true),        // no leaf in the window
+      (Some("2"), None, 0L, true),                  // a tenant with no leaf
+      (None, Some((d1, d1)), 40 * mib, false),      // every tenant's leaves
+      (Some("1"), Some((d1, d1)), 30 * mib, false))
+    for ((oid, days, bytes, one) <- cases) {
+      assert(index.selectedBytes(oid, days) == bytes, s"$oid $days")
+      assert(single(oid, days) == one, s"$oid $days")
+    }
+    // exactly at the constant is still one partition
+    val at = new ManifestFileIndex(spark, new Path("file:/nonexistent/t"),
+      state.copy(files = Map("oid=0/date=2024-01-01/p.parquet" -> 24 * mib)))
+    assert(Store.sized(df, at, Some("0"), None).queryExecution.optimizedPlan
+      .collectFirst { case r: Repartition => r.numPartitions }.contains(1))
+    // an unpartitioned table (a series dictionary) counts every file
+    val dict = new ManifestFileIndex(spark, new Path("file:/nonexistent/d"),
+      TableState(StructType(Seq(StructField("fingerprint", LongType),
+        StructField("oid", StringType))), Nil,
+        Map("part-0.parquet" -> 10 * mib, "part-1.parquet" -> 15 * mib)))
+    assert(dict.selectedBytes(Some("0"), None) == 25 * mib)
   }
 
   // Fails when the store read of a stage-bearing query (dictionary
